@@ -29,27 +29,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from braintumor_data_pipeline_spark import registry
+from braintumor_data_pipeline_spark.caching import release_tracked
+from braintumor_data_pipeline_spark.registry import HEADLINE
 from braintumor_data_pipeline_spark.session import get_spark
-
-# Headline set: one representative per operator family (SURVEY §2).
-HEADLINE = [
-    "flagship_avg_by_group",      # A13 group-avg + topk
-    "pricing_summary",            # scan-filter-agg (pushdown)
-    "star_join_revenue",          # 4-way star join
-    "top_revenue_orders",         # selective join + topk
-    "window_rank_orders",         # window functions
-    "rollup_lineitem",            # grouping sets
-    "histogram_totalprice",       # fixed-bin histogram
-    "minhash_dedup_groups",       # dedup: minhash signature groups (linear)
-    "ngram_jaccard_pairs",        # dedup: inverted-index jaccard
-    "knn_bruteforce_cosine",      # similarity top-k
-    "pixel_minmax_normalize",     # pixel-relation imaging
-    "mask_metrics",               # mask algebra
-    "region_grow_component",      # iterative applyInPandas BFS
-    "events_session_30m",         # session windows
-    "events_asof_last_view",      # as-of join
-]
-
 
 def _make_etl_inputs() -> str:
     """48 synthetic 64×64 DICOMs for the image-ETL throughput stage."""
@@ -76,14 +58,10 @@ def _run_suite(spark, sf_dir: str, etl_dir: str) -> dict[str, float]:
     """One full pass over the headline suite; per-query wall seconds."""
     from braintumor_data_pipeline_spark.plans.etl import process_dicom_files
 
-    from braintumor_data_pipeline_spark.operators.indexing import (
-        release_blocked_caches,
-    )
-
     specs = registry.all_queries()
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        release_blocked_caches()  # prior query's helper caches
+        release_tracked()  # prior query's helper caches
         fn = specs[name].fn
         t0 = time.time()
         df = fn(spark, sf_dir)

@@ -4,12 +4,12 @@ Query builders persist small aggregated frames that feed multiple plan
 branches (the diamond rule: uncached, Catalyst rebuilds the subplan per
 branch). A builder cannot know when its RETURNED lazy frame has been
 fully consumed, so cache lifecycle belongs to whoever drives a batch of
-queries: long-lived sessions (the oracle gate, bench, plan audit) call
-:func:`release_tracked` between queries; one-query sessions can ignore
-it (ContextCleaner reclaims on reference drop). Before r13 only
-indexing's blocked_* helpers were tracked; the diamond persists added
-in r12 (text, sketch, experiments, graph, similarity, ...) relied on GC
-and accumulated across a 401-query gate session (ADVICE r12).
+queries. A persisted frame stays registered in Spark's CacheManager
+until it is unpersisted or the session stops; dropping the Python
+reference does NOT free it. So every caller that runs more than one
+query in a session (the oracle gate, bench, plan audit, microbench)
+must call :func:`release_tracked` between queries, or the caches of
+every query it ran accumulate for the session's lifetime.
 
 Usage inside a query builder — a drop-in for ``.persist()`` in a method
 chain::

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import persist_tracked, release_tracked
+from ..caching import persist_tracked
 from ..registry import register
 from ..sources.fixtures import load_table as _t
 
@@ -88,31 +88,6 @@ def global_dense_ids_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: lookup below).
 RANGE_BLOCKS = 1024
 _COARSE = 32  # sqrt(RANGE_BLOCKS): boundary lookup = 2×31 comparisons
-
-#: Inputs persisted by the blocked_* helpers, awaiting release. The
-#: helpers MUST cache their input (diamond rule: the frame feeds both
-#: the boundary-quantile agg and the blocked main pass; uncached,
-#: chained calls re-evaluate upstream 2^depth times — 603 s vs 10 s
-#: measured). But a helper cannot know when its RETURNED lazy frame is
-#: consumed, so lifecycle belongs to the driver of the query batch:
-#: long-lived sessions that run many queries (the oracle gate, bench,
-#: plan audit) call :func:`release_blocked_caches` between queries;
-#: one-query sessions can ignore it (ContextCleaner reclaims on ref
-#: drop). Without the hook, 366-gate runs accumulate cached blocks
-#: until GC-driven reclamation — nondeterministic storage pressure
-#: (ADVICE r7). Since r13 the registry itself lives in
-#: braintumor_data_pipeline_spark.caching and tracks EVERY module's
-#: diamond persists; this public name is kept because bench.py and the
-#: gate tools call it between queries.
-
-
-def release_blocked_caches() -> int:
-    """Unpersist every frame any query builder persist-tracked since
-    the last call (see :mod:`..caching`); returns how many were
-    released. Safe to call once the frames returned by the builders
-    have been fully consumed (e.g. between queries in a gate sweep) —
-    unpersisting is correctness-neutral, it only forfeits reuse."""
-    return release_tracked()
 
 
 def _persist_tracked(df: DataFrame) -> DataFrame:
@@ -272,7 +247,7 @@ def blocked_rank(df: DataFrame, key_col: str, tiebreak_col: str) -> DataFrame:
     For DESC order pass a negated key column. This is the scale-safe
     replacement for ``ntile/row_number OVER (ORDER BY …)`` on
     data-grain frames (VERDICT r5 task 1)."""
-    # PERSIST the input (tracked — see release_blocked_caches): the
+    # PERSIST the input (tracked — see caching.release_tracked): the
     # helper evaluates df twice (the boundary-quantile agg, then the
     # blocked main pass), and the blocked frame twice more (per-block
     # counts, final join) — without a cache, CHAINED helper calls
@@ -304,7 +279,7 @@ def blocked_cumsum(
     :func:`blocked_rank`: per-block partial sums (≤RANGE_BLOCKS rows)
     prefix-summed globally, plus a parallel within-block running sum.
     ``inclusive=False`` gives the ROWS … AND 1 PRECEDING frame."""
-    # PERSIST the input (tracked — see release_blocked_caches): the
+    # PERSIST the input (tracked — see caching.release_tracked): the
     # helper evaluates df twice (the boundary-quantile agg, then the
     # blocked main pass), and the blocked frame twice more (per-block
     # counts, final join) — without a cache, CHAINED helper calls
@@ -344,7 +319,7 @@ def blocked_cummax(
     frame, plus a parallel within-block running max.
     ``inclusive=False`` gives the strict ROWS … AND 1 PRECEDING frame
     (NULL when nothing precedes — matching the SQL window's NULL)."""
-    # PERSIST the input (tracked — see release_blocked_caches): the
+    # PERSIST the input (tracked — see caching.release_tracked): the
     # helper evaluates df twice (the boundary-quantile agg, then the
     # blocked main pass), and the blocked frame twice more (per-block
     # counts, final join) — without a cache, CHAINED helper calls

@@ -332,8 +332,10 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda p: p["term"].isin(*_BM25_TERMS),
         ).alias("tfs"),
     )
+    # count(doc_len), not count(*): a null text has a null doc_len and
+    # no tokens, so like the oracle's unnest it is not a document here
     stats = base.agg(
-        F.avg("doc_len").alias("avgdl"), F.count("*").alias("n_docs")
+        F.avg("doc_len").alias("avgdl"), F.count("doc_len").alias("n_docs")
     )
     tf = base.select(
         "doc_id", "doc_len", F.explode("tfs").alias("p")

@@ -16,8 +16,17 @@ value-hash, so:
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import inspect
+import io
+import json
+import os
+import textwrap
+import tokenize
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from types import CodeType
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -40,573 +49,147 @@ class QuerySpec:
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
-#: The driver hash-checks only the FIRST 50 entries of ``queries()``
-#: (registration order). This explicit window samples every operator
-#: family of SURVEY §2.4-§2.11 plus the LLM-pipeline families and is
-#: oracle-backed throughout (rows-only queries carry no hash signal and
-#: are ordered last). Slots ROTATE round-over-round: a query green in
-#: the driver's check vacates its slot for a never-driver-checked
-#: oracle-backed query, amortizing hash coverage across the catalog.
-#: Two invariants constrain every rotation: every bench HEADLINE query
-#: stays in-window so the perf and correctness gates cover the same
-#: surface, and queries whose formulation changed this round stay
-#: in-window so the new formulation gets driver confirmation; plus the
-#: test_queries_smoke invariant that every module with a recomputing
-#: oracle holds a slot within the ROLLING_COVERAGE_ROUNDS horizon
-#: (current window or the two most recent driver rounds — amended from
-#: per-round to rolling-3 in r11 per VERDICT r10 task 1).
-#:
-#: Rotation log —
-#: r3 (all green in CORRECTNESS_r03): rotated out setop_intersect,
-#: proj_* scalars, agg_statistics, group_stats_pop (twice-green),
-#: argmax/json_extract/pivot/knn_within_label, pixel_windowing,
-#: region_grow_capped, q3/q12, train_test_split, corpus_prep,
-#: scd2_user_type_history, imaging_udf_confusion/stats,
-#: rolling_7d_revenue, lang_id_heuristic, token_stats,
-#: dedup_exact_groups, mask_confusion, events_tumbling_5m,
-#: null_semantics_groups, latest_events, event_transition_matrix —
-#: each with in-window family coverage remaining or a strict-subplan
-#: transitivity argument (see git history for the full r3 notes).
-#:
-#: r4 rotation: ten green, formulation-unchanged, non-headline slots
-#: vacate for ten never-driver-checked recomputing-oracle queries
-#: (VERDICT r3 task 1) — out: bm25_search_topk (twice-green; text keeps
-#: winnowing_fingerprints), lateral_top2_orders_per_customer
-#: (relational keeps 7 entries), token_entropy_quality (experiments
-#: gains kaplan_meier + variant_props), filter_cascade_report
-#: (llm_pipeline gains weighted_sample + decontamination + line_dedup),
-#: merge_upsert_orders (cdc gains scd2_point_in_time_enrich),
-#: date_spine_daily_revenue + ohlc_hourly_downsample (timeseries keeps
-#: cohort_weekly_retention, gains cusum_changepoint_daily),
-#: q6_forecast_revenue (tpch_shapes keeps q21), simhash_hamming_pairs +
-#: shingle_containment_pairs (dedup keeps minhash/ngram/incremental) —
-#: in: scd2_point_in_time_enrich, cusum_changepoint_daily,
-#: kaplan_meier_user_lifetime, variant_props_analytics, triangle_stats,
-#: hybrid_rrf_fusion_topk, embedding_int8_quantize, weighted_sample_wor,
-#: decontamination_scan, line_dedup_documents.
-#: r4 second rotation (VERDICT r3 task 5): bfs_levels_from_min_vertex
-#: (graph keeps pagerank + triangle) and incremental_dedup_new_batch
-#: (dedup keeps minhash + ngram) vacate for the partition-pruning pair
-#: events_partition_pruned_daily + dpp_star_join_weekend (first-time
-#: queries — static PartitionFilters and dynamic partition pruning,
-#: the two 100 TB scan-elimination levers, now hash-checked).
-#: r4 third rotation (VERDICT r3 task 2): ssim_window_map (once-green
-#: r3, formulation unchanged) vacates for butterworth_band_energy — the
-#: frozen-golden butterworth_stats upgraded to a recomputing
-#: integer-DFT oracle; imaging_udf family coverage stays (this IS the
-#: imaging_udf module, and its companion edge_spectrum_agreement — the
-#: image_pair_metrics upgrade — sits first in the post-window order).
-#: r4 fifth rotation (new-family evidence): four r3-green,
-#: formulation-unchanged, non-headline slots vacate for four of this
-#: round's new operators, each swap inside the SAME module so the
-#: smoke family-coverage invariant holds by construction —
-#: geomean_grouped_agg_udf → pareto_frontier_orders (analytics),
-#: pagerank_fixed_point → ndcg_label_relevance (graph keeps
-#: triangle_stats; ndcg rides similarity, already covered),
-#: schema_evolution_scan → repeated_span_detection (maintenance keeps
-#: the partition-pruning pair; repeated_span rides llm_pipeline),
-#: multimodal_audio_features → video_shot_boundaries (multimodal,
-#: the PNG-lossless recomputing video tier).
-#: r4 seventh rotation (late additions): the only two remaining
-#: r3-green, formulation-unchanged, non-headline slots in multi-rep
-#: families vacate for two of this session's new operators —
-#: region_grow_adaptive → zone_map_skipping_report (segmentation keeps
-#: the headline region_grow_component; maintenance gains the min/max
-#: file-skipping lever), hll_mergeable_groups →
-#: harmonic_centrality_seeds (sketch keeps bloom_semijoin_reduction;
-#: graph gains the multi-source BFS centrality). The session's other
-#: two new queries (retrieval_map_mrr_by_label, mcc_operating_points)
-#: wait for r5 rotation — their families already hold first-time
-#: in-window reps this round.
-#: r5 rotation (VERDICT r4 task 2): eleven r4-green (CORRECTNESS_r04
-#: all-green), formulation-unchanged, non-headline slots vacate for
-#: eleven never-driver-checked recomputing queries. Three of the
-#: incoming ELEVEN changed formulation this round and so REQUIRE window
-#: slots per the changed-formulation invariant: retrieval_map_mrr_by_label
-#: + mcc_operating_points (ADVICE r4 zero-guard / overflow-guard fixes)
-#: and interval_union_coverage (ADVICE r4 span_id window re-ordered to
-#: (s, event_id)). Out → in, module coverage preserved at every swap:
-#: kaplan_meier_user_lifetime → mcc_operating_points (experiments),
-#: variant_props_analytics → isotonic_calibration_pav (experiments),
-#: hybrid_rrf_fusion_topk → retrieval_map_mrr_by_label (similarity),
-#: embedding_int8_quantize → spearman_rho_qty_price (experiments;
-#: similarity keeps ndcg + retrieval_map + headline knn),
-#: harmonic_centrality_seeds → rich_club_coefficient (graph keeps
-#: triangle_stats), winnowing_fingerprints → vocab_coverage_curve
-#: (text), weighted_sample_wor → rendezvous_shard_assignment
-#: (llm_pipeline keeps repeated_span_detection), decontamination_scan →
-#: conformal_interval_coverage (experiments), line_dedup_documents →
-#: classifier_auc_exact (experiments; llm_pipeline keeps
-#: repeated_span + rendezvous), events_partition_pruned_daily →
-#: markov_next_event_accuracy (experiments; maintenance keeps
-#: zone_map_skipping_report + dpp_star_join_weekend — DPP, the dynamic
-#: pruning lever, stays), zone_map_skipping_report →
-#: interval_union_coverage (intervals gains its 2nd rep; maintenance
-#: keeps dpp_star_join_weekend).
-#: r5 second rotation: the sf0.1 full-catalog sweep exposed a real
-#: skew serialization in lsh_pairs_edit_verified (hot band key put all
-#: 9.5M clique pairs in ONE levenshtein task); the fix adds a uniform
-#: (doc_a, doc_b) repartition before the verify stage — a formulation
-#: change, so the query enters the window per the invariant.
-#: interval_overlap_attribution (r4-green, formulation unchanged)
-#: vacates; intervals keeps interval_union_coverage, dedup gains a
-#: 3rd rep.
-#: r5 third rotation: the sf0.1 full-catalog sweep caught
-#: linear_quality_classifier_scores on an exact .5 rounding tie at the
-#: 6th decimal (-406/6400) where double round() tie-handling diverges
-#: across engines; the fix moves the rounding into exact BIGINT space
-#: (half away from zero) on BOTH sides — a formulation change, so it
-#: enters the window. repeated_span_detection (r4-green, formulation
-#: unchanged) vacates; llm_pipeline keeps rendezvous_shard_assignment
-#: plus the entering query.
-#: r5 fourth rotation (coverage amortization): six more r4-confirmed,
-#: formulation-unchanged, non-headline slots vacate for never-checked
-#: queries, every swap inside the SAME module so family coverage holds
-#: by construction — q21_sole_returning_supplier →
-#: q9_product_type_profit (tpch_shapes), butterworth_band_energy →
-#: edge_spectrum_agreement (imaging_udf — the X15 exact spectral
-#: companion gets its first slot), bpe_learn_merges → bpe_encode_stats
-#: (bpe), scd2_point_in_time_enrich → state_snapshot_diff (cdc — the
-#: new r5 rebuild audit), triangle_stats → copurchase_pagerank_top20
-#: (graph — the new non-degenerate-graph iterative op),
-#: cusum_changepoint_daily → user_activity_streaks (timeseries).
-#: All six incoming are sf0.01-gate green, sf0.1 cross-engine green,
-#: and in the 342/342 determinism certificate.
-#: r6 rotation (VERDICT r5 tasks 1, 3): eighteen r5-green,
-#: formulation-unchanged, non-headline slots vacate. Seven of the
-#: incoming REQUIRE slots under the changed-formulation invariant —
-#: the r6 user-grain global-window conversions to the blocked
-#: two-level helpers (indexing.blocked_rank/_cumsum/_cummax):
-#: rfm_segments, decile_lift_table, time_to_conversion_stats,
-#: gini_revenue_concentration, top_orders_with_ties,
-#: hybrid_rrf_fusion_topk, embedding_norm_outliers (plus
-#: pareto_frontier_orders and classifier_auc_exact, also converted,
-#: which already hold slots and stay). The rest are never-checked
-#: queries prioritized from the r5 judge's locally-verified list,
-#: plus the new graph_twins module's first rep. Out → in, module
-#: coverage preserved at every swap:
-#: user_activity_streaks → funnel_view_click_purchase (timeseries),
-#: mcc_operating_points → rfm_segments (experiments),
-#: isotonic_calibration_pav → decile_lift_table (experiments),
-#: spearman_rho_qty_price → time_to_conversion_stats (experiments),
-#: markov_next_event_accuracy → top_orders_with_ties (experiments),
-#: conformal_interval_coverage → gini_revenue_concentration
-#: (analytics gains a 2nd rep; experiments keeps classifier_auc +
-#: four incoming), ndcg_label_relevance → hybrid_rrf_fusion_topk
-#: (similarity), retrieval_map_mrr_by_label → embedding_norm_outliers
-#: (similarity keeps headline knn), copurchase_pagerank_top20 →
-#: copurchase_triangle_stats (graph), rich_club_coefficient →
-#: copurchase_components (graph_twins — the new module's smoke slot),
-#: bloom_semijoin_reduction → hll_set_intersection_estimate (sketch),
-#: phash_hamming_pairs → phash_signatures (phash),
-#: jsonl_roundtrip_stats → jsonl_corrupt_records_audit (jsonl),
-#: salted_heavy_key_agg → salted_join_heavy_key (skew),
-#: dedup_connected_components → component_modularity (components),
-#: lsh_pairs_edit_verified → pixel_histogram (pixels gains a 2nd rep;
-#: dedup keeps headline minhash + ngram),
-#: linear_quality_classifier_scores → k_anonymity_report
-#: (llm_pipeline), rendezvous_shard_assignment →
-#: region_grow_capped_morph (segmentation gains a 2nd rep;
-#: llm_pipeline keeps the incoming k_anonymity_report).
-#: r7 rotation (VERDICT r6 tasks 1, 3): seventeen r6-green,
-#: formulation-unchanged, non-headline slots vacate. semdedup_prune_report
-#: REQUIRES a slot under the changed-formulation invariant (r7: corpus-
-#: scaled K, two-level routing, hard cluster cap); the nine r6 blocked-
-#: helper conversions (rfm_segments, decile_lift_table,
-#: time_to_conversion_stats, top_orders_with_ties, hybrid_rrf_fusion_topk,
-#: embedding_norm_outliers, gini_revenue_concentration,
-#: classifier_auc_exact, pareto_frontier_orders) changed formulation AGAIN
-#: this round (count-balanced approx_percentile boundaries + local
-#: interval tables + input persist; hybrid_rrf also pins its full-outer
-#: fusion to SMJ) and therefore STAY in-window. The other sixteen
-#: incoming are never-driver-checked recomputing queries, prioritized
-#: from the r6 judge's locally-verified list where module coverage
-#: allows. Out -> in, module coverage preserved at every swap:
-#: pixel_histogram -> semdedup_prune_report (pixels keeps headline
-#: pixel_minmax_normalize; similarity gains the changed formulation),
-#: copurchase_components -> copurchase_bfs_levels (graph_twins),
-#: region_grow_capped_morph -> region_grow_adaptive_first8 (segmentation),
-#: k_anonymity_report -> temperature_mix_allocation (llm_pipeline),
-#: q9_product_type_profit -> q15_top_supplier (tpch_shapes),
-#: state_snapshot_diff -> incremental_agg_merge (cdc),
-#: funnel_view_click_purchase -> rolling_active_users (timeseries),
-#: vocab_coverage_curve -> arrow_token_stats (text — the mapInArrow tier),
-#: edge_spectrum_agreement -> mask_regionprops_exact (imaging_udf),
-#: hll_set_intersection_estimate -> hll_register_sketch (sketch),
-#: salted_join_heavy_key -> skew_diagnosis_join_keys (skew),
-#: rcte_clamped_balance -> holt_linear_forecast (recursive),
-#: synthetic_lineitem_pricing -> synthetic_star_join_agg (generator),
-#: video_shot_boundaries -> multimodal_image_features (multimodal),
-#: dpp_star_join_weekend -> partition_fingerprints_daily (maintenance —
-#: DPP thrice-green r4/r5/r6, rotation principle applies),
-#: jsonl_corrupt_records_audit -> textdir_corpus_stats (jsonl),
-#: copurchase_triangle_stats -> kcore_peeling (graph).
+#: The driver hash-checks only the first DRIVER_WINDOW entries of
+#: ``queries()``; :func:`driver_window` chooses them.
 DRIVER_WINDOW = 50
-#: r8 rotation (VERDICT r7 task 1 + new-query invariant): 24 first-time
-#: slots — the largest rotation yet, prioritizing never-driver-checked
-#: queries everywhere a family slot allows. The five r7-new LLM
-#: operators enter (dsir_importance_weights, quality_keep_dedup_groups,
-#: padding_waste_curve, kcenter_coreset_select,
-#: memorization_window_fraction — driver hashes are the one evidence
-#: class the builder cannot self-generate); kcenter ALSO satisfies the
-#: changed-formulation invariant (r8 persist-chain rewrite). The two
-#: r8-new queries enter (minhash_lsh_pairs_capped,
-#: memorization_max_run_length). The r7 judge's named never-checked
-#: picks enter: ann_lsh_cosine, ann_ivf_cosine, cuped_adjusted_uplift,
-#: embedding_pca_covariance, copurchase_kcore, dummy_gt_dice.
-#: Family slots flip to NEVER-CHECKED members wherever one exists:
-#: incremental_agg_merge -> log_compaction_tombstones (cdc),
-#: rolling_active_users -> twap_daily_value (timeseries),
-#: q15_top_supplier -> q18_large_order_customers (tpch_shapes),
-#: mask_regionprops_exact -> dummy_gt_dice (imaging_udf),
-#: arrow_token_stats -> text_quality_score (text),
-#: temperature_mix_allocation -> dsir_importance_weights (llm),
-#: kcore_peeling -> local_clustering_coefficient (graph),
-#: copurchase_bfs_levels -> copurchase_kcore (graph_twins),
-#: synthetic_star_join_agg -> synthetic_skew_stress_agg (generator),
-#: bucketed_star_join -> bucketed_group_agg (bucketed),
-#: multimodal_image_features -> multimodal_audio_spectral_bands,
-#: holt_linear_forecast -> rcte_hierarchy_rollup (recursive),
-#: partition_fingerprints_daily -> zorder_morton_codes (maintenance),
-#: gini_revenue_concentration -> grouped_exact_median (analytics).
-#: Mid-r8 amendment: the multimodal first-time slot flips from
-#: multimodal_audio_spectral_bands to multimodal_video_frame_sample —
-#: the fixed-point integer DCT rewrite (sources/jpeg.py, cross-box BLAS
-#: determinism incident) re-pinned the video golden, and the
-#: changed-formulation invariant outranks the original pick. Both were
-#: never-driver-checked, so the first-time count is unchanged. The text
-#: slot likewise flips to the r8-new gopher_quality_gates. The other
-#: late-r8 additions (gopher_repetition_filters, kmeans_lloyd_replay,
-#: l_diversity_report, knn_shapley_data_values, assoc_rules_lift, and
-#: the end-of-round batch: anova_f_event_value, sprt_purchase_rate,
-#: simpsons_paradox_screen, label_propagation_communities,
-#: dp_laplace_noisy_counts, rake_keyword_scores,
-#: tukey_pairwise_contrasts, quantile_normalize_event_values,
-#: cdc_chunk_dedup, kendall_tau_daily, bitmap_activity_index,
-#: dbscan_lsh_clusters, power_iteration_top_eigen) defer to r9 —
-#: r9 rotation shortlist, headed by the displaced
-#: embedding_pca_covariance — alongside
-#: audio_spectral_bands and text_quality_score: every multi-rep module
-#: slot is VERDICT-mandated (the five r7-new LLM operators, the capped
-#: LSH pair query, the judge's named similarity picks) or a locked
-#: bench headliner, and new-query entry is a priority rule — only
-#: CHANGED formulations require same-round re-entry.
-#: The nine r6/r7 blocked-helper callers (rfm_segments,
-#: decile_lift_table, time_to_conversion_stats, top_orders_with_ties,
-#: hybrid_rrf_fusion_topk, embedding_norm_outliers,
-#: gini_revenue_concentration, classifier_auc_exact,
-#: pareto_frontier_orders) rotate OUT: r8's only indexing.py edit is
-#: persist-LIFECYCLE tracking (_persist_tracked registers the same
-#: persist() call for later release_blocked_caches()); the logical and
-#: physical plans are bit-identical, so the changed-formulation
-#: invariant does not trigger — all nine are r7-hash-green with
-#: unchanged formulations, the textbook rotation candidates.
-#: semdedup_prune_report (r7-green, formulation unchanged) and
-#: region_grow_adaptive_first8 (segmentation keeps its headline rep)
-#: also vacate. Module coverage holds at every swap (the smoke test
-#: asserts it); bench HEADLINE all stay.
-DRIVER_WINDOW = 50
-#: r9 rotation (VERDICT r8 tasks 1-2: evidence amortization; rotate the
-#: named shortlist, pause widening). Slot arithmetic first, because it
-#: bounds what ANY r9 window can achieve: 15 bench-HEADLINE slots are
-#: locked (perf and correctness gates must cover the same surface), and
-#: 27 non-headline module families each require one representative
-#: (the coverage invariant below) — 14 of those families have NO
-#: never-driver-checked member left (bpe, sketch, xml_io, phash, jsonl,
-#: intervals, skew, components, orc_io, csv_io, indexing, cdc,
-#: bucketed, recursive), so their keeps cannot become first-time rows.
-#: Maximum first-time slots this round = 13 family flips + 8 free
-#: slots = 21. The verdict's "never-checked < 165" target needs 24;
-#: 21 is the structural ceiling, so r9 lands 188 → 167-168 and the
-#: remainder amortizes in r10 (widening stays paused: ONE new operator
-#: this round, verdict item 7's named candidate, vs r8's +33).
-#: All 21 r8-green non-headline first-timers of the r8 window vacate
-#: (formulation unchanged — the ADVICE div/guard fixes touch only
-#: cdc_chunk_dedup and knn_shapley_data_values, which are INCOMING).
-#: Family flips to never-checked members:
-#: q18_large_order_customers -> q5_local_supplier_volume (tpch_shapes),
-#: grouped_exact_median -> bitmap_activity_index (analytics, shortlist),
-#: dummy_gt_dice -> imaging_udf_augment (imaging_udf),
-#: cuped_adjusted_uplift -> anova_f_event_value (experiments, shortlist),
-#: gopher_quality_gates -> text_quality_score (text, shortlist),
-#: dsir_importance_weights -> dp_laplace_noisy_counts (llm, shortlist),
-#: local_clustering_coefficient -> hits_hubs_authorities (graph),
-#: copurchase_kcore -> label_propagation_communities (graph_twins,
-#: shortlist), synthetic_skew_stress_agg -> synthetic_session_windows
-#: (generator), multimodal_video_frame_sample ->
-#: multimodal_audio_spectral_bands (multimodal, shortlist),
-#: zorder_morton_codes -> partition_freshness_skew_report (maintenance),
-#: twap_daily_value -> kendall_tau_daily (timeseries, shortlist),
-#: frequent_triples_apriori -> assoc_rules_lift (basket).
-#: Free slots (8): embedding_pca_covariance (verdict: goes FIRST —
-#: twice-displaced), cdc_chunk_dedup + knn_shapley_data_values (ADVICE
-#: fixes = changed formulations, entry REQUIRED by the invariant),
-#: dbscan_lsh_clusters, power_iteration_top_eigen, kmeans_lloyd_replay,
-#: l_diversity_report (the judge's "resting on judge runs alone"
-#: heavies), rake_keyword_scores. Of the verdict's 20 named shortlist
-#: entries, 16 enter; sprt_purchase_rate, simpsons_paradox_screen,
-#: tukey_pairwise_contrasts, quantile_normalize_event_values,
-#: gopher_repetition_filters defer to r10 under the slot ceiling —
-#: chosen as the deferrals because experiments (anova enters) and text
-#: (text_quality_score + rake enter) both still gain a first-time
-#: representative this round, while similarity/llm had entire r8
-#: batches with zero driver evidence.
-#: Mid-r9 amendment (new-query invariant): verdict item 7's named
-#: candidate landed — minhash_store_probe_dedup (cross-run bucketed
-#: MinHash signature store, capped probe, sf0.001/0.01/0.1 green,
-#: plan-audited, exchange-free store side asserted in
-#: tests/test_store_dedup.py). New-query entry outranks a never-
-#: checked shortlist pick, so rake_keyword_scores joins the r10
-#: deferrals (now 6 named). Both are never-driver-checked; the
-#: first-time count stays 21. This is r9's ONLY registry widening
-#: (+1 vs r8's +33, per the verdict's pause directive).
-DRIVER_WINDOW = 50
-#: r10 rotation (VERDICT r9 tasks 1, 2, 4, 6). Slot arithmetic: 15
-#: bench-HEADLINE locked + 27 non-headline family reps + 8 free. After
-#: the r9 driver run only EIGHT non-headline families still hold a
-#: never-driver-checked member (analytics, experiments, graph,
-#: graph_twins, llm_pipeline, text, timeseries, tpch_shapes) — the
-#: structural first-time ceiling this round is 8 flips + 8 free = 16,
-#: and three of the free slots are verdict-ORDERED non-first-time
-#: entries: embedding_pca_covariance (task 1 — changed formulation, the
-#: decimal→digit-string output fix, re-entry REQUIRED) and the ledger's
-#: only two permanently-red r1-era rows approx_distinct_parts +
-#: json_props_explode (task 6 — judge-green today; driver hashes close
-#: out every red in the ledger's history). First-time count lands 13.
-#: All 21 r9-green non-headline first-timers vacate (formulations
-#: unchanged). The six named deferrals enter FIRST (task 2):
-#: sprt_purchase_rate takes the experiments family slot,
-#: rake_keyword_scores the text slot; simpsons_paradox_screen,
-#: tukey_pairwise_contrasts, quantile_normalize_event_values,
-#: gopher_repetition_filters take free slots. The one r10 widening is
-#: verdict task 4's named capability gap: minhash_store_lifecycle_dedup
-#: (the signature store's init→append→count-merge→tombstone→probe daily
-#: loop with a two-epoch recomputing oracle) — new-query invariant ⇒
-#: window entry. Family flips to never-checked members:
-#: anova_f_event_value -> sprt_purchase_rate (experiments, deferral),
-#: text_quality_score -> rake_keyword_scores (text, deferral),
-#: bitmap_activity_index -> equidepth_histogram_totalprice (analytics),
-#: hits_hubs_authorities -> sssp_weighted_bellman (graph),
-#: label_propagation_communities -> copurchase_modularity (graph_twins),
-#: dp_laplace_noisy_counts -> pii_mask_documents (llm_pipeline),
-#: kendall_tau_daily -> event_value_anomalies_mad (timeseries),
-#: q5_local_supplier_volume -> q2_min_price_per_part (tpch_shapes).
-#: Five r9 flip slots become KEEPS (their families ran dry of
-#: never-checked members): imaging_udf_augment, assoc_rules_lift,
-#: synthetic_session_windows, multimodal_audio_spectral_bands,
-#: partition_freshness_skew_report.
-DRIVER_WINDOW = 50
-#: r11 rotation (VERDICT r10 tasks 1-3). POLICY AMENDMENT (task 1): the
-#: module-coverage invariant is now ROLLING-3-ROUND — every module with
-#: a recomputing oracle must hold a window slot in the CURRENT window OR
-#: one of the TWO most recent driver-checked rounds (read from the
-#: committed CORRECTNESS_r*.json artifacts via
-#: :func:`recent_checked_names`), not in every round. The 15 bench
-#: HEADLINE slots stay locked unconditionally (perf and correctness
-#: gates must keep covering the same surface). Why: after r10's
-#: all-green window the per-round invariant locked 27 already-green
-#: family reps into every 50-slot window while 156 queries had NEVER
-#: held a slot — the invariant, not the engine, had become the
-#: amortization bottleneck (a ~10-round tail). Rolling-3 keeps every
-#: family within 2 rounds of its last driver hash while raising the
-#: first-time ceiling from ~16 to 34.
-#: Slot arithmetic under the new policy: r9+r10 checked sets cover
-#: EVERY recomputing-oracle family (verified by the amended smoke
-#: test), so ZERO family keeps are required this round: 15 headliners
-#: + 1 changed-formulation re-entry + 34 FIRST-TIME slots.
-#: Re-entry REQUIRED (changed formulation, task 3):
-#: minhash_store_lifecycle_dedup now runs store_lifecycle_compact + a
-#: store_layout_stats one-file-per-bucket assertion between the append
-#: and the probe — rows bit-identical ⇒ same two-epoch oracle, and the
-#: compaction path (raw-path read, aligning repartition, swap, REFRESH)
-#: gets driver-hash evidence on every future check.
-#: All 34 r10-green non-headline, non-re-entry slots vacate
-#: (formulations unchanged — the r11 layout-marker versioning touches
-#: publication plumbing only; plans and outputs are bit-identical).
-#: First-time picks, biggest-pile-first per task 2 (never-checked after
-#: r10: experiments 55, text 13, llm_pipeline 13, similarity 11, dedup
-#: 10, tpch_shapes 10): experiments takes 14 slots (the five
-#: verdict-named first), text 5, llm_pipeline 5, similarity 4 (all four
-#: verdict-named), dedup 3, tpch_shapes 3 — never-checked drops
-#: 156 → 122 when green.
-#:
-#: --- r12 rotation (VERDICT r11 tasks 2/3/6, ADVICE r11) ---
-#: Horizon at design time is (r10, r11) — anchored to the committed
-#: WINDOW_LEDGER.json per the ADVICE r11 fix, so the driver's
-#: mid-round CORRECTNESS_r12.json can no longer advance it under the
-#: smoke gate — and r10+r11 greens cover every recomputing-oracle
-#: family: ZERO family keeps, exactly as the verdict computed.
-#: Window = 15 locked headliners + 1 re-entry + 34 FIRST-TIME.
-#: Re-entry REQUIRED (mechanical rule, task 6): ADVICE r11 changed
-#: minhash_store_lifecycle_dedup's in-query post-compaction assert
-#: (== STORE_N_BUCKETS files → 0 < n ≤ STORE_N_BUCKETS: empty hash
-#: buckets emit no file) and store_lifecycle_compact gained crash
-#: recovery — rows and oracle unchanged, but the registered fn's body
-#: changed, so it re-enters the window.
-#: First-time picks per task 2, dual-purpose: prefer never-checked
-#: members from families last green in r10, which ALSO pre-satisfies
-#: the r13 horizon (r11 ∪ r12) for every family that still has
-#: never-checked members. analytics takes all 9, events all 7,
-#: graph_twins all 6, timeseries all 5, masks all 3, graph both 2,
-#: app_flow 1, segmentation 1 = 34 — eight families drain to ZERO
-#: never-checked; never-checked drops 122 → 88 when green. (The 19
-#: fully-confirmed families whose last green is r10 — bpe/sketch/
-#: xml_io/phash/jsonl/orc/csv/intervals/indexing/imaging_udf/
-#: multimodal/basket/bucketed/cdc/components/generator/maintenance/
-#: recursive/skew — stay covered by the r10 artifact this round and
-#: fall due as family keeps at r13 design time, a planned once-per-3-
-#: rounds pulse, not a gate surprise.)
-PRIORITY: tuple[str, ...] = (
-    # bench HEADLINE (perf and correctness gates cover the same
-    # surface — all 15 locked)
-    "flagship_avg_by_group",
-    "pricing_summary",
-    "star_join_revenue",
-    "top_revenue_orders",
-    "window_rank_orders",
-    "rollup_lineitem",
-    "histogram_totalprice",
-    "minhash_dedup_groups",
-    "ngram_jaccard_pairs",
-    "knn_bruteforce_cosine",
-    "pixel_minmax_normalize",
-    "mask_metrics",
-    "region_grow_component",
-    "events_session_30m",
-    "events_asof_last_view",
-    # changed-formulation re-entry (ADVICE r11: assert relaxation +
-    # compact crash recovery)
-    "minhash_store_lifecycle_dedup",
-    # first-time: analytics (9 — family drains to zero)
-    "try_arithmetic_scalars",
-    "full_outer_customer_activity",
-    "map_functions_surface",
-    "event_type_affinity",
-    "benford_first_digit_orders",
-    "mode_event_type_per_user",
-    "interpolated_quartiles_by_group",
-    "stickiness_dau_mau",
-    "decision_stump_gini",
-    # first-time: events (7 — family drains to zero)
-    "events_sliding_10m_5m",
-    "events_dedup_keyed",
-    "events_rate_per_minute",
-    "events_view_purchase_within_30m",
-    "events_tumbling_distinct_users",
-    "watermark_sizing_report",
-    "events_session_capped",
-    # first-time: graph_twins (6 — family drains to zero)
-    "copurchase_sssp_bellman",
-    "copurchase_link_prediction",
-    "copurchase_local_clustering",
-    "copurchase_harmonic_centrality",
-    "copurchase_assortativity",
-    "copurchase_rich_club",
-    # first-time: timeseries (5 — family drains to zero)
-    "recency_weighted_user_value",
-    "theil_sen_daily_trend",
-    "mann_kendall_trend",
-    "fano_overdispersion",
-    "page_hinkley_drift",
-    # first-time: masks (3 — family drains to zero)
-    "mask_region_means",
-    "tumor_probability",
-    "mask_moments_ellipse",
-    # first-time: graph (2 — family drains to zero)
-    "link_prediction_common_neighbors",
-    "degree_assortativity",
-    # first-time: app_flow (1 — family drains to zero)
-    "app_analysis_chain",
-    # first-time: segmentation (1 — family drains to zero)
-    "region_grow_faithful",
-)
 
-#: Rolling module-coverage horizon (r11 policy, VERDICT r10 task 1):
-#: current window + this many minus one most recent driver rounds.
+#: Rolling family-coverage horizon: every module with a recomputing
+#: oracle holds a window slot or was driver-confirmed in one of the
+#: ledger's newest ``ROLLING_COVERAGE_ROUNDS - 1`` rounds.
 ROLLING_COVERAGE_ROUNDS = 3
 
+#: Bench headline set, one representative per operator family (SURVEY
+#: §2). Always in the driver window, so the perf and correctness gates
+#: cover the same surface.
+HEADLINE: tuple[str, ...] = (
+    "flagship_avg_by_group",      # A13 group-avg + topk
+    "pricing_summary",            # scan-filter-agg (pushdown)
+    "star_join_revenue",          # 4-way star join
+    "top_revenue_orders",         # selective join + topk
+    "window_rank_orders",         # window functions
+    "rollup_lineitem",            # grouping sets
+    "histogram_totalprice",       # fixed-bin histogram
+    "minhash_dedup_groups",       # dedup: minhash signature groups (linear)
+    "ngram_jaccard_pairs",        # dedup: inverted-index jaccard
+    "knn_bruteforce_cosine",      # similarity top-k
+    "pixel_minmax_normalize",     # pixel-relation imaging
+    "mask_metrics",               # mask algebra
+    "region_grow_component",      # iterative applyInPandas BFS
+    "events_session_30m",         # session windows
+    "events_asof_last_view",      # as-of join
+)
 
-def recent_checked_names(root: str | None = None) -> set[str]:
-    """Query names hash-CONFIRMED (green: no err, rows + schema + hash
-    all matched) in the most recent ``ROLLING_COVERAGE_ROUNDS - 1``
-    driver rounds, read from the committed ``CORRECTNESS_r*.json``
-    artifacts at the repo root. Used by the module-coverage smoke
-    invariant: a family counts as covered if it holds a slot in the
-    CURRENT window or was confirmed in one of these recent rounds.
-    RED rows do NOT count — a family whose only recent check errored
-    or hash-mismatched (precedents: r1 nanos-timestamp errs, r2/r9
-    hash mismatches) still needs a live window slot, otherwise the
-    policy's "no module more than 2 rounds from its last driver hash"
-    would silently hold a failed hash.
+LEDGER_PATH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "WINDOW_LEDGER.json",
+)
 
-    Horizon definition (ADVICE r11): the ``k`` newest rounds RECORDED
-    IN ``WINDOW_LEDGER.json`` — the ledger is regenerated and committed
-    at ROUND START (standing first action), so the horizon is fixed at
-    window-design time and cannot shift when the driver drops the
-    in-progress round's ``CORRECTNESS_r*.json`` into the repo root
-    mid-round. (The previous newest-two-artifacts-ON-DISK rule shifted
-    forward exactly then: a window designed with zero family keeps
-    against rounds (N-2, N-1) could trip the smoke gate under the
-    judge's post-round pytest once round N's artifact landed, because
-    coverage only ever SHRINKS when the horizon advances.) Fallback
-    when no ledger exists at ``root``: the ``k`` newest artifacts on
-    disk, the old semantics."""
-    import glob
-    import json
-    import os
-    import re
 
-    k = ROLLING_COVERAGE_ROUNDS - 1
-    if k <= 0:  # per-round policy: only the current window covers
-        return set()
-    if root is None:
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds: dict[int, str] = {}
-    for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if m:
-            rounds[int(m.group(1))] = p
-    horizon = sorted(rounds)
-    try:
-        with open(os.path.join(root, "WINDOW_LEDGER.json")) as f:
-            ledger_rounds = json.load(f)["rounds"]
-        horizon = sorted(r for r in rounds if r in set(ledger_rounds))
-    except (OSError, ValueError, KeyError, TypeError):
-        pass  # no committed ledger: newest-k on disk (old semantics)
-    out: set[str] = set()
-    for r in horizon[-k:]:
-        try:
-            with open(rounds[r]) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            if (
-                isinstance(row, dict)
-                and not row.get("err")
-                and row.get("rows_match") is True
-                and row.get("schema_match") is True
-                and row.get("hash_match") is True
-            ):
-                out.add(name)
+@functools.cache
+def _code_text(fn: Callable) -> str:
+    """Source of ``fn`` as a token stream without comments or blank
+    lines: independent of where the function sits in its file."""
+    src = textwrap.dedent(inspect.getsource(fn))
+    toks = tokenize.generate_tokens(io.StringIO(src).readline)
+    return " ".join(
+        t.string for t in toks if t.type not in (tokenize.COMMENT, tokenize.NL)
+    )
+
+
+def _names(code: CodeType) -> set[str]:
+    out = set(code.co_names)
+    for c in code.co_consts:
+        if isinstance(c, CodeType):
+            out |= _names(c)
     return out
 
 
-def _ordered() -> dict[str, QuerySpec]:
-    """Registry in driver-facing order: PRIORITY window first, then the
-    remaining oracle-backed queries (registration order), then rows-only
-    queries (no hash signal — never let them occupy a checked slot)."""
-    missing = [n for n in PRIORITY if n not in _REGISTRY]
-    if missing:
-        raise RuntimeError(f"PRIORITY names not registered: {missing}")
-    out: dict[str, QuerySpec] = {n: _REGISTRY[n] for n in PRIORITY}
-    rest = [n for n in _REGISTRY if n not in out]
-    for n in rest:
-        if _REGISTRY[n].oracle:
-            out[n] = _REGISTRY[n]
-    for n in rest:
-        if not _REGISTRY[n].oracle:
-            out[n] = _REGISTRY[n]
+@functools.cache
+def src_sha(fn: Callable) -> str:
+    """Hash of a builder's source plus every same-module function it
+    names, transitively (a helper edit changes its callers' hash)."""
+    seen: dict[str, str] = {}
+    todo = [fn]
+    while todo:
+        f = inspect.unwrap(todo.pop())
+        if f.__qualname__ in seen:
+            continue
+        seen[f.__qualname__] = _code_text(f)
+        for name in sorted(_names(f.__code__)):
+            g = inspect.unwrap(f.__globals__.get(name))
+            if inspect.isfunction(g) and g.__module__ == fn.__module__:
+                todo.append(g)
+    text = "\n".join(seen[k] for k in sorted(seen))
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
+def family(spec: QuerySpec) -> str:
+    """Operator family of a query: the module that defines its builder."""
+    return spec.fn.__module__.rsplit(".", 1)[-1]
+
+
+def driver_window(ledger: dict) -> list[str]:
+    """The DRIVER_WINDOW recomputing-oracle queries the driver checks,
+    from the registry and a WINDOW_LEDGER.json mapping, in this order
+    (ties broken by name):
+
+    1. HEADLINE;
+    2. for each family neither covered by step 1 nor confirmed in the
+       ledger's newest ``ROLLING_COVERAGE_ROUNDS - 1`` rounds, its
+       least-recently-checked member (never-checked first);
+    3. queries whose ``src_sha`` differs from the ledger's, least-
+       recently-checked first;
+    4. all other queries, least-recently-checked first."""
+    specs = all_queries()
+    pool = [n for n, s in specs.items() if s.oracle and not s.pinned_sf]
+    entries = ledger["queries"]
+    last = {n: max(q["checked_rounds"], default=0) for n, q in entries.items()}
+
+    def age(n: str) -> tuple[int, str]:
+        return last.get(n, 0), n
+
+    horizon = set(sorted(ledger["rounds"])[-(ROLLING_COVERAGE_ROUNDS - 1):])
+    window = list(HEADLINE)
+    if not set(window) <= set(pool):
+        raise RuntimeError("every HEADLINE query needs a recomputing oracle")
+    covered = {family(specs[n]) for n in window} | {
+        family(specs[n])
+        for n, q in entries.items()
+        if n in specs and horizon & set(q["confirmed_rounds"])
+    }
+    for fam in sorted({family(specs[n]) for n in pool} - covered):
+        window.append(min((n for n in pool if family(specs[n]) == fam), key=age))
+    if len(window) > DRIVER_WINDOW:
+        raise RuntimeError(
+            f"HEADLINE + family keeps need {len(window)} > {DRIVER_WINDOW} slots"
+        )
+    shas = ledger["src_sha"]
+    rest = sorted(
+        (n for n in pool if n not in window),
+        key=lambda n: (shas.get(n) == src_sha(specs[n].fn), *age(n)),
+    )
+    return (window + rest)[:DRIVER_WINDOW]
+
+
+def load_ledger(path: str = LEDGER_PATH) -> dict:
+    """Read a ledger file; a missing or corrupt one raises."""
+    with open(path) as f:
+        return json.load(f)
+
+
+_committed_ledger = functools.cache(load_ledger)
+
+
+def _driver_order() -> dict[str, QuerySpec]:
+    """Registry in driver-facing order: the window, then the remaining
+    oracle-backed queries, then rows-only queries (no hash signal)."""
+    specs = all_queries()
+    out = {n: specs[n] for n in driver_window(_committed_ledger())}
+    for has_oracle in (True, False):
+        out.update(
+            (n, s) for n, s in specs.items()
+            if n not in out and bool(s.oracle) == has_oracle
+        )
     return out
 
 
@@ -632,19 +215,20 @@ def register(
 
 def all_queries() -> dict[str, QuerySpec]:
     """Name → spec for everything registered (imports the operator
-    modules), ordered so the driver's checked prefix samples every
-    operator family (see PRIORITY)."""
+    modules), in registration order."""
     _load_all()
-    return _ordered()
+    return dict(_REGISTRY)
 
 
 def queries_dict() -> dict[str, QueryFn]:
-    return {name: spec.fn for name, spec in all_queries().items()}
+    """Driver contract: builders with the driver window first."""
+    return {name: spec.fn for name, spec in _driver_order().items()}
 
 
 def oracles_dict() -> dict[str, str]:
+    """Driver contract: oracle SQL in :func:`queries_dict` order."""
     return {
-        name: spec.oracle for name, spec in all_queries().items() if spec.oracle
+        name: spec.oracle for name, spec in _driver_order().items() if spec.oracle
     }
 
 

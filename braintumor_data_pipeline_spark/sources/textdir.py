@@ -94,6 +94,6 @@ def read_text_dir(spark: SparkSession, path: str) -> DataFrame:
 
 
 # The registered round-trip query lives in sources/jsonl.py: text trees
-# and JSONL shards are the same "corpus interchange" family (one driver
-# window slot per family — see registry.PRIORITY), and jsonl.py is that
-# family's registration home.
+# and JSONL shards are the same "corpus interchange" family (the driver
+# window keeps every family covered — see registry.driver_window), and
+# jsonl.py is that family's registration home.

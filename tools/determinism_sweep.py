@@ -4,7 +4,7 @@ The driver runs each query in ITS OWN SparkSession with its own
 parallelism; any result that depends on shuffle-partition count,
 partial-aggregation order, or task scheduling will hash-match locally
 and fail at the driver (the round-2 ``salted_heavy_key_agg`` incident
-was exactly this class). This tool runs every PRIORITY query twice —
+was exactly this class). This tool runs every driver-window query twice —
 under deliberately different ``spark.sql.shuffle.partitions`` — in two
 separate processes (sessions can't change partition count reliably
 mid-flight for AQE'd plans) and compares canonicalized results.
@@ -12,7 +12,8 @@ mid-flight for AQE'd plans) and compares canonicalized results.
 Usage: python tools/determinism_sweep.py [sf_dir] [--all]
   --all sweeps EVERY recomputing-oracle query (the full catalog), two
   passes (5 vs 32 shuffle partitions, AQE on) — the catalog-wide
-  stability certificate; default sweeps the PRIORITY window with a
+  stability certificate; default sweeps the generated driver window
+  (the first ``registry.DRIVER_WINDOW`` entries of ``queries()``) with a
   third AQE-off pass.
 Internal: ... --worker <sf_dir> <n_partitions> <out.json> [aqe] [all].
 """
@@ -58,14 +59,12 @@ def worker(
             n for n, sp in specs.items() if sp.oracle and not sp.pinned_sf
         ]
     else:
-        names = list(registry.PRIORITY)
-    from braintumor_data_pipeline_spark.operators.indexing import (
-        release_blocked_caches,
-    )
+        names = list(registry.queries_dict())[: registry.DRIVER_WINDOW]
+    from braintumor_data_pipeline_spark.caching import release_tracked
 
     results = {}
     for name in names:
-        release_blocked_caches()  # prior query's helper caches
+        release_tracked()  # prior query's helper caches
         spec = registry.all_queries()[name]
         df = spec.fn(spark, sf_dir)
         results[name] = canon([tuple(r) for r in df.collect()], df.columns)

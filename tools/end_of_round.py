@@ -7,9 +7,11 @@ Runs, in order, and fails fast on the first red:
 
   1. doc-count drift      tools/gen_catalog.py --check
   2. window ledger        tools/gen_window_ledger.py --check
-  3. window invariants    the single test_queries_smoke window test
-                          (PRIORITY parity, headliners in-window,
-                          rolling-3 family coverage — seconds)
+  3. window invariants    the test_queries_smoke window tests
+                          (generated window == checked prefix,
+                          headliners in-window, rolling-3 family
+                          coverage, ledger horizon, src_sha,
+                          two-process determinism — under a minute)
   4. window determinism   tools/determinism_sweep.py sf0.001 (the
                           3-session certificate — 5-part / 32-part /
                           AQE-off — over the exact window the driver
@@ -35,17 +37,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STEPS = [
     ("doc-count drift", [sys.executable, "tools/gen_catalog.py", "--check"]),
     ("window ledger", [sys.executable, "tools/gen_window_ledger.py", "--check"]),
-    # window-policy invariants (r11): PRIORITY == checked prefix, all
-    # oracle-backed, headliners in-window, rolling-3 family coverage —
-    # seconds to run, and a bad rotation must fail THIS gate, not pytest
-    # hours later
+    # window-policy invariants: driver_window(ledger) == checked prefix,
+    # recomputing oracles only, headliners in-window, rolling-3 family
+    # coverage — a broken window must fail THIS gate, not pytest hours
+    # later
     (
         "window invariants",
         [
             sys.executable,
             "-m",
             "pytest",
-            "tests/test_queries_smoke.py::test_driver_window_samples_every_family",
+            "tests/test_queries_smoke.py",
+            "-k",
+            "driver_window or rolling_coverage or src_sha",
             "-q",
             "--no-header",
             "-p",
@@ -53,7 +57,7 @@ STEPS = [
         ],
     ),
     # window-scope 3-session determinism certificate (VERDICT r11
-    # task 7): the exact PRIORITY surface the driver will hash, under
+    # task 7): the exact window surface the driver will hash, under
     # 5/32 shuffle partitions and an AQE-off pass, in separate
     # processes — partition-count- or scheduling-dependent results
     # fail HERE, not at the driver (~3 min at sf0.001)

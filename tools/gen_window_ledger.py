@@ -13,14 +13,19 @@ hash, no err). Emits:
                         "in_registry": bool}},
      "summary": {"cumulative_confirmed": N,
                  "registered": M,
-                 "never_checked": M - N_in_registry}}
+                 "never_checked": M - N_in_registry},
+     "src_sha": {name: registry.src_sha(builder)}}  # every registered query
 
 so a judge can verify the cumulative-confirmed claim by reading one
 file and cross-checking any entry against the CORRECTNESS artifacts.
+``registry.driver_window`` reads this file to pick the driver window.
+``src_sha`` is a snapshot taken when the ledger is regenerated at round
+start: a builder edited since then differs from it and enters the window.
 
 Usage: python tools/gen_window_ledger.py            # write + print summary
        python tools/gen_window_ledger.py --check    # exit 1 if the file
                                                     # on disk is stale
+                                                    # (src_sha not compared)
 """
 
 from __future__ import annotations
@@ -65,13 +70,16 @@ EXPLAINED_UNCONFIRMED: dict[str, str] = {
 }
 
 
-def build() -> dict:
+def build(root: str = REPO) -> dict:
+    """Ledger from the ``CORRECTNESS_r*.json`` artifacts under ``root``
+    and the live registry."""
     from braintumor_data_pipeline_spark import registry
 
-    registered = set(registry.all_queries())
+    specs = registry.all_queries()
+    registered = set(specs)
     rounds: list[int] = []
     queries: dict[str, dict] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
@@ -111,6 +119,7 @@ def build() -> dict:
             "registered": len(registered),
             "never_checked": len(registered - set(queries)),
         },
+        "src_sha": {n: registry.src_sha(specs[n].fn) for n in sorted(specs)},
     }
 
 
@@ -136,6 +145,8 @@ def main() -> int:
                 file=sys.stderr,
             )
             return 1
+        on_disk.pop("src_sha", None)
+        ledger.pop("src_sha")
         if on_disk != ledger:
             print(
                 "DRIFT  WINDOW_LEDGER.json stale vs CORRECTNESS_r*.json — "

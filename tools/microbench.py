@@ -26,9 +26,7 @@ def main() -> None:
         args = args[2:]
     from braintumor_data_pipeline_spark import registry
     from braintumor_data_pipeline_spark.session import get_spark
-    from braintumor_data_pipeline_spark.operators.indexing import (
-        release_blocked_caches,
-    )
+    from braintumor_data_pipeline_spark.caching import release_tracked
     import bench
 
     names = args or list(bench.HEADLINE)
@@ -41,7 +39,7 @@ def main() -> None:
         fn = specs[name].fn
         walls = []
         for i in range(n + 1):  # first pass untimed warmup
-            release_blocked_caches()
+            release_tracked()
             spark.sparkContext.setJobDescription(f"microbench:{name}:{i}")
             t0 = time.time()
             df = fn(spark, sf_dir)

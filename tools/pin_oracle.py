@@ -59,7 +59,9 @@ def pin_sql(name: str) -> tuple[str, int]:
     df = spec.fn(spark, SF_DIR)
     cols = df.columns
     types = [_DUCK_TYPES[str(f.dataType)] for f in df.schema.fields]
-    rows = df.collect()
+    # sorted: the golden must not depend on the engine's output order
+    # (a hash aggregate's row order varies from run to run)
+    rows = sorted(df.collect(), key=lambda r: [(v is None, v) for v in r])
     if not rows:
         raise SystemExit(f"{name}: empty result, refusing to pin")
     values = ",\n      ".join(

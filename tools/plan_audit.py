@@ -335,14 +335,12 @@ def main() -> int:
     )
     qs = registry.all_queries()
     critical = 0
-    from braintumor_data_pipeline_spark.operators.indexing import (
-        release_blocked_caches,
-    )
+    from braintumor_data_pipeline_spark.caching import release_tracked
 
     for name, entry in sorted(qs.items()):
         if names and not any(f in name for f in names):
             continue
-        release_blocked_caches()  # prior query's helper caches
+        release_tracked()  # prior query's helper caches
         try:
             df = entry.fn(spark, sf)
             plan = _strip_initial_plans(

@@ -138,15 +138,13 @@ def main() -> int:
 
     _wd_lock = threading.Lock()
     _wd_epoch = [0]
-    from braintumor_data_pipeline_spark.operators.indexing import (
-        release_blocked_caches,
-    )
+    from braintumor_data_pipeline_spark.caching import release_tracked
 
     for name in names:
         # drop the previous query's tracked helper caches (blocked_*
         # inputs) so a 366-query sweep doesn't accumulate storage until
         # GC-driven ContextCleaner reclamation (ADVICE r7)
-        release_blocked_caches()
+        release_tracked()
         spec = specs[name]
         if apply_skips and name in SKIP_SF01:
             n_skip += 1
