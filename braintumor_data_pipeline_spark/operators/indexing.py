@@ -90,10 +90,6 @@ RANGE_BLOCKS = 1024
 _COARSE = 32  # sqrt(RANGE_BLOCKS): boundary lookup = 2×31 comparisons
 
 
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    return persist_tracked(df)
-
-
 def _with_range_block(df: DataFrame, key_col: str) -> DataFrame:
     """Append ``_blk`` ∈ [0, RANGE_BLOCKS): a deterministic, MONOTONE
     function of ``key_col`` (equal keys ⇒ equal block; larger key ⇒
@@ -254,7 +250,7 @@ def blocked_rank(df: DataFrame, key_col: str, tiebreak_col: str) -> DataFrame:
     # (rfm_segments ranks three times) re-evaluate their whole
     # upstream 2^depth times (measured: 603 s at sf0.001 vs 10 s
     # cached). Batch drivers release between queries.
-    df = _persist_tracked(df)
+    df = persist_tracked(df)
     blocked = _with_range_block(df, key_col)
     counts = blocked.groupBy("_blk").agg(F.count("*").alias("_cnt"))
     woff = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)
@@ -286,7 +282,7 @@ def blocked_cumsum(
     # (rfm_segments ranks three times) re-evaluate their whole
     # upstream 2^depth times (measured: 603 s at sf0.001 vs 10 s
     # cached). Batch drivers release between queries.
-    df = _persist_tracked(df)
+    df = persist_tracked(df)
     blocked = _with_range_block(df, key_col)
     bsums = blocked.groupBy("_blk").agg(F.sum(val_col).alias("_bsum"))
     woff = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)
@@ -326,7 +322,7 @@ def blocked_cummax(
     # (rfm_segments ranks three times) re-evaluate their whole
     # upstream 2^depth times (measured: 603 s at sf0.001 vs 10 s
     # cached). Batch drivers release between queries.
-    df = _persist_tracked(df)
+    df = persist_tracked(df)
     blocked = _with_range_block(df, key_col)
     bmax = blocked.groupBy("_blk").agg(F.max(val_col).alias("_bmx"))
     woff = Window.orderBy("_blk").rowsBetween(Window.unboundedPreceding, -1)

@@ -43,10 +43,10 @@ _DEFAULTS = {
     # quieter local runs
     "spark.ui.enabled": "false",
     "spark.sql.parquet.int96RebaseModeInRead": "CORRECTED",
-    # events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized
-    # reader rejects; read as int64 nanos and convert in the loader
-    # (sources/fixtures.py) — truncation to micros matches DuckDB's
-    # epoch_us on TIMESTAMP_NS.
+    # older events.parquet files store TIMESTAMP(NANOS), which Spark's
+    # vectorized reader rejects; read as int64 nanos and convert in
+    # sources/fixtures.normalize_timestamps — truncation to micros
+    # matches DuckDB's epoch_us on TIMESTAMP_NS.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 

@@ -14,6 +14,7 @@ to the driver.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,10 +44,8 @@ def ensure_nanos_readable(spark: SparkSession) -> None:
     Earlier driver datasets wrote ``events.ts`` as TIMESTAMP(NANOS), which
     Spark's reader rejects without ``spark.sql.legacy.parquet.nanosAsLong``.
     Current datasets write plain micros, but the conf is runtime-settable
-    and harmless, so it stays as a defensive setting for any raw
-    ``spark.read.parquet`` of the events fixture outside :func:`load_table`
-    (e.g. the streaming runners that stage the file for a file-source
-    stream).
+    and harmless, so :func:`load_table` and :func:`events_stream` set it
+    for any session, not just ones from ``session.get_spark()``.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Timestamp semantics engine-wide are "instants, session tz UTC" — the
@@ -55,58 +54,58 @@ def ensure_nanos_readable(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def normalize_event_ts(df: DataFrame) -> DataFrame:
-    """Normalize a raw events frame's ``ts`` to TIMESTAMP (UTC instants).
+def normalize_timestamps(df: DataFrame) -> DataFrame:
+    """Turn every fixture timestamp into a regular TIMESTAMP (UTC instant).
 
-    Handles both on-disk encodings the driver has shipped: int64 nanos
-    (legacy TIMESTAMP(NANOS) read via ``nanosAsLong``) and naive micros
-    (TIMESTAMP_NTZ under Spark 4's inference). Works on batch and
-    streaming frames alike.
+    The driver's parquet stores naive microsecond timestamps (no tz),
+    which Spark 4 infers as TIMESTAMP_NTZ. The whole query catalog (and
+    ``unix_micros`` in particular) is written against regular TIMESTAMP
+    (instant/LTZ) semantics with a UTC session, which is also exactly how
+    the DuckDB oracle reads the same files. So every NTZ column is cast
+    to TIMESTAMP — a wall-clock reinterpretation under the UTC session
+    tz, not a shift, hence bit-identical instants to the oracle. Older
+    datasets wrote ``events.ts`` as TIMESTAMP(NANOS); that arrives as
+    int64 nanos (via ``nanosAsLong``) and is floor-divided to micros —
+    the same truncation DuckDB's ``epoch_us`` applies to TIMESTAMP_NS.
+    Works on batch and streaming frames alike.
     """
     from pyspark.sql import functions as F
 
-    t = dict(df.dtypes).get("ts")
-    if t == "bigint":
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if t == "timestamp_ntz":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+    if ntz_cols:
+        df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table. Parquet scan → pushdown/pruning for free.
-
-    Timestamp normalization: the driver's parquet stores naive
-    microsecond timestamps (no tz), which Spark 4 infers as
-    TIMESTAMP_NTZ. The whole query catalog (and ``unix_micros`` in
-    particular) is written against regular TIMESTAMP (instant/LTZ)
-    semantics with a UTC session, which is also exactly how the DuckDB
-    oracle reads the same files. So: pin the session tz to UTC and cast
-    every NTZ column to TIMESTAMP — a wall-clock reinterpretation, not a
-    shift, hence bit-identical instants to the oracle. Older datasets
-    wrote TIMESTAMP(NANOS); that arrives as int64 nanos (via
-    ``nanosAsLong``) and is floor-divided to micros — the same
-    truncation DuckDB's ``epoch_us`` applies to TIMESTAMP_NS.
-    """
+    """Read one fixture table. Parquet scan → pushdown/pruning for free;
+    timestamps go through :func:`normalize_timestamps`."""
     if name not in TABLES:
         raise ValueError(f"unknown fixture table {name!r}; expected one of {TABLES}")
-    # Defensive: works in any session, not just ones from session.get_spark().
     ensure_nanos_readable(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    dtypes = dict(df.dtypes)
-    if name == "events" and dtypes.get("ts") == "bigint":
-        from pyspark.sql import functions as F
+    return normalize_timestamps(
+        spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    )
 
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        dtypes = dict(df.dtypes)
-    ntz_cols = [c for c, t in dtypes.items() if t == "timestamp_ntz"]
-    if ntz_cols:
-        from pyspark.sql import functions as F
 
-        df = df.withColumns(
-            {c: F.col(c).cast("timestamp") for c in ntz_cols}
-        )
-    return df
+def events_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> DataFrame:
+    """The ``events`` fixture as a Structured Streaming file source.
+
+    File stream sources need a DIRECTORY, so the single parquet file is
+    copied into ``stage_dir``; its schema is read once (streams cannot
+    infer), files are delivered one per micro-batch, and timestamps are
+    normalized exactly as :func:`load_table` does, so batch ≡ stream.
+    """
+    ensure_nanos_readable(spark)
+    os.makedirs(stage_dir, exist_ok=True)
+    staged = shutil.copy(os.path.join(sf_dir, "events.parquet"), stage_dir)
+    return normalize_timestamps(
+        spark.readStream.schema(spark.read.parquet(staged).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage_dir)
+    )
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

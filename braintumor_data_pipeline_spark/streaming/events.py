@@ -7,7 +7,7 @@ dedup-by-key, per-minute rates.
 
 Every windowed aggregation is registered in its BATCH form (Spark's
 ``window()``/``session_window()`` work identically over bounded input)
-with a DuckDB oracle; ``run_streaming_counts`` below runs the same
+with a DuckDB oracle; ``run_streaming_tumbling_counts`` below runs the same
 tumbling aggregation as a genuine Structured Streaming job (file source,
 watermark, complete-mode memory sink) and tests assert batch≡stream.
 
@@ -26,11 +26,8 @@ from pyspark.sql import functions as F
 
 from ..functions.money import dec_col, split_sum_aggs, split_sum_value
 from ..registry import register
-from ..sources.fixtures import (
-    ensure_nanos_readable,
-    load_table as _t,
-    normalize_event_ts,
-)
+from ..sources.fixtures import events_stream, load_table as _t
+from . import drain_to_memory
 
 _US_5M = 300_000_000
 _US_30M = 1_800_000_000
@@ -248,25 +245,7 @@ def run_streaming_tumbling_counts(
 
     Tests assert this equals ``events_tumbling_5m`` (batch ≡ stream).
     """
-    ensure_nanos_readable(spark)
-    import shutil
-
-    # file stream sources need a DIRECTORY; stage the single parquet file
-    stage_dir = os.path.join(checkpoint_dir + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -278,16 +257,7 @@ def run_streaming_tumbling_counts(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("tumbling_counts")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("tumbling_counts")
+    return drain_to_memory(agg, "tumbling_counts", checkpoint_dir)
 
 
 def run_streaming_session_windows(
@@ -307,11 +277,7 @@ def run_streaming_session_windows(
 
     Tests assert this equals ``events_session_30m`` (batch ≡ stream).
     """
-    ensure_nanos_readable(spark)
-
-    src = normalize_event_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    )
+    src = _t(spark, sf_dir, "events")
     stage_dir = checkpoint_dir + "_src"
     # three chronological slices, one file each, named in replay order —
     # cross-slice sessions force state merges between micro-batches
@@ -349,16 +315,7 @@ def run_streaming_session_windows(
             "sum_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("session_windows")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("session_windows")
+    return drain_to_memory(agg, "session_windows", checkpoint_dir)
 
 
 @register(
@@ -416,24 +373,7 @@ def run_stream_stream_join(
     watermarks and the join's time band lets Spark expire state — the
     production pattern for event-correlation pipelines. Returns the
     joined rows after processing all available input."""
-    ensure_nanos_readable(spark)
-    import shutil
-
-    stage_dir = os.path.join(checkpoint_dir + "_src")
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     v = (
         stream.filter(F.col("event_type") == "view")
         .select("user_id", F.col("ts").alias("v_ts"))
@@ -459,16 +399,7 @@ def run_stream_stream_join(
         F.unix_micros("p_ts").alias("purchase_us"),
         F.round("p_value", 6).alias("purchase_value"),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_join")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("ss_join")
+    return drain_to_memory(joined, "ss_join", checkpoint_dir, mode="append")
 
 
 def run_streaming_dedup_counts(
@@ -486,25 +417,7 @@ def run_streaming_dedup_counts(
     100 TB/day of events, unbounded dedup state is the difference between
     a running job and an OOM'd one.
     """
-    ensure_nanos_readable(spark)
-    import os as _os
-    import shutil
-
-    stage_dir = _os.path.join(checkpoint_dir + "_src")
-    _os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        _os.path.join(sf_dir, "events.parquet"),
-        _os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        _os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     deduped = (
         stream.withWatermark("ts", "10 minutes")
         .select(
@@ -518,16 +431,7 @@ def run_streaming_dedup_counts(
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute_bucket"])
     )
     counts = deduped.groupBy("event_type").agg(F.count("*").alias("n_unique"))
-    q = (
-        counts.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("dedup_counts")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("dedup_counts")
+    return drain_to_memory(counts, "dedup_counts", checkpoint_dir)
 
 
 def run_stream_static_join(
@@ -539,25 +443,7 @@ def run_stream_static_join(
     store involvement at all, which is why stream-static is the FIRST
     tool for dimension enrichment before reaching for stream-stream
     state. Tests assert ≡ the batch join."""
-    ensure_nanos_readable(spark)
-    import os as _os
-    import shutil
-
-    stage_dir = _os.path.join(checkpoint_dir + "_src")
-    _os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        _os.path.join(sf_dir, "events.parquet"),
-        _os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        _os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
-    stream = normalize_event_ts(stream)
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
@@ -570,16 +456,7 @@ def run_stream_static_join(
             F.sum(dec_col("value")).cast("double").alias("sum_value"),
         )
     )
-    q = (
-        joined.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("stream_static_seg")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("stream_static_seg")
+    return drain_to_memory(joined, "stream_static_seg", checkpoint_dir)
 
 
 @register(

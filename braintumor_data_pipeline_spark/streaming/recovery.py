@@ -26,8 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.money import dec_col
-
-from ..sources.fixtures import ensure_nanos_readable
+from ..sources.fixtures import load_table
 
 
 def stage_events_split(
@@ -35,9 +34,8 @@ def stage_events_split(
 ) -> list[str]:
     """Split the events fixture into n parquet files so tests can feed
     the file source incrementally. Deterministic split on event_id."""
-    ensure_nanos_readable(spark)
     os.makedirs(stage_dir, exist_ok=True)
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     paths = []
     for i in range(n_files):
         part = ev.filter(F.col("event_id") % n_files == i)
@@ -59,7 +57,6 @@ def run_recoverable_totals(
     """Process all currently-available files, then stop. Returns the
     number of input rows THIS run read (0 on a no-new-data restart).
     The result table at ``out_dir`` always holds the current totals."""
-    ensure_nanos_readable(spark)
     raw_schema = spark.read.parquet(src_dir).schema
     stream = (
         spark.readStream.schema(raw_schema)

@@ -13,14 +13,12 @@ not by construction.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import hll_bucket_rho, hll_spine_registers
-from ..sources.fixtures import ensure_nanos_readable
+from ..sources.fixtures import events_stream, load_table
+from . import drain_to_memory
 
 
 def run_streaming_hll_registers(
@@ -31,35 +29,14 @@ def run_streaming_hll_registers(
     micro-batch, complete-mode memory sink), then spine-join to the
     full (bucket, register) relation. Tests assert this equals the
     batch build over the same keys."""
-    ensure_nanos_readable(spark)
-    stage_dir = checkpoint_dir + "_src"
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     keys = stream.select(F.col("user_id").alias("key"))
     agg = hll_bucket_rho(keys).groupBy("bucket").agg(
         F.max("rho").alias("rho")
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("hll_stream_registers")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return hll_spine_registers(
+        drain_to_memory(agg, "hll_stream_registers", checkpoint_dir)
     )
-    q.processAllAvailable()
-    q.stop()
-    return hll_spine_registers(spark.table("hll_stream_registers"))
 
 
 def run_streaming_psi_bins(
@@ -75,9 +52,6 @@ def run_streaming_psi_bins(
     CONSTRUCTION, like the HLL registers above — no watermark needed.
     Tests pin the result row-for-row against the batch operator."""
     from pyspark.sql import Window
-
-    ensure_nanos_readable(spark)
-    from ..sources.fixtures import load_table
 
     e = load_table(spark, sf_dir, "events")
     mid_us = e.agg(
@@ -114,22 +88,7 @@ def run_streaming_psi_bins(
     ).collect()[0]
     edges = [edges_row[f"e{k}"] for k in range(1, 10)]
 
-    stage_dir = checkpoint_dir + "_src"
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    from ..sources.fixtures import normalize_event_ts
-
-    stream = normalize_event_ts(
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     c = F.round(F.col("value") * 100).cast("long")
     bin_col = F.size(
         F.filter(
@@ -142,17 +101,7 @@ def run_streaming_psi_bins(
         .groupBy("half", "bin")
         .agg(F.count("*").alias("cnt"))
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("psi_stream_bins")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-    sink = spark.table("psi_stream_bins")
+    sink = drain_to_memory(agg, "psi_stream_bins", checkpoint_dir)
     counts = sink.groupBy("bin").agg(
         F.sum(F.when(F.col("half") == 0, F.col("cnt")).otherwise(0)).alias("c0"),
         F.sum(F.when(F.col("half") == 1, F.col("cnt")).otherwise(0)).alias("c1"),
@@ -187,33 +136,10 @@ def run_streaming_countmin(
     keys."""
     from ..operators.sketch import countmin_build
 
-    ensure_nanos_readable(spark)
-    stage_dir = checkpoint_dir + "_src"
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     keys = stream.select(F.col("user_id").alias("key"))
     agg = countmin_build(keys)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("countmin_stream")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("countmin_stream")
+    return drain_to_memory(agg, "countmin_stream", checkpoint_dir)
 
 
 def run_streaming_bloom(
@@ -227,21 +153,7 @@ def run_streaming_bloom(
     assert this equals the batch bloom_bitmap over the same keys."""
     from ..operators.sketch import BF_BITS_PER_WORD, BF_K, BF_M, _h_spark
 
-    ensure_nanos_readable(spark)
-    stage_dir = checkpoint_dir + "_src"
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-    )
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src")
     seeds = F.array(*[F.lit(i) for i in range(BF_K)])
     pos = _h_spark("bf", F.col("seed"), F.col("key")) % BF_M
     agg = (
@@ -257,13 +169,4 @@ def run_streaming_bloom(
         .groupBy("word")
         .agg(F.bit_or("bitv").alias("mask"))
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("bloom_stream")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.table("bloom_stream")
+    return drain_to_memory(agg, "bloom_stream", checkpoint_dir)

@@ -13,8 +13,6 @@ code) handles key cardinality beyond memory.
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Iterator
 from typing import Any
 
@@ -23,7 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.fixtures import ensure_nanos_readable
+from ..sources.fixtures import events_stream, load_table
+from . import drain_to_memory
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -72,21 +71,8 @@ def run_stateful_type_totals(
     """Run the stateful counter as a real Structured Streaming job over
     the events parquet; returns the last emitted totals per event_type.
     Tests assert they equal the batch group-by."""
-    ensure_nanos_readable(spark)
-    stage_dir = checkpoint_dir + "_src"
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-        .select("event_type", "value")
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src").select(
+        "event_type", "value"
     )
     totals = stream.groupBy("event_type").applyInPandasWithState(
         _update_totals,
@@ -95,18 +81,11 @@ def run_stateful_type_totals(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    q = (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stateful_totals")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
     # memory sink in update mode appends each emission; keep the LAST
     # emission per key (the final state)
-    emitted = spark.table("stateful_totals")
+    emitted = drain_to_memory(
+        totals, "stateful_totals", checkpoint_dir, mode="update"
+    )
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
     return (
         emitted.withColumn("rn", F.row_number().over(w))
@@ -193,21 +172,8 @@ def run_tws_type_totals(
         "org.apache.spark.sql.execution.streaming."
         "state.RocksDBStateStoreProvider",
     )
-    ensure_nanos_readable(spark)
-    stage_dir = checkpoint_dir + "_src"
-    os.makedirs(stage_dir, exist_ok=True)
-    shutil.copy(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(stage_dir, "events.parquet"),
-    )
-    raw_schema = spark.read.parquet(
-        os.path.join(stage_dir, "events.parquet")
-    ).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(stage_dir)
-        .select("event_type", "value")
+    stream = events_stream(spark, sf_dir, checkpoint_dir + "_src").select(
+        "event_type", "value"
     )
     totals = stream.groupBy("event_type").transformWithStateInPandas(
         TypeTotalsProcessor(),
@@ -215,16 +181,7 @@ def run_tws_type_totals(
         outputMode="Update",
         timeMode="None",
     )
-    q = (
-        totals.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tws_totals")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    emitted = spark.table("tws_totals")
+    emitted = drain_to_memory(totals, "tws_totals", checkpoint_dir, mode="update")
     w = Window.partitionBy("event_type").orderBy(F.desc("n_events"))
     return (
         emitted.withColumn("rn", F.row_number().over(w))
@@ -288,9 +245,8 @@ def run_tws_type_totals_local(
     applyInPandas, state carried between batches through a bounded
     per-key frame (≤ |event_type| rows — the same information the
     state store would persist). Returns the final per-type totals."""
-    ensure_nanos_readable(spark)
     ev = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        load_table(spark, sf_dir, "events")
         .select("event_id", "event_type", "value")
         .withColumn(
             "_batch",

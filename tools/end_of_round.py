@@ -12,13 +12,17 @@ Runs, in order, and fails fast on the first red:
                           headliners in-window, rolling-3 family
                           coverage, ledger horizon, src_sha,
                           two-process determinism — under a minute)
-  4. window determinism   tools/determinism_sweep.py sf0.001 (the
+  4. streaming parity     tests/test_streaming.py (batch ≡ stream for
+                          every Structured Streaming runner; no runner
+                          is a registered query, so no other step runs
+                          them — ~90 s on 4 vCPU)
+  5. window determinism   tools/determinism_sweep.py sf0.001 (the
                           3-session certificate — 5-part / 32-part /
                           AQE-off — over the exact window the driver
                           is about to hash; VERDICT r11 task 7)
-  5. physical-plan audit  tools/plan_audit.py  (full catalog, sf0.001)
-  6. scale-probe bands    tools/scaling_probe.py quick (x1/x4 ratios)
-  7. correctness gate     tools/verify_local.py /root/testdata/sf0.01
+  6. physical-plan audit  tools/plan_audit.py  (full catalog, sf0.001)
+  7. scale-probe bands    tools/scaling_probe.py quick (x1/x4 ratios)
+  8. correctness gate     tools/verify_local.py /root/testdata/sf0.01
 
 The FULL pytest suite is intentionally not included (it is its own CI
 surface and takes ~20 min); run it separately. Usage:
@@ -50,6 +54,19 @@ STEPS = [
             "tests/test_queries_smoke.py",
             "-k",
             "driver_window or rolling_coverage or src_sha",
+            "-q",
+            "--no-header",
+            "-p",
+            "no:cacheprovider",
+        ],
+    ),
+    (
+        "streaming parity",
+        [
+            sys.executable,
+            "-m",
+            "pytest",
+            "tests/test_streaming.py",
             "-q",
             "--no-header",
             "-p",

@@ -95,6 +95,20 @@ SKIP_SF01 = {
 }
 
 
+def select_names(names, filters) -> list[str]:
+    """Registered names the filters select, in registration order. A
+    filter equal to a registered name selects only that name (so a list
+    of exact names runs exactly those queries); any other filter selects
+    every name containing it. No filters select everything."""
+    exact = {f for f in filters if f in names}
+    subs = [f for f in filters if f not in exact]
+    return [
+        n
+        for n in names
+        if not filters or n in exact or any(f in n for f in subs)
+    ]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     args = sys.argv[2:]
@@ -117,11 +131,7 @@ def main() -> int:
         )
 
     specs = registry.all_queries()
-    names = [
-        n
-        for n in specs
-        if not filters or any(f in n for f in filters)
-    ]
+    names = select_names(specs, filters)
     n_pass = n_fail = n_rows_only = n_skip = 0
     failures = []
     apply_skips = ("sf0.1" in sf_dir.rstrip("/").rsplit("/", 1)[-1]) and not no_skip
