@@ -3,23 +3,21 @@ regionprops (X11), pairwise SSIM (X13/J2), BF-score (X15), Butterworth
 (X14), dummy-GT + metric chain — the reference's per-image algorithms as
 registered, driver-checkable (rows-only) queries.
 
-These exercise the ``applyInPandas`` image path end-to-end: the
-distributed axis is across images (one Arrow group per image_id), numpy
-does the within-image math — SURVEY §2.9's design stance. Masks come
-from the deterministic grid (segmentation.grid_images_df): pred =
-(v ≥ 128), gt = (v2 ≥ 128) where v2 is the second pseudo-random channel.
+Every builder crosses the Python boundary through
+``segmentation.map_grid_images``: the distributed axis is across images
+(packed grids decoded per Arrow batch), numpy does the within-image
+math — SURVEY §2.9's design stance. Masks come from the deterministic
+grid (segmentation.grid_images_df): pred = (v ≥ 128), gt = (v2 ≥ 128)
+where v2 is the second pseudo-random channel.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from ..registry import register
-from ..sources.fixtures import load_table as _t
 from ..functions.imaging import (
     bf_score,
     butterworth_filter,
@@ -28,29 +26,13 @@ from ..functions.imaging import (
 )
 from ..functions.regionprops import region_properties
 from . import _pinned_sql as _pinned
-from .segmentation import GRID, grid_images_df
+from .segmentation import GRID, _GRID_SQL, grid_images_df, map_grid_images
 
 
-def _grid_with_gt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid images with both value channels (v, v2)."""
-    return grid_images_df(spark, sf_dir, with_gt=True)
-
-
-# DuckDB replay of grid_images_df(with_gt=True): dense row index over
-# orders, both value channels, complete 32×32 grids only.
-_GRID_GT_SQL = """
-      SELECT CAST(rn0 // 1024 AS INT) AS image_id,
-             CAST((rn0 % 1024) // 32 AS INT) AS y,
-             CAST(rn0 % 32 AS INT) AS x,
-             v, v2
-      FROM (
-        SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS rn0,
-               CAST((o_orderkey * 2654435761) % 256 AS INT) AS v,
-               CAST((o_orderkey * 2246822519) % 256 AS INT) AS v2
-        FROM orders
-      )
-      WHERE rn0 < ((SELECT count(*) FROM orders) // 1024) * 1024
-"""
+def _map_grids(spark, sf_dir, per_image, schema, channels=("v",)):
+    """``per_image`` over every grid image with the given channels."""
+    g = grid_images_df(spark, sf_dir, with_gt="v2" in channels)
+    return map_grid_images(g, per_image, schema, channels)
 
 
 @register(
@@ -64,14 +46,14 @@ _GRID_GT_SQL = """
            min(v) AS min_v,
            max(v) AS max_v,
            count(*) AS n_px
-    FROM ({_GRID_GT_SQL})
+    FROM ({_GRID_SQL})
     GROUP BY image_id
     """,
     tags=("imaging", "udf", "agg"),
 )
 def imaging_udf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-image mean / population-std / min / max computed INSIDE the
-    applyInPandas numpy path (the reference DoFn's stats,
+    packed-grid numpy path (the reference DoFn's stats,
     `dataflow_pipeline.py:87-88`) and hash-checked against the
     pixel-relation SQL — driver-verifiable evidence that the Arrow
     group→array reconstruction and the numpy reductions agree with the
@@ -85,29 +67,20 @@ def imaging_udf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``round(np.mean(), 6)`` vs ``round(avg(), 6)`` pairing was green
     only while no fixture value landed on a rounding boundary."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        (v,) = _to_arrays(pdf)
+    def stats(_, v):
         arr = v.astype(np.int64)
         sx = int(arr.sum())
         sxx = int((arr * arr).sum())
         mean = sx / 1024.0
         std = np.sqrt(sxx / 1024.0 - mean * mean)
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": int(pdf["image_id"].iloc[0]),
-                    "mean_v": mean,
-                    "std_v": float(std),  # population (A2)
-                    "min_v": int(arr.min()),
-                    "max_v": int(arr.max()),
-                    "n_px": int(arr.size),
-                }
-            ]
-        )
+        # population std (A2)
+        return [(mean, float(std), int(arr.min()), int(arr.max()), arr.size)]
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, mean_v double, std_v double, min_v int,"
+    return _map_grids(
+        spark,
+        sf_dir,
+        stats,
+        "image_id int, mean_v double, std_v double, min_v int,"
         " max_v int, n_px long",
     )
 
@@ -124,45 +97,36 @@ def imaging_udf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS fn,
            CAST(sum(CASE WHEN v < 128 AND v2 < 128 THEN 1 ELSE 0 END)
                 AS BIGINT) AS tn
-    FROM ({_GRID_GT_SQL})
+    FROM ({_GRID_SQL})
     GROUP BY image_id
     """,
     tags=("imaging", "udf", "masks", "agg"),
 )
 def imaging_udf_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TP/FP/FN/TN per image (A8, `evaluation.py:148-151`) computed with
-    numpy logical ops inside applyInPandas — the UDF twin of the pure-SQL
+    numpy logical ops inside the packed-grid stage — the UDF twin of the pure-SQL
     ``mask_confusion``, so the driver hash-checks the imaging-UDF mask
     path against relational semantics."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        v, v2 = _to_arrays(pdf, ("v", "v2"))
+    def confusion(_, v, v2):
         pred = v >= 128
         gt = v2 >= 128
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": int(pdf["image_id"].iloc[0]),
-                    "tp": int(np.sum(pred & gt)),
-                    "fp": int(np.sum(pred & ~gt)),
-                    "fn": int(np.sum(~pred & gt)),
-                    "tn": int(np.sum(~pred & ~gt)),
-                }
-            ]
-        )
+        return [
+            (
+                int(np.sum(pred & gt)),
+                int(np.sum(pred & ~gt)),
+                int(np.sum(~pred & gt)),
+                int(np.sum(~pred & ~gt)),
+            )
+        ]
 
-    return _grid_with_gt(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply, schema="image_id int, tp long, fp long, fn long, tn long"
+    return _map_grids(
+        spark,
+        sf_dir,
+        confusion,
+        "image_id int, tp long, fp long, fn long, tn long",
+        ("v", "v2"),
     )
-
-
-def _to_arrays(pdf: pd.DataFrame, cols=("v",)) -> list[np.ndarray]:
-    out = []
-    for c in cols:
-        img = np.zeros((GRID, GRID), dtype=np.uint8)
-        img[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf[c].to_numpy()
-        out.append(img)
-    return out
 
 
 def mask_regionprops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,24 +144,25 @@ def mask_regionprops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-check test that floor(float·1e6) agrees with the exact
     path within 1 ulp-widened bound."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        (v,) = _to_arrays(pdf)
+    def regionprops(_, v):
         props = region_properties((v >= 128).astype(np.uint8))
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": int(pdf["image_id"].iloc[0]),
-                    "eccentricity": round(props["eccentricity"], 6),
-                    "major_axis_length": round(props["major_axis_length"], 6),
-                    "minor_axis_length": round(props["minor_axis_length"], 6),
-                    "solidity": round(props["solidity"], 6),
-                }
-            ]
-        )
+        return [
+            tuple(
+                round(props[k], 6)
+                for k in (
+                    "eccentricity",
+                    "major_axis_length",
+                    "minor_axis_length",
+                    "solidity",
+                )
+            )
+        ]
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, eccentricity double, major_axis_length double,"
+    return _map_grids(
+        spark,
+        sf_dir,
+        regionprops,
+        "image_id int, eccentricity double, major_axis_length double,"
         " minor_axis_length double, solidity double",
     )
 
@@ -208,7 +173,7 @@ def mask_regionprops(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HULL_LCM = 72201776446800
 
 _REGIONPROPS_ORACLE = f"""
-    WITH RECURSIVE grid AS ({_GRID_GT_SQL}),
+    WITH RECURSIVE grid AS ({_GRID_SQL}),
     m AS (SELECT image_id, y, x FROM grid WHERE v >= 128),
     seed AS (SELECT image_id, min(y*32 + x) AS s FROM m GROUP BY image_id),
     region AS (
@@ -311,21 +276,16 @@ def mask_regionprops_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity: `evaluation.py:41-58` (regionprops[0] of the pred mask)."""
     from ..functions.regionprops import region_properties_exact
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        (v,) = _to_arrays(pdf)
+    def regionprops(_, v):
         props = region_properties_exact((v >= 128).astype(np.uint8))
-        if props is None:
-            return pd.DataFrame(
-                columns=[
-                    "image_id", "area", "convex_area", "solidity",
-                    "ecc_micro", "major_micro", "minor_micro",
-                ]
-            )
-        return pd.DataFrame([{"image_id": int(pdf["image_id"].iloc[0]), **props}])
+        # props keys are in schema order; no region → no row
+        return [] if props is None else [tuple(props.values())]
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, area long, convex_area long, solidity double,"
+    return _map_grids(
+        spark,
+        sf_dir,
+        regionprops,
+        "image_id int, area long, convex_area long, solidity double,"
         " ecc_micro long, major_micro long, minor_micro long",
     )
 
@@ -359,7 +319,7 @@ _SSIM_MAP_ORACLE = f"""
                  sum(g.v) AS sx, sum(g.v2) AS sy,
                  sum(g.v * g.v) AS sxx, sum(g.v2 * g.v2) AS syy,
                  sum(g.v * g.v2) AS sxy
-          FROM ({_GRID_GT_SQL}) g
+          FROM ({_GRID_SQL}) g
           JOIN (SELECT ys.wy, xs.wx
                 FROM range(26) ys(wy), range(26) xs(wx)) w
             ON g.y BETWEEN w.wy AND w.wy + 6
@@ -391,24 +351,25 @@ def ssim_window_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-string semantics in the loop (the ADVICE tie-safety fix)."""
     from ..functions.imaging import ssim_map
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        v, v2 = _to_arrays(pdf, ("v", "v2"))
-        smap = ssim_map(v, v2)
-        micro = np.floor(smap * 1e6).astype(np.int64)
-        wy, wx = np.indices(smap.shape)
-        return pd.DataFrame(
-            {
-                "image_id": np.full(
-                    micro.size, int(pdf["image_id"].iloc[0]), dtype="int32"
-                ),
-                "wy": wy.ravel().astype("int32"),
-                "wx": wx.ravel().astype("int32"),
-                "ssim_micro": micro.ravel(),
-            }
-        )
+    def ssim_micro(_, v, v2):
+        micro = np.floor(ssim_map(v, v2) * 1e6).astype(np.int64)
+        return [(micro.ravel(),)]
 
-    return _grid_with_gt(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply, schema="image_id int, wy int, wx int, ssim_micro long"
+    # one row-major 26×26 map per image, fanned out to window rows in
+    # the JVM rather than as Python tuples
+    side = GRID - 6  # valid 7×7 window positions per axis
+    maps = _map_grids(
+        spark,
+        sf_dir,
+        ssim_micro,
+        "image_id int, micro array<bigint>",
+        ("v", "v2"),
+    )
+    return maps.select("image_id", F.posexplode("micro")).select(
+        "image_id",
+        F.expr(f"pos div {side}").cast("int").alias("wy"),
+        (F.col("pos") % side).cast("int").alias("wx"),
+        F.col("col").alias("ssim_micro"),
     )
 
 
@@ -551,7 +512,7 @@ def _dft_power_sql(px_sql: str, val: str) -> str:
 @register(
     "butterworth_band_energy",
     oracle=f"""
-    WITH grid AS ({_GRID_GT_SQL}),
+    WITH grid AS ({_GRID_SQL}),
     {_dft_power_sql("SELECT image_id, y, x, v FROM grid", "v")}
     SELECT image_id,
            CAST(hp // {_HILO} AS BIGINT) AS hp_hi,
@@ -578,26 +539,17 @@ def butterworth_band_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``butterworth_stats`` builder below, golden-pinned in
     test_imaging."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        (v,) = _to_arrays(pdf)
+    def band_energy(_, v):
         re, im = _dft2_int(v)
         hp = _weighted_power(re, im, _W_HP_GRID)
         lp = _weighted_power(re, im, _W_LP_GRID)
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": int(pdf["image_id"].iloc[0]),
-                    "hp_hi": hp // _HILO,
-                    "hp_lo": hp % _HILO,
-                    "lp_hi": lp // _HILO,
-                    "lp_lo": lp % _HILO,
-                }
-            ]
-        )
+        return [(*divmod(hp, _HILO), *divmod(lp, _HILO))]
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, hp_hi long, hp_lo long, lp_hi long, lp_lo long",
+    return _map_grids(
+        spark,
+        sf_dir,
+        band_energy,
+        "image_id int, hp_hi long, hp_lo long, lp_hi long, lp_lo long",
     )
 
 
@@ -707,7 +659,7 @@ def _edge_dft_sql(name: str, val: str) -> str:
 @register(
     "edge_spectrum_agreement",
     oracle=f"""
-    WITH grid AS ({_GRID_GT_SQL}),
+    WITH grid AS ({_GRID_SQL}),
     fr AS (SELECT unnest(range({_DFT_N})) AS f),
     {_edge_dft_sql("p", "v")},
     {_edge_dft_sql("q", "v2")},
@@ -761,8 +713,7 @@ def edge_spectrum_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     `advanced_metrics.py:50-54`) stays as the test-tier
     ``image_pair_metrics`` builder below, golden-pinned in tests."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        v, v2 = _to_arrays(pdf, ("v", "v2"))
+    def agreement(_, v, v2):
         pe_map = _sobel_energy_np((v >= 128).astype(np.int64) * 255)
         ge_map = _sobel_energy_np((v2 >= 128).astype(np.int64) * 255)
         r1, i1 = _dft2_int(pe_map)
@@ -770,25 +721,22 @@ def edge_spectrum_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
         pe = _weighted_power(r1, i1, _W_HP_GRID)
         ge = _weighted_power(r2, i2, _W_HP_GRID)
         xe = _weighted_cross(r1, i1, r2, i2, _W_HP_GRID)
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": int(pdf["image_id"].iloc[0]),
-                    "pred_hi": pe // _HILO,
-                    "pred_lo": pe % _HILO,
-                    "gt_hi": ge // _HILO,
-                    "gt_lo": ge % _HILO,
-                    "cross_sign": (xe > 0) - (xe < 0),
-                    "cross_hi": abs(xe) // _HILO,
-                    "cross_lo": abs(xe) % _HILO,
-                }
-            ]
-        )
+        return [
+            (
+                *divmod(pe, _HILO),
+                *divmod(ge, _HILO),
+                (xe > 0) - (xe < 0),
+                *divmod(abs(xe), _HILO),
+            )
+        ]
 
-    return _grid_with_gt(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, pred_hi long, pred_lo long, gt_hi long,"
+    return _map_grids(
+        spark,
+        sf_dir,
+        agreement,
+        "image_id int, pred_hi long, pred_lo long, gt_hi long,"
         " gt_lo long, cross_sign int, cross_hi long, cross_lo long",
+        ("v", "v2"),
     )
 
 
@@ -803,25 +751,24 @@ def image_pair_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     Butterworth of the same channels); this float surface stays pinned
     by golden unit tests."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        v, v2 = _to_arrays(pdf, ("v", "v2"))
+    def pair_metrics(_, v, v2):
         pred = (v >= 128).astype(np.uint8)
         gt = (v2 >= 128).astype(np.uint8)
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": int(pdf["image_id"].iloc[0]),
-                    "ssim_images": round(ssim(v, v2), 6),
-                    "bf_with_gt": round(bf_score(pred, gt), 6),
-                    "bf_no_gt": round(bf_score(pred, None), 6),
-                }
-            ]
-        )
+        return [
+            (
+                round(ssim(v, v2), 6),
+                round(bf_score(pred, gt), 6),
+                round(bf_score(pred, None), 6),
+            )
+        ]
 
-    return _grid_with_gt(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, ssim_images double, bf_with_gt double,"
+    return _map_grids(
+        spark,
+        sf_dir,
+        pair_metrics,
+        "image_id int, ssim_images double, bf_with_gt double,"
         " bf_no_gt double",
+        ("v", "v2"),
     )
 
 
@@ -836,25 +783,21 @@ def butterworth_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Butterworth energies of the same channel). This float surface is
     pinned by the test_imaging goldens."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        (v,) = _to_arrays(pdf)
+    def filtered_stats(_, v):
         hp = butterworth_filter(v, 30, 2, high_pass=True)
         lp = butterworth_filter(v, 30, 2, high_pass=False)
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": int(pdf["image_id"].iloc[0]),
-                    "hp_mean": round(float(hp.mean()), 6),
-                    "hp_std": round(float(hp.std()), 6),
-                    "lp_mean": round(float(lp.mean()), 6),
-                    "lp_std": round(float(lp.std()), 6),
-                }
-            ]
-        )
+        return [
+            tuple(
+                round(float(x), 6)
+                for x in (hp.mean(), hp.std(), lp.mean(), lp.std())
+            )
+        ]
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, hp_mean double, hp_std double, lp_mean double,"
+    return _map_grids(
+        spark,
+        sf_dir,
+        filtered_stats,
+        "image_id int, hp_mean double, hp_std double, lp_mean double,"
         " lp_std double",
     )
 
@@ -876,33 +819,26 @@ def dummy_gt_dice(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay; the pinned rows certify the RNG seeding, mask arithmetic,
     and Dice DAG stay reproducible."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        (v,) = _to_arrays(pdf)
-        image_id = int(pdf["image_id"].iloc[0])
+    def dice_vs_dummy(image_id, v):
         pred = (v >= 128).astype(np.uint8)
         gt = generate_dummy_ground_truth(pred, seed=image_id)
         inter = float(np.logical_and(pred > 0, gt > 0).sum())
         s = float((pred > 0).sum() + (gt > 0).sum())
         dice = 2.0 * inter / s if s > 0 else 1.0
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": image_id,
-                    "gt_area": int(gt.sum()),
-                    "dice_vs_dummy": round(dice, 6),
-                }
-            ]
-        )
+        return [(int(gt.sum()), round(dice, 6))]
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply, schema="image_id int, gt_area long, dice_vs_dummy double"
+    return _map_grids(
+        spark,
+        sf_dir,
+        dice_vs_dummy,
+        "image_id int, gt_area long, dice_vs_dummy double",
     )
 
 
 @register(
     "imaging_udf_augment",
     oracle=f"""
-    WITH px AS (SELECT image_id, y, x, v FROM ({_GRID_GT_SQL})),
+    WITH px AS (SELECT image_id, y, x, v FROM ({_GRID_SQL})),
     pol AS (SELECT image_id, image_id % 6 AS p FROM px GROUP BY image_id),
     -- destination coordinates of source pixel (y, x) per policy:
     -- 0 identity | 1 hflip | 2 vflip | 3 rot180 | 4 rot90 CCW | 5 rot270
@@ -931,7 +867,7 @@ def dummy_gt_dice(spark: SparkSession, sf_dir: str) -> DataFrame:
 def imaging_udf_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic augmentation policies (identity / flips / rot90s,
     chosen by image_id % 6) applied with REAL numpy transforms
-    (np.fliplr/flipud/rot90) inside applyInPandas, then verified by a
+    (np.fliplr/flipud/rot90) inside the packed-grid stage, then verified by a
     position-weighted integer checksum (Σ v·(32y+x+1) over the
     TRANSFORMED image — any wrong coordinate mapping changes it) that
     the oracle recomputes as pure coordinate algebra on the pixel
@@ -939,9 +875,7 @@ def imaging_udf_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
     (0,0) corner pins orientation. Exact integers end-to-end; the
     distributed axis is across images, as with every imaging UDF."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        (a,) = _to_arrays(pdf)
-        image_id = int(pdf["image_id"].iloc[0])
+    def augment(image_id, a):
         p = image_id % 6
         if p == 1:
             t = np.fliplr(a)
@@ -956,20 +890,19 @@ def imaging_udf_augment(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             t = a
         w = np.arange(1, GRID * GRID + 1, dtype=np.int64).reshape(GRID, GRID)
-        return pd.DataFrame(
-            [
-                {
-                    "image_id": image_id,
-                    "policy": p,
-                    "pos_checksum": int((t.astype(np.int64) * w).sum()),
-                    "sum_v": int(t.sum(dtype=np.int64)),
-                    "corner00": int(t[0, 0]),
-                }
-            ]
-        )
+        return [
+            (
+                p,
+                int((t.astype(np.int64) * w).sum()),
+                int(t.sum(dtype=np.int64)),
+                int(t[0, 0]),
+            )
+        ]
 
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply,
-        schema="image_id int, policy int, pos_checksum long, sum_v long,"
+    return _map_grids(
+        spark,
+        sf_dir,
+        augment,
+        "image_id int, policy int, pos_checksum long, sum_v long,"
         " corner00 int",
     )

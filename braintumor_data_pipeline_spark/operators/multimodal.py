@@ -32,7 +32,7 @@ from ..sources.image_io import decode_image
 from ..sources.mjpeg import decode_mjpeg_frames, encode_mjpeg
 from ..sources.png import encode_png
 from ..sources.wav import decode_wav, encode_wav
-from .segmentation import grid_images_df, GRID
+from .segmentation import GRID, _GRID_SQL, grid_images_df, map_grid_images
 
 IMAGE_TABLE_SCHEMA = (
     "image_id int, format string, width int, height int, n_bytes long,"
@@ -41,60 +41,16 @@ IMAGE_TABLE_SCHEMA = (
 
 
 def images_as_binary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stage 1: the multimodal image table — (metadata…, payload binary).
+    """Stage 1: the multimodal image table — (metadata…, payload binary),
+    PNG-encoded per image inside the packed-grid Arrow stage."""
 
-    r12 packed-grid boundary (same rewrite as segmentation/phash): the
-    per-pixel rows aggregate into one row-major int array per image via
-    a map-side-combinable collect_list (no per-group Sort), and one
-    mapInArrow batch decodes every image with a single flatten+reshape
-    before the PNG encode — no per-image pandas DataFrame."""
-    from pyspark.sql import functions as F
+    def encode(_, img):
+        payload = encode_png(img)
+        return [("png", GRID, GRID, len(payload), payload)]
 
-    packed = (
-        grid_images_df(spark, sf_dir)
-        .select(
-            "image_id", (F.col("y") * GRID + F.col("x")).alias("pos"), "v"
-        )
-        .groupBy("image_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("varr")
-        )
+    return map_grid_images(
+        grid_images_df(spark, sf_dir), encode, IMAGE_TABLE_SCHEMA
     )
-
-    def encode_batches(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            flat = batch.column("varr").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            if flat.size != n * GRID * GRID:  # incomplete grid would
-                # silently mis-tile ACROSS images after reshape
-                raise ValueError(
-                    f"packed grid expects {n}x{GRID}x{GRID} pixels, "
-                    f"got {flat.size}"
-                )
-            imgs = flat.astype(np.uint8).reshape(n, GRID, GRID)
-            payloads = [encode_png(imgs[i]) for i in range(n)]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("image_id"),
-                    pa.array(["png"] * n, pa.string()),
-                    pa.array([GRID] * n, pa.int32()),
-                    pa.array([GRID] * n, pa.int32()),
-                    pa.array([len(p) for p in payloads], pa.int64()),
-                    pa.array(payloads, pa.binary()),
-                ],
-                ["image_id", "format", "width", "height", "n_bytes", "payload"],
-            )
-
-    return packed.mapInArrow(encode_batches, IMAGE_TABLE_SCHEMA)
 
 
 def image_features_df(df: DataFrame) -> DataFrame:
@@ -166,19 +122,8 @@ def image_features_df(df: DataFrame) -> DataFrame:
 # Sobel contribution weights per neighbor offset (dy, dx) → (wx, wy);
 # wx = SOBEL_X[dy+1][dx+1], wy is the transpose — mirrors
 # functions/imaging.sobel_magnitude exactly, reflect-101 borders.
-_IMG_FEATURES_ORACLE = """
-    WITH g AS (
-      SELECT CAST(rn0 // 1024 AS INT) AS image_id,
-             CAST((rn0 % 1024) // 32 AS INT) AS y,
-             CAST(rn0 % 32 AS INT) AS x,
-             v
-      FROM (
-        SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS rn0,
-               CAST((o_orderkey * 2654435761) % 256 AS INT) AS v
-        FROM orders
-      )
-      WHERE rn0 < ((SELECT count(*) FROM orders) // 1024) * 1024
-    ),
+_IMG_FEATURES_ORACLE = f"""
+    WITH g AS ({_GRID_SQL}),
     off(dy, dx, wx, wy) AS (VALUES
       (-1,-1,-1,-1), (-1,0,0,-2), (-1,1,1,-1),
       ( 0,-1,-2, 0), ( 0,0,0, 0), ( 0,1,2, 0),

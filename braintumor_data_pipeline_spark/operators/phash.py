@@ -232,11 +232,7 @@ _ORACLE_BANDS = f"""
 """
 
 _ORACLE_PIX = f"""
-    grid AS (
-      SELECT image_id, y, x, {_V_DUCK} AS v
-      FROM ({_GRID_SQL})
-      WHERE image_id < (SELECT count(*) FROM orders) // 1024
-    ),
+    grid AS (SELECT image_id, y, x, {_V_DUCK} AS v FROM ({_GRID_SQL})),
     pix AS (
       SELECT image_id * 2 AS pid, y, x, v FROM grid
       UNION ALL

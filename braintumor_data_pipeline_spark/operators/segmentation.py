@@ -9,8 +9,10 @@ regions — a BFS-order-dependent quirk.
 
 Spark mapping: the distributed axis is ACROSS images (exactly the
 reference's one-DoFn-call-per-file model); within an image the BFS runs
-as vectorized numpy frontier expansion inside ``applyInPandas``. Arrow
-moves each image's pixels once; no per-pixel Python.
+as vectorized numpy frontier expansion inside the packed-grid
+``mapInArrow`` stage of ``map_grid_images``, the boundary the other
+grid→numpy builders (imaging_udf, app_flow, multimodal) share.
+Arrow moves each image's pixels once; no per-pixel Python.
 
 Oracle story: with no iteration cap, the segmented region is exactly the
 connected component of {pixels: |v−seed_v| ≤ t·255} containing the seed —
@@ -37,16 +39,21 @@ SEED_YX = (16, 16)
 THRESHOLD = 0.15
 GRID = 32  # 32×32 = 1024 pixels per image
 
+#: DuckDB replay of ``grid_images_df(with_gt=True)``: dense row index
+#: over orders, both value channels, complete 32×32 grids only — the one
+#: grid fragment every grid oracle selects from.
 _GRID_SQL = """
       SELECT CAST(rn0 // 1024 AS INT) AS image_id,
              CAST((rn0 % 1024) // 32 AS INT) AS y,
              CAST(rn0 % 32 AS INT) AS x,
-             v
+             v, v2
       FROM (
         SELECT row_number() OVER (ORDER BY o_orderkey) - 1 AS rn0,
-               CAST((o_orderkey * 2654435761) % 256 AS INT) AS v
+               CAST((o_orderkey * 2654435761) % 256 AS INT) AS v,
+               CAST((o_orderkey * 2246822519) % 256 AS INT) AS v2
         FROM orders
       )
+      WHERE rn0 < ((SELECT count(*) FROM orders) // 1024) * 1024
 """
 
 
@@ -107,37 +114,37 @@ def grid_images_df(
     )
 
 
-def _grid_arrays_df(g: DataFrame) -> DataFrame:
-    """(image_id, varr): each complete 32×32 image packed into ONE
-    row-major 1024-int array.
+def map_grid_images(
+    g: DataFrame,
+    per_image,
+    schema: str,
+    channels: tuple[str, ...] = ("v",),
+    key: str = "image_id",
+) -> DataFrame:
+    """Run ``per_image(key_value, *images)`` on every grid image of
+    ``g`` (rows ``key, y, x, *channels``; an incomplete grid raises) —
+    the grid→numpy boundary of the per-image builders.
 
-    r12 Python-boundary optimization (guide §4): the old path shuffled
-    per-PIXEL rows into ``groupBy(image_id).applyInPandas`` — an
-    Exchange + per-group Sort, then one pandas DataFrame per image and
-    4 Arrow columns × 1024 rows per image across the boundary. Packing
-    first means the exchange moves map-side-combined partial arrays,
-    the reduce side needs NO sort, and the boundary moves one array
-    cell per image each way. The BFS itself is unchanged numpy."""
-    return (
-        g.select(
-            "image_id", (F.col("y") * GRID + F.col("x")).alias("pos"), "v"
-        )
-        .groupBy("image_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("varr")
-        )
+    Each image's channels are packed into row-major 1024-value arrays
+    by one map-side-combinable ``collect_list`` (the exchange moves
+    partial arrays and the reduce side needs no per-group Sort); a
+    ``mapInArrow`` worker decodes a whole Arrow batch per channel with
+    one flatten+reshape into uint8 GRID×GRID images. ``per_image``
+    returns that image's rows as tuples of the ``schema`` columns after
+    the key (the key is prepended); the rows of a batch are typed once
+    against ``schema``, whose first column is ``key``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    pos = (F.col("y") * GRID + F.col("x")).alias("pos")
+    px = F.array_sort(F.collect_list(F.struct("pos", *channels)))
+    packed = (
+        g.select(key, pos, *channels)
+        .groupBy(key)
+        .agg(px.alias("px"))
+        .select(key, *[F.col("px").getField(c).alias(c) for c in channels])
     )
-
-
-def _grow_arrow_fn(emit: str, **grow_kwargs):
-    """mapInArrow worker over packed grids: decode every image of a
-    batch with ONE flatten+reshape (no per-row Python), run the numpy
-    BFS per image, emit ``pos`` (admitted positions as an int array),
-    ``area`` (post-morphology pixel count) or ``adaptive``
-    (area, threshold_used)."""
 
     def fn(batches):
         import pyarrow as pa
@@ -146,69 +153,34 @@ def _grow_arrow_fn(emit: str, **grow_kwargs):
             n = batch.num_rows
             if n == 0:
                 continue
-            ids = batch.column("image_id")
-            flat = batch.column("varr").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            if flat.size != n * GRID * GRID:  # incomplete grid would
-                # silently mis-tile ACROSS images after reshape
-                raise ValueError(
-                    f"packed grid expects {n}x{GRID}x{GRID} pixels, "
-                    f"got {flat.size}"
-                )
-            imgs = flat.astype(np.uint8).reshape(n, GRID, GRID)
-            if emit == "pos":
-                pos_lists = []
-                for i in range(n):
-                    mask = region_growing_np(imgs[i], SEED_YX, **grow_kwargs)
-                    ys, xs = np.nonzero(mask)
-                    pos_lists.append(
-                        (ys.astype(np.int32) * GRID + xs.astype(np.int32))
-                    )
-                lens = [len(p) for p in pos_lists]
-                offsets = np.concatenate(
-                    [np.zeros(1, np.int64), np.cumsum(lens)]
-                ).astype(np.int32)
-                values = (
-                    np.concatenate(pos_lists)
-                    if pos_lists
-                    else np.array([], np.int32)
-                )
-                arr = pa.ListArray.from_arrays(
-                    pa.array(offsets, pa.int32()),
-                    pa.array(values, pa.int32()),
-                )
-                yield pa.RecordBatch.from_arrays(
-                    [ids, arr], ["image_id", "pos"]
-                )
-            elif emit == "area":
-                areas = np.empty(n, dtype=np.int64)
-                for i in range(n):
-                    mask = region_growing_np(imgs[i], SEED_YX, **grow_kwargs)
-                    areas[i] = int(mask.sum())
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(areas, pa.int64())],
-                    ["image_id", "area"],
-                )
-            else:  # adaptive
-                areas = np.empty(n, dtype=np.int64)
-                thrs = np.empty(n, dtype=np.float64)
-                for i in range(n):
-                    mask, thr = region_growing_adaptive_np(
-                        imgs[i], SEED_YX, **grow_kwargs
-                    )
-                    areas[i] = int(mask.sum())
-                    thrs[i] = round(float(thr), 6)
+            images = [_unpack_grids(batch.column(c), n) for c in channels]
+            rows = [
+                (k, *row)
+                for i, k in enumerate(batch.column(key).to_pylist())
+                for row in per_image(k, *(im[i] for im in images))
+            ]
+            if rows:
                 yield pa.RecordBatch.from_arrays(
                     [
-                        ids,
-                        pa.array(areas, pa.int64()),
-                        pa.array(thrs, pa.float64()),
+                        pa.array(col, t)
+                        for col, t in zip(zip(*rows), arrow_schema.types)
                     ],
-                    ["image_id", "area", "threshold_used"],
+                    schema=arrow_schema,
                 )
 
-    return fn
+    return packed.mapInArrow(fn, schema)
+
+
+def _unpack_grids(col, n: int) -> np.ndarray:
+    """One packed Arrow list column of ``n`` images → (n, GRID, GRID)
+    uint8, row-major."""
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    if flat.size != n * GRID * GRID:  # incomplete grid would
+        # silently mis-tile ACROSS images after reshape
+        raise ValueError(
+            f"packed grid expects {n}x{GRID}x{GRID} pixels, got {flat.size}"
+        )
+    return flat.astype(np.uint8).reshape(n, GRID, GRID)
 
 
 def _grown_positions(
@@ -217,17 +189,20 @@ def _grown_positions(
     connectivity: int,
     max_iterations: int | None,
 ) -> DataFrame:
-    """Shared packed-grid BFS → (image_id, y, x) rows."""
-    grown = _grid_arrays_df(g).mapInArrow(
-        _grow_arrow_fn(
-            "pos",
+    """Packed-grid BFS without morphology → (image_id, y, x) rows."""
+
+    def grow(_, img):
+        mask = region_growing_np(
+            img,
+            SEED_YX,
             threshold=threshold,
             connectivity=connectivity,
             max_iterations=max_iterations,
             morphology=False,
-        ),
-        "image_id int, pos array<int>",
-    )
+        )
+        return [(np.flatnonzero(mask).astype(np.int32),)]
+
+    grown = map_grid_images(g, grow, "image_id int, pos array<int>")
     return grown.select("image_id", F.explode("pos").alias("p")).select(
         "image_id",
         F.expr(f"p div {GRID}").cast("int").alias("y"),
@@ -238,11 +213,7 @@ def _grown_positions(
 @register(
     "region_grow_component",
     oracle=f"""
-    WITH RECURSIVE grid AS ({_GRID_SQL}),
-    full_imgs AS (
-      SELECT image_id FROM grid GROUP BY image_id HAVING count(*) = 1024
-    ),
-    g AS (SELECT grid.* FROM grid JOIN full_imgs USING (image_id)),
+    WITH RECURSIVE g AS ({_GRID_SQL}),
     seeds AS (SELECT image_id, v AS sv FROM g WHERE y = 16 AND x = 16),
     region AS (
       SELECT image_id, y, x FROM g WHERE y = 16 AND x = 16
@@ -261,10 +232,9 @@ def _grown_positions(
 def region_grow_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncapped region growing = seed-connected component of the
     admissible pixel set. Spark runs the numpy BFS per image over
-    packed grid arrays (``_grid_arrays_df`` + ``mapInArrow`` — r12:
-    sort-free aggregate, one array cell per image across the Python
-    boundary); the oracle recomputes the identical set with a DuckDB
-    recursive CTE — two independent formulations of G1."""
+    packed grid arrays (``map_grid_images``: sort-free aggregate, one
+    array cell per image across the Python boundary); the oracle
+    recomputes the identical set with a DuckDB recursive CTE — two independent formulations of G1."""
     g = grid_images_df(spark, sf_dir)
     return _grown_positions(g, THRESHOLD, 4, None)
 
@@ -287,9 +257,7 @@ _OFFSETS_8_SQL = (
 @register(
     "region_grow_capped",
     oracle=f"""
-    WITH RECURSIVE grid AS ({_GRID_SQL}
-      WHERE rn0 < ((SELECT count(*) FROM orders) // 1024) * 1024
-    ),
+    WITH RECURSIVE grid AS ({_GRID_SQL}),
     seeds AS (SELECT image_id, v AS sv FROM grid WHERE y = 16 AND x = 16),
     adm AS (
       SELECT g.image_id, list(g.y * 32 + g.x ORDER BY g.y * 32 + g.x)
@@ -344,18 +312,21 @@ def region_grow_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grown_area(g: DataFrame, threshold: float) -> DataFrame:
-    """Shared packed-grid faithful chain (capped BFS + morphology) →
+    """Packed-grid faithful chain (capped BFS + morphology) →
     (image_id, area)."""
-    return _grid_arrays_df(g).mapInArrow(
-        _grow_arrow_fn(
-            "area",
+
+    def grow(_, img):
+        mask = region_growing_np(
+            img,
+            SEED_YX,
             threshold=threshold,
             connectivity=8,
             max_iterations=100,
             morphology=True,
-        ),
-        "image_id int, area long",
-    )
+        )
+        return [(int(mask.sum()),)]
+
+    return map_grid_images(g, grow, "image_id int, area long")
 
 
 def _faithful_oracle(threshold: float) -> str:
@@ -372,9 +343,7 @@ def _faithful_oracle(threshold: float) -> str:
     contributes nothing). Binary ops on integer coordinates — no float
     anywhere after the admissibility test, so the hash cannot flake."""
     return f"""
-    WITH RECURSIVE grid AS ({_GRID_SQL}
-      WHERE rn0 < ((SELECT count(*) FROM orders) // 1024) * 1024
-    ),
+    WITH RECURSIVE grid AS ({_GRID_SQL}),
     seeds AS (SELECT image_id, v AS sv FROM grid WHERE y = 16 AND x = 16),
     adm AS (
       SELECT g.image_id, list(g.y * 32 + g.x ORDER BY g.y * 32 + g.x)
@@ -498,17 +467,21 @@ def region_grow_capped_morph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grown_adaptive(g: DataFrame) -> DataFrame:
-    """Shared packed-grid adaptive wrapper → (image_id, area,
-    threshold_used)."""
-    return _grid_arrays_df(g).mapInArrow(
-        _grow_arrow_fn(
-            "adaptive",
+    """Packed-grid adaptive wrapper → (image_id, area, threshold_used)."""
+
+    def grow(_, img):
+        mask, thr = region_growing_adaptive_np(
+            img,
+            SEED_YX,
             initial_threshold=0.05,
             max_threshold=0.3,
             connectivity=4,
             max_iterations=100000,
-        ),
-        "image_id int, area long, threshold_used double",
+        )
+        return [(int(mask.sum()), round(float(thr), 6))]
+
+    return map_grid_images(
+        g, grow, "image_id int, area long, threshold_used double"
     )
 
 
@@ -553,14 +526,12 @@ _ADM_F32_SQL = (
 # Integer forms of the size-band predicates: min_size = 1024·0.005 = 5.12
 # → "area < min" ⟺ sz ≤ 5; max_size = 1024·0.3 ≈ 307.2 → "area > max"
 # ⟺ sz ≥ 308. Exact (no float compare needed on counts).
-def _adaptive_oracle(cap_px: str) -> str:
-    """The adaptive-schedule replay oracle; ``cap_px`` is an optional
-    extra grid predicate (e.g. " AND rn0 < 8192") for the bounded
-    image-subset twin — "" replays every image."""
+def _adaptive_oracle(cap: str) -> str:
+    """The adaptive-schedule replay oracle; ``cap`` is an optional grid
+    predicate (e.g. " WHERE image_id < 8") for the bounded image-subset
+    twin — "" replays every image."""
     return f"""
-    WITH RECURSIVE grid AS ({_GRID_SQL}
-      WHERE rn0 < ((SELECT count(*) FROM orders) // 1024) * 1024{cap_px}
-    ),
+    WITH RECURSIVE grid AS (SELECT * FROM ({_GRID_SQL}){cap}),
     seeds AS (SELECT image_id, v AS sv FROM grid WHERE y = 16 AND x = 16),
     thr(phase, ti, t) AS (VALUES {_THR_VALUES}),
     adm AS (
@@ -683,7 +654,7 @@ def region_grow_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "region_grow_adaptive_first8",
-    oracle=_adaptive_oracle(" AND rn0 < 8192"),
+    oracle=_adaptive_oracle(" WHERE image_id < 8"),
     tags=("segmentation", "iterative"),
 )
 def region_grow_adaptive_first8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -691,7 +662,7 @@ def region_grow_adaptive_first8(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1-verifiable twin of the class-(b) skip (SKIP_SF01 points
     here): the full oracle's recursive flood-fill × threshold-schedule
     replay costs ~330 s over sf0.1's 146 images, so the twin pins the
-    image subset (rn0 < 8·1024 on both sides — the identical grid
+    image subset (image_id < 8 on both sides — the identical grid
     prefix) and replays the IDENTICAL adaptive schedule there at any
     SF. The Spark side runs the exact same packed-grid mapInArrow
     operator code path; only the input grid is bounded."""

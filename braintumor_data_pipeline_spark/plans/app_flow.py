@@ -3,8 +3,9 @@ query — the reference's whole Streamlit flow (`/root/reference/app.py:
 21-259`) per image: preprocess (blur+CLAHE) → auto-seed (argmax,
 row-major tie-break) → adaptive region growing → metrics (area,
 perimeter, circularity, regionprops, tumor probability, Dice vs seeded
-dummy-GT) — except here it runs across ALL images as one
-``applyInPandas`` plan instead of one image per browser interaction.
+dummy-GT) — except here it runs across ALL images as one packed-grid
+Arrow stage (``segmentation.map_grid_images``) instead of one image per
+browser interaction.
 
 Registered as ``app_analysis_chain`` (rows-only: the chain composes G1/
 G2/X4/X5/X10/X11/X15/X16/A15, each individually pinned by tests or
@@ -15,7 +16,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.imaging import (
@@ -25,7 +25,7 @@ from ..functions.imaging import (
     region_growing_adaptive_np,
 )
 from ..functions.regionprops import region_properties
-from ..operators.segmentation import GRID, grid_images_df
+from ..operators.segmentation import grid_images_df, map_grid_images
 from ..operators import _pinned_sql as _PINNED
 from ..registry import register
 
@@ -90,23 +90,17 @@ def analyze_image(
     pinned_sf="sf0.01",
 )
 def app_analysis_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The §3.2 app flow across all grid images — one Arrow group per
-    image, the whole chain fused in one stage."""
+    """The §3.2 app flow across all grid images — every image decoded
+    from its packed grid, the whole chain fused in one Arrow stage."""
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        img = np.zeros((GRID, GRID), dtype=np.uint8)
-        img[pdf["y"].to_numpy(), pdf["x"].to_numpy()] = pdf["v"].to_numpy()
-        image_id = int(pdf["image_id"].iloc[0])
+    def chain(image_id, img):
         out = analyze_image(img, gt_seed=image_id)
-        row = {"image_id": image_id}
-        row.update({k: round(v, 6) for k, v in out.items()})
-        return pd.DataFrame([row])
+        return [tuple(round(v, 6) for v in out.values())]
 
+    # analyze_image's panel keys, in order
     schema = (
         "image_id int, seed_y double, seed_x double, threshold_used double,"
         " area double, perimeter_px double, circularity double,"
         " eccentricity double, solidity double, dice_vs_dummy double"
     )
-    return grid_images_df(spark, sf_dir).groupBy("image_id").applyInPandas(
-        apply, schema=schema
-    )
+    return map_grid_images(grid_images_df(spark, sf_dir), chain, schema)

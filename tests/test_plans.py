@@ -69,8 +69,8 @@ def test_semi_and_anti_join_operators(spark, sf_dir):
 
 def test_no_python_row_udf_anywhere(spark, sf_dir):
     """Row-at-a-time Python UDFs (BatchEvalPython) are banned from every
-    registered plan — Arrow stages (ArrowEvalPython / mapInPandas /
-    FlatMapGroupsInPandas) are the only Python allowed."""
+    registered plan — Arrow stages (ArrowEvalPython / MapInPandas /
+    MapInArrow / FlatMapGroupsInPandas) are the only Python allowed."""
     bad = []
     for name, entry in sorted(registry.all_queries().items()):
         plan = entry.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()

@@ -146,3 +146,87 @@ def test_capped_query_cap_actually_binds(spark, sf_dir):
         assert capped[image_id] < int(full.sum()), (
             f"cap did not bind on image {image_id}"
         )
+
+
+# --- the packed-grid boundary (segmentation.map_grid_images) ---
+def test_packed_grid_size_check_rejects_short_batch():
+    """A packed batch whose flattened length is not n·32·32 must raise,
+    not mis-tile pixels across images after the reshape."""
+    import pyarrow as pa
+
+    from braintumor_data_pipeline_spark.operators.segmentation import (
+        GRID,
+        _unpack_grids,
+    )
+
+    good = pa.array([list(range(GRID * GRID))] * 2, pa.list_(pa.int32()))
+    assert _unpack_grids(good, 2).shape == (2, GRID, GRID)
+    short = pa.array(
+        [list(range(GRID * GRID)), list(range(GRID * GRID - 1))],
+        pa.list_(pa.int32()),
+    )
+    with pytest.raises(ValueError, match="packed grid expects 2x32x32"):
+        _unpack_grids(short, 2)
+
+
+def _decoded(g, key="image_id"):
+    from braintumor_data_pipeline_spark.operators.segmentation import (
+        map_grid_images,
+    )
+
+    out = map_grid_images(
+        g,
+        lambda _, v, v2: [(v.ravel().tolist(), v2.ravel().tolist())],
+        f"{key} int, v array<int>, v2 array<int>",
+        ("v", "v2"),
+        key=key,
+    )
+    return {r[key]: (r.v, r.v2) for r in out.collect()}
+
+
+def _scattered(rows, key="image_id"):
+    from braintumor_data_pipeline_spark.operators.segmentation import GRID
+
+    imgs: dict[int, np.ndarray] = {}
+    for r in rows:
+        img = imgs.setdefault(r[key], np.zeros((2, GRID, GRID), np.int64))
+        img[:, r.y, r.x] = (r.v, r.v2)
+    return {
+        k: (a[0].ravel().tolist(), a[1].ravel().tolist())
+        for k, a in imgs.items()
+    }
+
+
+def test_packed_grid_decode_matches_pixel_scatter(spark, sf_dir):
+    """Both channels of every fixture image decode to exactly the
+    row-major arrays a scatter of the grid's pixel rows gives — pins
+    channel order and position order through the pack."""
+    from braintumor_data_pipeline_spark.operators.segmentation import (
+        grid_images_df,
+    )
+
+    g = grid_images_df(spark, sf_dir, with_gt=True)
+    want = _scattered(g.collect())
+    assert want
+    assert _decoded(g) == want
+
+
+def test_packed_grid_decode_is_order_free_across_images(spark):
+    """Several images under another key column, rows shuffled across
+    partitions: each image still decodes to its own pixels."""
+    from pyspark.sql import functions as F
+
+    g = (
+        spark.range(3 * 1024)
+        .select(
+            (F.col("id") / 1024).cast("int").alias("pid"),
+            ((F.col("id") % 1024) / 32).cast("int").alias("y"),
+            (F.col("id") % 32).cast("int").alias("x"),
+            F.abs(F.xxhash64("id") % 256).cast("int").alias("v"),
+            F.abs(F.xxhash64("id", F.lit(1)) % 256).cast("int").alias("v2"),
+        )
+        .repartition(4, F.rand(7))
+    )
+    want = _scattered(g.collect(), key="pid")
+    assert sorted(want) == [0, 1, 2]
+    assert _decoded(g, key="pid") == want

@@ -218,11 +218,12 @@ def _ngram_pairs_shape(spark, s: int):
 
 
 def _region_grow_shape(spark, s: int):
-    """region_grow_component: pixel grids → per-image applyInPandas
-    numpy BFS (146·s images of 1024 px, same UDF as the registered
-    query)."""
+    """region_grow_component: pixel grids → packed-grid numpy BFS
+    (146·s images of 1024 px, the registered query's boundary and
+    kernel)."""
     from braintumor_data_pipeline_spark.operators.segmentation import (
-        _bfs_apply,
+        THRESHOLD,
+        _grown_positions,
     )
 
     images = 146 * s
@@ -232,9 +233,7 @@ def _region_grow_shape(spark, s: int):
         (F.col("id") % 32).cast("int").alias("x"),
         (_mix(F.col("id"), 31) % 256).cast("int").alias("v"),
     )
-    return px.groupBy("image_id").applyInPandas(
-        _bfs_apply, schema="image_id int, y int, x int"
-    )
+    return _grown_positions(px, THRESHOLD, 4, None)
 
 
 def _session_windows_shape(spark, s: int):
