@@ -276,18 +276,22 @@ def mask_regionprops_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity: `evaluation.py:41-58` (regionprops[0] of the pred mask)."""
     from ..functions.regionprops import region_properties_exact
 
+    cols = {
+        "area": "long",
+        "convex_area": "long",
+        "solidity": "double",
+        "ecc_micro": "long",
+        "major_micro": "long",
+        "minor_micro": "long",
+    }
+
     def regionprops(_, v):
         props = region_properties_exact((v >= 128).astype(np.uint8))
-        # props keys are in schema order; no region → no row
-        return [] if props is None else [tuple(props.values())]
+        # no region → no row; values bound to columns by name
+        return [] if props is None else [tuple(props[c] for c in cols)]
 
-    return _map_grids(
-        spark,
-        sf_dir,
-        regionprops,
-        "image_id int, area long, convex_area long, solidity double,"
-        " ecc_micro long, major_micro long, minor_micro long",
-    )
+    schema = ", ".join(f"{c} {t}" for c, t in cols.items())
+    return _map_grids(spark, sf_dir, regionprops, f"image_id int, {schema}")
 
 
 # SSIM constants as the exact doubles the numpy code computes; repr

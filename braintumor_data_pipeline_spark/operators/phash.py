@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from ..registry import register
 from ..sources.image_io import decode_image
 from ..sources.png import encode_png
-from .segmentation import GRID, _GRID_SQL, grid_images_df
+from .segmentation import GRID, _GRID_SQL, grid_images_df, map_grid_images
 
 #: DCT-II coefficients for the top 8 frequencies over a 32-sample axis,
 #: fixed-point: COEF[u][i] = round(cos(pi*(2i+1)*u/64) * 2^14). The one
@@ -125,46 +125,10 @@ def phash_image_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pix = base.unionByName(variant)
 
-    # r12 packed-grid boundary (same rewrite as segmentation): pack each
-    # image into one row-major int array via a map-side-combinable
-    # collect_list (no per-group Sort), decode a whole Arrow batch with
-    # one flatten+reshape, and PNG-encode per image — 2 boundary cells
-    # per image instead of 4×1024, no per-image pandas DataFrame.
-    packed = (
-        pix.select("pid", (F.col("y") * GRID + F.col("x")).alias("pos"), "v")
-        .groupBy("pid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s["v"],
-            ).alias("varr")
-        )
-    )
+    def encode(_, img):
+        return [(encode_png(img),)]
 
-    def encode_batches(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            flat = batch.column("varr").flatten().to_numpy(
-                zero_copy_only=False
-            )
-            if flat.size != n * GRID * GRID:  # incomplete grid would
-                # silently mis-tile ACROSS images after reshape
-                raise ValueError(
-                    f"packed grid expects {n}x{GRID}x{GRID} pixels, "
-                    f"got {flat.size}"
-                )
-            imgs = flat.astype(np.uint8).reshape(n, GRID, GRID)
-            payloads = [encode_png(imgs[i]) for i in range(n)]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("pid"), pa.array(payloads, pa.binary())],
-                ["pid", "payload"],
-            )
-
-    return packed.mapInArrow(encode_batches, "pid int, payload binary")
+    return map_grid_images(pix, encode, "pid int, payload binary", key="pid")
 
 
 def phash_bands_df(images: DataFrame) -> DataFrame:

@@ -9,10 +9,12 @@ regions — a BFS-order-dependent quirk.
 
 Spark mapping: the distributed axis is ACROSS images (exactly the
 reference's one-DoFn-call-per-file model); within an image the BFS runs
-as vectorized numpy frontier expansion inside the packed-grid
-``mapInArrow`` stage of ``map_grid_images``, the boundary the other
-grid→numpy builders (imaging_udf, app_flow, multimodal) share.
-Arrow moves each image's pixels once; no per-pixel Python.
+as vectorized numpy frontier expansion inside a packed-grid
+``mapInArrow`` stage (``_grid_arrays_df`` + ``_grow_arrow_fn``). Arrow
+moves each image's pixels once; no per-pixel Python. The other
+grid→numpy builders (imaging_udf, app_flow, multimodal, phash) share
+one adapter, ``map_grid_images``; the region-grow modes still carry
+their own pack and decode, which the adapter is meant to replace.
 
 Oracle story: with no iteration cap, the segmented region is exactly the
 connected component of {pixels: |v−seed_v| ≤ t·255} containing the seed —
@@ -183,26 +185,127 @@ def _unpack_grids(col, n: int) -> np.ndarray:
     return flat.astype(np.uint8).reshape(n, GRID, GRID)
 
 
+def _grid_arrays_df(g: DataFrame) -> DataFrame:
+    """(image_id, varr): each complete 32×32 image packed into ONE
+    row-major 1024-int array.
+
+    r12 Python-boundary optimization (guide §4): the old path shuffled
+    per-PIXEL rows into ``groupBy(image_id).applyInPandas`` — an
+    Exchange + per-group Sort, then one pandas DataFrame per image and
+    4 Arrow columns × 1024 rows per image across the boundary. Packing
+    first means the exchange moves map-side-combined partial arrays,
+    the reduce side needs NO sort, and the boundary moves one array
+    cell per image each way. The BFS itself is unchanged numpy."""
+    return (
+        g.select(
+            "image_id", (F.col("y") * GRID + F.col("x")).alias("pos"), "v"
+        )
+        .groupBy("image_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "v"))),
+                lambda s: s["v"],
+            ).alias("varr")
+        )
+    )
+
+
+def _grow_arrow_fn(emit: str, **grow_kwargs):
+    """mapInArrow worker over packed grids: decode every image of a
+    batch with ONE flatten+reshape (no per-row Python), run the numpy
+    BFS per image, emit ``pos`` (admitted positions as an int array),
+    ``area`` (post-morphology pixel count) or ``adaptive``
+    (area, threshold_used)."""
+
+    def fn(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            ids = batch.column("image_id")
+            flat = batch.column("varr").flatten().to_numpy(
+                zero_copy_only=False
+            )
+            if flat.size != n * GRID * GRID:  # incomplete grid would
+                # silently mis-tile ACROSS images after reshape
+                raise ValueError(
+                    f"packed grid expects {n}x{GRID}x{GRID} pixels, "
+                    f"got {flat.size}"
+                )
+            imgs = flat.astype(np.uint8).reshape(n, GRID, GRID)
+            if emit == "pos":
+                pos_lists = []
+                for i in range(n):
+                    mask = region_growing_np(imgs[i], SEED_YX, **grow_kwargs)
+                    ys, xs = np.nonzero(mask)
+                    pos_lists.append(
+                        (ys.astype(np.int32) * GRID + xs.astype(np.int32))
+                    )
+                lens = [len(p) for p in pos_lists]
+                offsets = np.concatenate(
+                    [np.zeros(1, np.int64), np.cumsum(lens)]
+                ).astype(np.int32)
+                values = (
+                    np.concatenate(pos_lists)
+                    if pos_lists
+                    else np.array([], np.int32)
+                )
+                arr = pa.ListArray.from_arrays(
+                    pa.array(offsets, pa.int32()),
+                    pa.array(values, pa.int32()),
+                )
+                yield pa.RecordBatch.from_arrays(
+                    [ids, arr], ["image_id", "pos"]
+                )
+            elif emit == "area":
+                areas = np.empty(n, dtype=np.int64)
+                for i in range(n):
+                    mask = region_growing_np(imgs[i], SEED_YX, **grow_kwargs)
+                    areas[i] = int(mask.sum())
+                yield pa.RecordBatch.from_arrays(
+                    [ids, pa.array(areas, pa.int64())],
+                    ["image_id", "area"],
+                )
+            else:  # adaptive
+                areas = np.empty(n, dtype=np.int64)
+                thrs = np.empty(n, dtype=np.float64)
+                for i in range(n):
+                    mask, thr = region_growing_adaptive_np(
+                        imgs[i], SEED_YX, **grow_kwargs
+                    )
+                    areas[i] = int(mask.sum())
+                    thrs[i] = round(float(thr), 6)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        ids,
+                        pa.array(areas, pa.int64()),
+                        pa.array(thrs, pa.float64()),
+                    ],
+                    ["image_id", "area", "threshold_used"],
+                )
+
+    return fn
+
+
 def _grown_positions(
     g: DataFrame,
     threshold: float,
     connectivity: int,
     max_iterations: int | None,
 ) -> DataFrame:
-    """Packed-grid BFS without morphology → (image_id, y, x) rows."""
-
-    def grow(_, img):
-        mask = region_growing_np(
-            img,
-            SEED_YX,
+    """Shared packed-grid BFS → (image_id, y, x) rows."""
+    grown = _grid_arrays_df(g).mapInArrow(
+        _grow_arrow_fn(
+            "pos",
             threshold=threshold,
             connectivity=connectivity,
             max_iterations=max_iterations,
             morphology=False,
-        )
-        return [(np.flatnonzero(mask).astype(np.int32),)]
-
-    grown = map_grid_images(g, grow, "image_id int, pos array<int>")
+        ),
+        "image_id int, pos array<int>",
+    )
     return grown.select("image_id", F.explode("pos").alias("p")).select(
         "image_id",
         F.expr(f"p div {GRID}").cast("int").alias("y"),
@@ -232,9 +335,10 @@ def _grown_positions(
 def region_grow_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uncapped region growing = seed-connected component of the
     admissible pixel set. Spark runs the numpy BFS per image over
-    packed grid arrays (``map_grid_images``: sort-free aggregate, one
-    array cell per image across the Python boundary); the oracle
-    recomputes the identical set with a DuckDB recursive CTE — two independent formulations of G1."""
+    packed grid arrays (``_grid_arrays_df`` + ``mapInArrow`` — r12:
+    sort-free aggregate, one array cell per image across the Python
+    boundary); the oracle recomputes the identical set with a DuckDB
+    recursive CTE — two independent formulations of G1."""
     g = grid_images_df(spark, sf_dir)
     return _grown_positions(g, THRESHOLD, 4, None)
 
@@ -312,21 +416,18 @@ def region_grow_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grown_area(g: DataFrame, threshold: float) -> DataFrame:
-    """Packed-grid faithful chain (capped BFS + morphology) →
+    """Shared packed-grid faithful chain (capped BFS + morphology) →
     (image_id, area)."""
-
-    def grow(_, img):
-        mask = region_growing_np(
-            img,
-            SEED_YX,
+    return _grid_arrays_df(g).mapInArrow(
+        _grow_arrow_fn(
+            "area",
             threshold=threshold,
             connectivity=8,
             max_iterations=100,
             morphology=True,
-        )
-        return [(int(mask.sum()),)]
-
-    return map_grid_images(g, grow, "image_id int, area long")
+        ),
+        "image_id int, area long",
+    )
 
 
 def _faithful_oracle(threshold: float) -> str:
@@ -467,21 +568,17 @@ def region_grow_capped_morph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _grown_adaptive(g: DataFrame) -> DataFrame:
-    """Packed-grid adaptive wrapper → (image_id, area, threshold_used)."""
-
-    def grow(_, img):
-        mask, thr = region_growing_adaptive_np(
-            img,
-            SEED_YX,
+    """Shared packed-grid adaptive wrapper → (image_id, area,
+    threshold_used)."""
+    return _grid_arrays_df(g).mapInArrow(
+        _grow_arrow_fn(
+            "adaptive",
             initial_threshold=0.05,
             max_threshold=0.3,
             connectivity=4,
             max_iterations=100000,
-        )
-        return [(int(mask.sum()), round(float(thr), 6))]
-
-    return map_grid_images(
-        g, grow, "image_id int, area long, threshold_used double"
+        ),
+        "image_id int, area long, threshold_used double",
     )
 
 

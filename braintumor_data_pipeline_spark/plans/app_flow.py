@@ -93,14 +93,15 @@ def app_analysis_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §3.2 app flow across all grid images — every image decoded
     from its packed grid, the whole chain fused in one Arrow stage."""
 
+    # analyze_image's panel keys, bound to output columns by name
+    cols = (
+        "seed_y", "seed_x", "threshold_used", "area", "perimeter_px",
+        "circularity", "eccentricity", "solidity", "dice_vs_dummy",
+    )
+
     def chain(image_id, img):
         out = analyze_image(img, gt_seed=image_id)
-        return [tuple(round(v, 6) for v in out.values())]
+        return [tuple(round(out[c], 6) for c in cols)]
 
-    # analyze_image's panel keys, in order
-    schema = (
-        "image_id int, seed_y double, seed_x double, threshold_used double,"
-        " area double, perimeter_px double, circularity double,"
-        " eccentricity double, solidity double, dice_vs_dummy double"
-    )
+    schema = "image_id int, " + ", ".join(f"{c} double" for c in cols)
     return map_grid_images(grid_images_df(spark, sf_dir), chain, schema)

@@ -135,10 +135,8 @@ def driver_window(ledger: dict) -> list[str]:
 
     1. HEADLINE;
     2. for each family neither covered by step 1 nor confirmed in the
-       ledger's newest ``ROLLING_COVERAGE_ROUNDS - 1`` rounds, one
-       member: a changed one (step 3) if any — one slot then covers
-       both the family and the change — else the least-recently-
-       checked (never-checked first);
+       ledger's newest ``ROLLING_COVERAGE_ROUNDS - 1`` rounds, its
+       least-recently-checked member (never-checked first);
     3. queries whose ``src_sha`` differs from the ledger's, least-
        recently-checked first;
     4. all other queries, least-recently-checked first."""
@@ -147,12 +145,8 @@ def driver_window(ledger: dict) -> list[str]:
     entries = ledger["queries"]
     last = {n: max(q["checked_rounds"], default=0) for n, q in entries.items()}
 
-    shas = ledger["src_sha"]
-    changed = {n for n in pool if shas.get(n) != src_sha(specs[n].fn)}
-
-    def rank(n: str) -> tuple[bool, int, str]:
-        """Changed builders first, then least-recently-checked."""
-        return n not in changed, last.get(n, 0), n
+    def age(n: str) -> tuple[int, str]:
+        return last.get(n, 0), n
 
     horizon = set(sorted(ledger["rounds"])[-(ROLLING_COVERAGE_ROUNDS - 1):])
     window = list(HEADLINE)
@@ -164,12 +158,16 @@ def driver_window(ledger: dict) -> list[str]:
         if n in specs and horizon & set(q["confirmed_rounds"])
     }
     for fam in sorted({family(specs[n]) for n in pool} - covered):
-        window.append(min((n for n in pool if family(specs[n]) == fam), key=rank))
+        window.append(min((n for n in pool if family(specs[n]) == fam), key=age))
     if len(window) > DRIVER_WINDOW:
         raise RuntimeError(
             f"HEADLINE + family keeps need {len(window)} > {DRIVER_WINDOW} slots"
         )
-    rest = sorted((n for n in pool if n not in window), key=rank)
+    shas = ledger["src_sha"]
+    rest = sorted(
+        (n for n in pool if n not in window),
+        key=lambda n: (shas.get(n) == src_sha(specs[n].fn), *age(n)),
+    )
     return (window + rest)[:DRIVER_WINDOW]
 
 

@@ -279,27 +279,6 @@ def test_rolling_coverage_horizon_anchored_to_ledger(tmp_path):
         registry.load_ledger(str(ledger_path))
 
 
-def test_driver_window_family_keep_prefers_changed_member(tmp_path):
-    """A family that needs a keep is represented by a changed member
-    when it has one — one slot covers the family and the change —
-    and by its least-recently-checked member otherwise."""
-    from tools.gen_window_ledger import build
-
-    members = _skew_members()
-    _write_rounds(
-        tmp_path,
-        {
-            1: {n: _GREEN for n in members},
-            2: {"flagship_avg_by_group": _GREEN},
-            3: {"flagship_avg_by_group": _GREEN},
-        },
-    )
-    ledger = build(root=str(tmp_path))
-    assert _family_in_window(ledger, "skew") == members[:1]
-    ledger["src_sha"][members[-1]] = "0" * 16
-    assert _family_in_window(ledger, "skew") == [members[-1]]
-
-
 def test_src_sha_covers_helpers_and_ignores_line_shifts(tmp_path):
     """src_sha follows same-module helpers transitively and depends on
     neither the function's line number nor comments."""
