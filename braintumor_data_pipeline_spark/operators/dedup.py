@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import persist_tracked
+from ..functions.arrays import explode_nonempty
 from ..registry import register
 from ..sources.fixtures import load_table as _t
 
@@ -482,9 +483,18 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 broadcasts → 1 exchange + 1 broadcast (r12, plan diff in
     plans/r12/). The shingle relation feeds both self-join sides;
     persisting it materializes the tokenize work once. MEMORY_AND_DISK
-    spills gracefully at scale, and Spark's ContextCleaner unpersists
-    when the query's reference is collected."""
-    sh = shingles_with_count_df(spark, sf_dir).transform(persist_tracked)
+    spills gracefully at scale; the persist lives until
+    ``caching.release_tracked()`` or session stop, never until garbage
+    collection (``caching.py``).
+
+    The explode is ``functions.arrays.explode_nonempty``, not
+    ``F.explode``: an inner explode of ``sh_arr`` makes Catalyst infer a
+    ``size(sh_arr) > 0`` filter below it and push it through the
+    projection, which substitutes the whole split/md5 tokenization into
+    the filter and runs it twice per document."""
+    sh = explode_nonempty(
+        shingle_arrays_df(spark, sf_dir), "sh_arr", "shingle", "doc_id", "n_sh"
+    ).transform(persist_tracked)
     a = sh.select(
         F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
     )

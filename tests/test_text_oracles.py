@@ -1,7 +1,7 @@
-"""bm25_search_topk and tfidf_topk_terms against their registered DuckDB
-oracles, with the row / column / value comparison tools/verify_local.py
-applies: on the sf0.01 fixture, and on a documents fixture that adds a
-null-text and an empty-text document."""
+"""bm25_search_topk, tfidf_topk_terms and ngram_jaccard_pairs against
+their registered DuckDB oracles, with the row / column / value comparison
+tools/verify_local.py applies: on the sf0.01 fixture, and on documents
+fixtures that add degenerate texts (null, empty, a single token)."""
 
 from __future__ import annotations
 
@@ -42,23 +42,35 @@ def test_text_query_matches_oracle(spark, name):
     _assert_matches_oracle(spark, SF_ORACLE, name)
 
 
-@pytest.mark.parametrize("name", QUERIES)
-def test_text_query_matches_oracle_null_and_empty_text(spark, tmp_path, name):
-    """A null-text document has no tokens: the oracle's unnest drops it,
-    so it counts toward neither n_docs (bm25) nor any term's df. An
-    empty text is one empty-string token on both engines."""
+def _documents_with(tmp_path, texts) -> str:
+    """A sf0.001 documents copy plus one document per text; its dir."""
     docs = pq.read_table(f"{SF_SMOKE}/documents.parquet")
     base_id = max(docs.column("doc_id").to_pylist()) + 1
     extra = pa.Table.from_pylist(
         [
-            {"doc_id": base_id, "text": None, "lang": "en",
-             "source": "src0", "n_chars": 0},
-            {"doc_id": base_id + 1, "text": "", "lang": "en",
-             "source": "src0", "n_chars": 0},
+            {"doc_id": base_id + i, "text": text, "lang": "en",
+             "source": "src0", "n_chars": len(text or "")}
+            for i, text in enumerate(texts)
         ],
         schema=docs.schema,
     )
     pq.write_table(
         pa.concat_tables([docs, extra]), str(tmp_path / "documents.parquet")
     )
-    _assert_matches_oracle(spark, str(tmp_path), name)
+    return str(tmp_path)
+
+
+@pytest.mark.parametrize("name", QUERIES)
+def test_text_query_matches_oracle_null_and_empty_text(spark, tmp_path, name):
+    """A null-text document has no tokens: the oracle's unnest drops it,
+    so it counts toward neither n_docs (bm25) nor any term's df. An
+    empty text is one empty-string token on both engines."""
+    _assert_matches_oracle(spark, _documents_with(tmp_path, [None, ""]), name)
+
+
+def test_ngram_jaccard_matches_oracle_empty_and_one_token_text(spark, tmp_path):
+    """An empty text and a one-token text have no 3-gram: their shingle
+    arrays are empty, so the explode yields no row for them and they
+    pair with nothing, as the oracle's window-lead shingles say."""
+    sf = _documents_with(tmp_path, ["", "solitary"])
+    _assert_matches_oracle(spark, sf, "ngram_jaccard_pairs")

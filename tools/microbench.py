@@ -1,6 +1,10 @@
 """Per-query micro-benchmark: median-of-N noop-sink wall seconds for
 named registered queries (or bench HEADLINE) in one session — the r12
 optimization round's isolated A/B measurement harness (guide §1.4).
+Beside the wall medians it reports the build phase (the builder call,
+before any action): median build seconds and the median number of
+Spark jobs the builder runs eagerly, counted under a job group — a
+load-insensitive counter for driver-side cost.
 
 Usage: python tools/microbench.py [-n N] [name ...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -34,23 +38,34 @@ def main() -> None:
     spark = get_spark(app_name="microbench")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     specs = registry.all_queries()
+    sc = spark.sparkContext
     out = {}
     for name in names:
         fn = specs[name].fn
-        walls = []
+        walls, builds, build_jobs = [], [], []
         for i in range(n + 1):  # first pass untimed warmup
             release_tracked()
-            spark.sparkContext.setJobDescription(f"microbench:{name}:{i}")
+            group = f"microbench:{name}:{i}"
+            sc.setJobGroup(f"{group}:build", f"{group}:build")
             t0 = time.time()
             df = fn(spark, sf_dir)
+            b = time.time() - t0
+            sc.setJobGroup(f"{group}:exec", f"{group}:exec")
             df.write.format("noop").mode("overwrite").save()
             w = time.time() - t0
             if i > 0:
                 walls.append(w)
+                builds.append(b)
+                sc._jsc.sc().listenerBus().waitUntilEmpty()
+                build_jobs.append(
+                    len(sc.statusTracker().getJobIdsForGroup(f"{group}:build"))
+                )
         out[name] = {
             "median": round(statistics.median(walls), 3),
             "min": round(min(walls), 3),
             "max": round(max(walls), 3),
+            "build_median": round(statistics.median(builds), 3),
+            "build_jobs": statistics.median(build_jobs),
         }
         print(f"{name}: {out[name]}", flush=True)
     load = os.getloadavg()

@@ -23,6 +23,12 @@ Flags:
                   path; ArrowEvalPython / mapInPandas are fine)
   NO-PUSHDOWN     a parquet scan of lineitem/orders/events with a
                   Filter directly above it but empty PushedFilters
+  LAMBDA-FILTER   a Filter whose condition holds a lambda function —
+                  typically the ``size(...) > 0`` InferFiltersFromGenerate
+                  adds below an inner explode, which re-evaluates the
+                  array's whole defining expression (explode through
+                  functions.arrays.explode_nonempty instead). Reported
+                  as info, not critical, while known sites remain.
 
 Usage: python tools/plan_audit.py [sf_dir] [name_filter...]
 Exit code 1 if any CRITICAL finding (GLOBAL-WINDOW, PY-ROW-UDF) fires.
@@ -318,6 +324,15 @@ def _all_nlj_are_scalar_broadcasts(plan: str) -> bool:
     return n_joins > 0 and n_benign > 0 and n_bad == 0
 
 
+def _has_lambda_filter(plan: str) -> bool:
+    """True iff some Filter operator's condition holds a lambda."""
+    for ln in plan.splitlines():
+        op = re.sub(r"^\*\(\d+\)\s*", "", ln.strip(" :+-"))
+        if op.startswith("Filter ") and "lambdafunction" in op:
+            return True
+    return False
+
+
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     names = sys.argv[2:]
@@ -426,6 +441,8 @@ def main() -> int:
             findings.append((tag, not benign))
         if "BatchEvalPython" in plan:
             findings.append(("PY-ROW-UDF", True))
+        if _has_lambda_filter(plan):
+            findings.append(("LAMBDA-FILTER", False))
         if findings:
             for tag, is_critical in findings:
                 sev = "CRIT" if is_critical else "info"
