@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from braintumor_data_pipeline_spark import registry
-from braintumor_data_pipeline_spark.caching import release_tracked
+from braintumor_data_pipeline_spark.caching import query_scope
 from braintumor_data_pipeline_spark.registry import HEADLINE
 from braintumor_data_pipeline_spark.session import get_spark
 
@@ -61,12 +61,12 @@ def _run_suite(spark, sf_dir: str, etl_dir: str) -> dict[str, float]:
     specs = registry.all_queries()
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        release_tracked()  # prior query's helper caches
         fn = specs[name].fn
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        timings[name] = round(time.time() - t0, 3)
+        with query_scope(spark, name):
+            t0 = time.time()
+            df = fn(spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            timings[name] = round(time.time() - t0, 3)
 
     t0 = time.time()
     process_dicom_files(spark, etl_dir).write.format("noop").mode(

@@ -12,8 +12,6 @@ where cv2 uses internal fixed-point paths — deviations are noted).
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 
 # ---------------------------------------------------------------------------
@@ -170,6 +168,30 @@ def clahe(
         + luts[y1, x1, v] * wy * wx
     )
     return np.clip(np.floor(out + 0.5), 0, 255).astype(np.uint8)
+
+
+# ---------------------------------------------------------------------------
+# The per-image DICOM chain (SURVEY S3, X1, X4, X5)
+# ---------------------------------------------------------------------------
+
+
+def process_dicom(data: bytes):
+    """The reference DoFn's transform (`dataflow_pipeline.py:68-88`) on
+    one file's bytes: decode → first window value (MultiValue → first
+    element) → :func:`apply_windowing_pipeline` → CLAHE → blur. Returns
+    (dataset, uint8 image, wc, ww), wc/ww None when the min-max fallback
+    ran. Raises on a file it cannot decode; the caller chooses whether
+    that drops the file or fails the read."""
+    from ..sources.dicom import dcmread
+
+    ds = dcmread(data)
+    wc_vals = ds.window_center
+    ww_vals = ds.window_width
+    wc = wc_vals[0] if wc_vals else None
+    ww = ww_vals[0] if ww_vals else None
+    img_u8, wc, ww = apply_windowing_pipeline(ds.pixel_array, wc, ww)
+    img_u8 = clahe(img_u8, clip_limit=2.0, tile_grid=(8, 8))
+    return ds, gaussian_blur(img_u8, 0.5), wc, ww
 
 
 # ---------------------------------------------------------------------------

@@ -39,12 +39,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.imaging import (
-    apply_windowing_pipeline,
-    clahe,
-    gaussian_blur,
-)
-from ..sources.dicom import dcmread
+from ..functions.imaging import process_dicom
 from ..sources.png import encode_png
 
 # bq_schema.json:1-19 mapped per SURVEY §1.2: the table run_etl appends.
@@ -104,23 +99,9 @@ def _process_partition(
         rows = []
         for path, content in zip(pdf["path"], pdf["content"]):
             try:
-                ds = dcmread(bytes(content))
-                arr = ds.pixel_array
-            except Exception:  # unreadable file → dropped row (F3 analog)
-                continue
-
-            wc_vals = ds.window_center
-            ww_vals = ds.window_width
-            # MultiValue → first element (dataflow_pipeline.py:25-26)
-            wc = wc_vals[0] if wc_vals else None
-            ww = ww_vals[0] if ww_vals else None
-            img_u8, wc, ww = apply_windowing_pipeline(arr, wc, ww)
-            img_u8 = clahe(img_u8, clip_limit=2.0, tile_grid=(8, 8))
-            img_u8 = gaussian_blur(img_u8, 0.5)
-
-            try:
+                ds, img_u8, wc, ww = process_dicom(bytes(content))
                 png_bytes = encode_png(img_u8)
-            except Exception:  # encode failure → silently filtered (F3)
+            except Exception:  # unreadable or unencodable → dropped row (F3)
                 continue
 
             file_name = os.path.basename(path)

@@ -84,8 +84,7 @@ class DicomDataSourceReader(DataSourceReader):
 
     def read(self, partition):
         # runs on executors; decode imports live inside _decode_one so
-        # the class pickles cheaply. MultiValue window → first element;
-        # std is population std, like np.std/A2.
+        # the class pickles cheaply. std is population std, like np.std/A2.
         for fpath in partition.files:
             yield _decode_one(fpath)
 
@@ -93,25 +92,12 @@ class DicomDataSourceReader(DataSourceReader):
 def _decode_one(fpath):
     import numpy as np
 
-    from ..functions.imaging import (
-        apply_windowing_pipeline,
-        clahe,
-        gaussian_blur,
-    )
-    from .dicom import dcmread
+    from ..functions.imaging import process_dicom
 
-    with open(fpath, "rb") as f:
-        ds = dcmread(f.read())
-    img = ds.pixel_array
-    wc_vals = ds.window_center
-    ww_vals = ds.window_width
-    wc = wc_vals[0] if wc_vals else None
-    ww = ww_vals[0] if ww_vals else None
     # stats are taken on the PROCESSED uint8 image (window → CLAHE →
-    # blur), exactly like the reference DoFn (dataflow_pipeline.py:75-88)
-    img_u8, wc, ww = apply_windowing_pipeline(img, wc, ww)
-    img_u8 = clahe(img_u8, clip_limit=2.0, tile_grid=(8, 8))
-    img_u8 = gaussian_blur(img_u8, 0.5)
+    # blur), exactly like the reference DoFn; an unreadable file raises
+    with open(fpath, "rb") as f:
+        ds, img_u8, wc, ww = process_dicom(f.read())
     return (
         fpath,
         os.path.basename(fpath),

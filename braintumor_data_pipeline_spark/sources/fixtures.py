@@ -2,8 +2,9 @@
 
 The reference's relational surface is a single externally-declared BigQuery
 table (``/root/reference/bq_schema.json:1-19``); our engine's relational
-surface is the ten driver parquet tables (TESTDATA.md) registered as temp
-views so both the DataFrame API and ``spark.sql`` reach them.
+surface is the ten fixture parquet tables (TESTDATA.md), read through
+:func:`load_table`; a builder that queries with ``spark.sql`` registers
+the frames it needs as temp views itself.
 
 Scale note: these are plain parquet scans — at 100 TB the same code path
 benefits from parquet predicate pushdown, column pruning, and partition
@@ -150,13 +151,3 @@ def events_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> DataFrame
         .option("maxFilesPerTrigger", "1")
         .parquet(stage_dir)
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every fixture table as a temp view; return the frames."""
-    frames = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        frames[name] = df
-    return frames

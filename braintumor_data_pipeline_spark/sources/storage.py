@@ -15,7 +15,7 @@ import os
 import shutil
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .image_io import decode_image
@@ -75,13 +75,3 @@ def download_image_np(
         return decode_image(bytes(rows[0].content))
     except Exception:
         return None
-
-
-def binary_scan(
-    spark: SparkSession, path_glob: str, suffix: str | None = None
-) -> DataFrame:
-    """S1/S2: the generic blob scan every pipeline starts from."""
-    reader = spark.read.format("binaryFile")
-    if suffix:
-        reader = reader.option("pathGlobFilter", f"*{suffix}")
-    return reader.load(path_glob)

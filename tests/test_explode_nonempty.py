@@ -9,7 +9,7 @@ from collections import Counter
 from pyspark.sql import functions as F
 
 from braintumor_data_pipeline_spark import registry
-from braintumor_data_pipeline_spark.caching import release_tracked
+from braintumor_data_pipeline_spark.caching import query_scope
 from braintumor_data_pipeline_spark.functions.arrays import explode_nonempty
 
 ROWS = [(1, [1, 2]), (2, []), (3, None), (4, [None, 5]), (5, [7, 7])]
@@ -40,8 +40,6 @@ def test_explode_nonempty_infers_no_lambda_filter(spark):
 
 
 def test_ngram_jaccard_plans_no_lambda_filter(spark, sf_dir):
-    try:
+    with query_scope(spark, "ngram_jaccard_pairs"):
         df = registry.all_queries()["ngram_jaccard_pairs"].fn(spark, sf_dir)
         assert not _lambda_filters(df)
-    finally:
-        release_tracked()

@@ -60,14 +60,14 @@ def worker(
         ]
     else:
         names = list(registry.queries_dict())[: registry.DRIVER_WINDOW]
-    from braintumor_data_pipeline_spark.caching import release_tracked
+    from braintumor_data_pipeline_spark.caching import query_scope
 
     results = {}
     for name in names:
-        release_tracked()  # prior query's helper caches
         spec = registry.all_queries()[name]
-        df = spec.fn(spark, sf_dir)
-        results[name] = canon([tuple(r) for r in df.collect()], df.columns)
+        with query_scope(spark, name):
+            df = spec.fn(spark, sf_dir)
+            results[name] = canon([tuple(r) for r in df.collect()], df.columns)
     with open(out_path, "w") as f:
         json.dump(results, f, default=repr)
 

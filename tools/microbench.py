@@ -30,7 +30,7 @@ def main() -> None:
         args = args[2:]
     from braintumor_data_pipeline_spark import registry
     from braintumor_data_pipeline_spark.session import get_spark
-    from braintumor_data_pipeline_spark.caching import release_tracked
+    from braintumor_data_pipeline_spark.caching import query_scope
     import bench
 
     names = args or list(bench.HEADLINE)
@@ -44,15 +44,15 @@ def main() -> None:
         fn = specs[name].fn
         walls, builds, build_jobs = [], [], []
         for i in range(n + 1):  # first pass untimed warmup
-            release_tracked()
             group = f"microbench:{name}:{i}"
-            sc.setJobGroup(f"{group}:build", f"{group}:build")
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            b = time.time() - t0
-            sc.setJobGroup(f"{group}:exec", f"{group}:exec")
-            df.write.format("noop").mode("overwrite").save()
-            w = time.time() - t0
+            with query_scope(spark, group):
+                sc.setJobGroup(f"{group}:build", f"{group}:build")
+                t0 = time.time()
+                df = fn(spark, sf_dir)
+                b = time.time() - t0
+                sc.setJobGroup(f"{group}:exec", f"{group}:exec")
+                df.write.format("noop").mode("overwrite").save()
+                w = time.time() - t0
             if i > 0:
                 walls.append(w)
                 builds.append(b)

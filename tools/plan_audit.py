@@ -350,17 +350,17 @@ def main() -> int:
     )
     qs = registry.all_queries()
     critical = 0
-    from braintumor_data_pipeline_spark.caching import release_tracked
+    from braintumor_data_pipeline_spark.caching import query_scope
 
     for name, entry in sorted(qs.items()):
         if names and not any(f in name for f in names):
             continue
-        release_tracked()  # prior query's helper caches
         try:
-            df = entry.fn(spark, sf)
-            plan = _strip_initial_plans(
-                df._jdf.queryExecution().executedPlan().toString()
-            )
+            with query_scope(spark, name):
+                df = entry.fn(spark, sf)
+                plan = _strip_initial_plans(
+                    df._jdf.queryExecution().executedPlan().toString()
+                )
         except Exception as exc:  # noqa: BLE001
             print(f"ERROR {name}: {exc}")
             critical += 1

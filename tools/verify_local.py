@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from braintumor_data_pipeline_spark import registry
+from braintumor_data_pipeline_spark.caching import query_scope
 from braintumor_data_pipeline_spark.session import get_spark
 from braintumor_data_pipeline_spark.sources.fixtures import TABLES
 
@@ -148,13 +149,7 @@ def main() -> int:
 
     _wd_lock = threading.Lock()
     _wd_epoch = [0]
-    from braintumor_data_pipeline_spark.caching import release_tracked
-
     for name in names:
-        # drop the previous query's tracked helper caches (blocked_*
-        # inputs) so a 366-query sweep doesn't accumulate storage until
-        # GC-driven ContextCleaner reclamation (ADVICE r7)
-        release_tracked()
         spec = specs[name]
         if apply_skips and name in SKIP_SF01:
             n_skip += 1
@@ -196,9 +191,10 @@ def main() -> int:
             if watchdog is not None:
                 watchdog.cancel()
         try:
-            sdf = spec.fn(spark, sf_dir)
-            srows = [tuple(r) for r in sdf.collect()]
-            scols = sdf.columns
+            with query_scope(spark, name):
+                sdf = spec.fn(spark, sf_dir)
+                srows = [tuple(r) for r in sdf.collect()]
+                scols = sdf.columns
         except Exception as exc:  # noqa: BLE001
             n_fail += 1
             failures.append(name)
