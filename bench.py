@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import statistics
 import sys
 import time
@@ -107,7 +108,6 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="braintumor-bench")
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # JVM/codegen warmup
-    etl_dir = _make_etl_inputs()
 
     # box-load self-diagnosis (VERDICT r7 task 4): record the load the
     # numbers were taken under, so drift is attributable without a
@@ -121,9 +121,12 @@ def main() -> None:
     # r3's spread) — running it off the books makes the 3 timed passes
     # measure steady state, so `spread` reflects real variance and a
     # sub-second per-query regression is detectable.
-    _run_suite(spark, sf_dir, etl_dir)
-
-    passes = [_run_suite(spark, sf_dir, etl_dir) for _ in range(n_runs)]
+    etl_dir = _make_etl_inputs()
+    try:
+        _run_suite(spark, sf_dir, etl_dir)
+        passes = [_run_suite(spark, sf_dir, etl_dir) for _ in range(n_runs)]
+    finally:
+        shutil.rmtree(etl_dir, ignore_errors=True)
 
     queries = {
         name: round(statistics.median(p[name] for p in passes), 3)

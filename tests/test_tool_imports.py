@@ -74,6 +74,6 @@ def test_scan_sees_function_local_imports():
     stale sub-command import hides."""
     found = _package_imports(os.path.join(ROOT, "tools", "scaling_probe.py"))
     assert any(
-        mod.endswith(".segmentation") and name == "_grown_positions"
+        mod.endswith(".similarity") and name == "_kcenter_loop"
         for _, mod, name in found
     ), found

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -76,26 +77,29 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--all"]
     scope = "all" if "--all" in sys.argv[1:] else "window"
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    tmp = tempfile.mkdtemp(prefix="determinism_")
     if scope == "all":
         passes = [(5, "on"), (32, "on")]
     else:
         passes = [(5, "on"), (32, "on"), (17, "off")]  # AQE off = driver proxy
-    outs = []
-    for n_part, aqe in passes:
-        out = os.path.join(tmp, f"pass_{n_part}_{aqe}.json")
-        outs.append(out)
-        rc = subprocess.call(
-            [
-                sys.executable, __file__, "--worker",
-                sf_dir, str(n_part), out, aqe, scope,
-            ]
-        )
-        if rc != 0:
-            print(f"worker n_part={n_part} aqe={aqe} failed rc={rc}")
-            return 1
-    ref = json.load(open(outs[0]))
-    others = [json.load(open(o)) for o in outs[1:]]
+    tmp = tempfile.mkdtemp(prefix="determinism_")
+    try:
+        results = []
+        for n_part, aqe in passes:
+            out = os.path.join(tmp, f"pass_{n_part}_{aqe}.json")
+            rc = subprocess.call(
+                [
+                    sys.executable, __file__, "--worker",
+                    sf_dir, str(n_part), out, aqe, scope,
+                ]
+            )
+            if rc != 0:
+                print(f"worker n_part={n_part} aqe={aqe} failed rc={rc}")
+                return 1
+            with open(out) as f:
+                results.append(json.load(f))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    ref, others = results[0], results[1:]
     n_fail = 0
     for name in ref:
         if any(o[name] != ref[name] for o in others):

@@ -21,7 +21,8 @@ Runs, in order, and fails fast on the first red:
                           AQE-off — over the exact window the driver
                           is about to hash; VERDICT r11 task 7)
   6. physical-plan audit  tools/plan_audit.py  (full catalog, sf0.001)
-  7. scale-probe bands    tools/scaling_probe.py quick (x1/x4 ratios)
+  7. scale-probe bands    tools/scaling_probe.py quick (six probes,
+                          x1/x4 ratios; kcenter x1 step walls)
   8. correctness gate     tools/verify_local.py /root/testdata/sf0.01
 
 The FULL pytest suite is intentionally not included (it is its own CI
@@ -84,9 +85,10 @@ STEPS = [
     ),
     ("plan audit", [sys.executable, "tools/plan_audit.py", "/root/testdata/sf0.001"]),
     # quick scale-probe pass (VERDICT r6 task 6): x1/x4 factors of the
-    # four probes, per-unit ratios asserted against stored bands so a
+    # six probes (kcenter at x1: its band is the step-wall ratio within
+    # one run), per-unit ratios asserted against stored bands so a
     # formulation change that reintroduces a superlinear stage fails
-    # THIS gate, not the next judge (~5 min)
+    # THIS gate, not the next judge (~10 min on 4 cores)
     ("scale-probe bands", [sys.executable, "tools/scaling_probe.py", "quick"]),
     ("correctness gate", [sys.executable, "tools/verify_local.py", "/root/testdata/sf0.01"]),
 ]

@@ -1,5 +1,5 @@
 """Per-query micro-benchmark: median-of-N noop-sink wall seconds for
-named registered queries (or bench HEADLINE) in one session — the r12
+named registered queries (or registry.HEADLINE) in one session — the r12
 optimization round's isolated A/B measurement harness (guide §1.4).
 Beside the wall medians it reports the build phase (the builder call,
 before any action): median build seconds and the median number of
@@ -31,9 +31,8 @@ def main() -> None:
     from braintumor_data_pipeline_spark import registry
     from braintumor_data_pipeline_spark.session import get_spark
     from braintumor_data_pipeline_spark.caching import query_scope
-    import bench
 
-    names = args or list(bench.HEADLINE)
+    names = args or list(registry.HEADLINE)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="microbench")
     spark.range(1_000_000).selectExpr("sum(id)").collect()

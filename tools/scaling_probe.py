@@ -1,27 +1,25 @@
-"""Empirical scaling probe: how do the headline aggregates scale as the
-fact table grows N×?
+"""Scale-probe gate: do the formulations the 100 TB argument rests on
+stay linear as their input grows?
 
-The 100 TB argument in SCALE.md is structural (shuffle shapes, partial
-aggregation, broadcast joins); this probe adds measurement. It
-replicates the sf0.1 lineitem N× (union of N shifted copies — key
-ranges offset so join/group cardinalities scale with the data, the way
-a bigger SF would), writes it to a temp parquet, and times a
-scan-heavy aggregate (pricing_summary shape) and a shuffle-heavy
-group-by at each N. Near-linear wall-clock growth with flat per-row
-cost is the local-mode signature of a plan whose cost is dominated by
-the scan + map-side combine — the shape that scales out on a cluster.
+The argument in SCALE.md is structural (shuffle shapes, partial
+aggregation, bounded buckets); these probes add measurement. Each probe
+sub-command grows its input by the given factors (a zero-I/O synthetic
+corpus over ``spark.range``; graph-cc replicates sf0.1 lineitem with
+offset keys), times the stage under test and prints one JSON line per
+factor. ``quick`` runs the six probes at x1/x4 (kcenter at x1), each in
+its own process, and checks their per-unit ratios against the stored
+bands (``check_bands``); ``tools/end_of_round.py`` runs it.
 
-Usage: python tools/scaling_probe.py [sf_dir] [factors...]
-Writes one JSON line per factor; temp data is removed afterwards.
+Usage: python tools/scaling_probe.py SUB-COMMAND [factors...]
+  SUB-COMMAND: quick, blocked-rank, verify-skew, graph-cc, semdedup,
+  dedup-skew, kcenter
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,77 +28,9 @@ from pyspark.sql import functions as F
 
 from braintumor_data_pipeline_spark.session import get_spark
 from braintumor_data_pipeline_spark.sources.fixtures import load_table
-from braintumor_data_pipeline_spark.functions.money import dec_col
 
-
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    factors = [int(x) for x in sys.argv[2:]] or [1, 4, 16]
-    spark = get_spark(app_name="scaling-probe")
-    base = load_table(spark, sf_dir, "lineitem")
-    n_base = base.count()
-    tmp = tempfile.mkdtemp(prefix="scaling_probe_")
-    try:
-        for n in factors:
-            path = os.path.join(tmp, f"x{n}")
-            copies = [
-                base.withColumn(
-                    "l_orderkey", F.col("l_orderkey") + F.lit(i * 10_000_000)
-                )
-                for i in range(n)
-            ]
-            df = copies[0]
-            for c in copies[1:]:
-                df = df.unionAll(c)
-            df.write.mode("overwrite").parquet(path)
-            li = spark.read.parquet(path)
-
-            t0 = time.time()
-            li.filter(F.col("l_shipdate") <= "1998-09-02").groupBy(
-                "l_returnflag", "l_linestatus"
-            ).agg(
-                F.sum(dec_col("l_quantity")).alias("sq"),
-                F.sum(dec_col("l_extendedprice")).alias("sp"),
-                F.count("*").alias("c"),
-            ).collect()
-            t_scan = time.time() - t0
-
-            t0 = time.time()
-            li.groupBy("l_orderkey").agg(
-                F.count("*").alias("c"), F.max("l_extendedprice").alias("m")
-            ).agg(F.count("*"), F.sum("c")).collect()
-            t_shuffle = time.time() - t0
-
-            rows = n_base * n
-            print(
-                json.dumps(
-                    {
-                        "factor": n,
-                        "rows": rows,
-                        "scan_agg_s": round(t_scan, 3),
-                        "shuffle_agg_s": round(t_shuffle, 3),
-                        "scan_ns_per_row": round(t_scan / rows * 1e9, 1),
-                        "shuffle_ns_per_row": round(t_shuffle / rows * 1e9, 1),
-                    }
-                )
-            )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return 0
-
-
-# ---------------------------------------------------------------------------
-# Headline-shape probe (VERDICT r3 task 3): the 5 heaviest headline
-# PLAN SHAPES, generator-fed (zero I/O — sources/generator.py style LCG
-# columns over spark.range) at 1×/10×/50× the sf0.1 row counts. Each
-# builder mirrors its registered query's physical structure (same
-# operator chain, same broadcast/shuffle skeleton); wall-time curves go
-# to SCALE.md. Near-linear growth = the plan's cost is scan + map-side
-# combine, the shape that scales out.
-#
-# Usage: python tools/scaling_probe.py headline [factors...]
-# ---------------------------------------------------------------------------
-
+# LCG-style column mixing: deterministic pseudo-random integer columns
+# over spark.range, so the synthetic corpora cost no I/O.
 _MIX_A = 2_654_435_761
 _MIX_C = 1_013_904_223
 _MIX_M = 2_147_483_648
@@ -108,202 +38,6 @@ _MIX_M = 2_147_483_648
 
 def _mix(col, salt: int):
     return (col * _MIX_A + _MIX_C + salt) % _MIX_M
-
-
-def _star_join_shape(spark, s: int):
-    """star_join_revenue: fact scan → 2 broadcast dim joins → 1-shuffle
-    group agg (600k·s fact rows, fixed-size broadcastable dims)."""
-    n = 600_000 * s
-    fact = spark.range(n).select(
-        F.col("id").alias("orderkey"),
-        (_mix(F.col("id"), 1) % 25).alias("nation_id"),
-        (_mix(F.col("id"), 2) % 1000).alias("supp_id"),
-        (100 + _mix(F.col("id"), 3) % 99900).alias("price_cents"),
-    )
-    nation = spark.range(25).select(
-        F.col("id").alias("nation_id"),
-        (F.col("id") % 5).alias("region_id"),
-    )
-    supp = spark.range(1000).select(
-        F.col("id").alias("supp_id"),
-        (_mix(F.col("id"), 9) % 7).alias("supp_class"),
-    )
-    return (
-        fact.join(F.broadcast(nation), "nation_id")
-        .join(F.broadcast(supp), "supp_id")
-        .groupBy("region_id", "supp_class")
-        .agg(F.count("*").alias("n"), F.sum("price_cents").alias("cents"))
-    )
-
-
-def _minhash_groups_shape(spark, s: int):
-    """minhash_dedup_groups: token explode → k-affine min-agg per doc →
-    signature hash → group-by-signature (5k·s docs × 50 tokens; ~25%
-    duplicate docs so groups actually form)."""
-    from braintumor_data_pipeline_spark.operators.dedup import (
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_K,
-    )
-
-    docs = 5_000 * s
-    tok_per_doc = 50
-    distinct = (docs * 3) // 4
-    t = spark.range(docs * tok_per_doc).select(
-        (F.col("id") / tok_per_doc).cast("long").alias("doc_id"),
-        (F.col("id") % tok_per_doc).alias("pos"),
-    )
-    # duplicate docs: token stream depends on doc_id % distinct
-    h0 = _mix((F.col("doc_id") % distinct) * tok_per_doc + F.col("pos"), 77)
-    hs = F.array(
-        *[
-            (F.lit(MINHASH_A[i]) * h0 + F.lit(MINHASH_B[i])) % F.lit(1 << 32)
-            for i in range(MINHASH_K)
-        ]
-    )
-    wide = (
-        t.select("doc_id", hs.alias("hs"))
-        .groupBy("doc_id")
-        .agg(*[F.min(F.col("hs")[i]).alias(f"m{i}") for i in range(MINHASH_K)])
-    )
-    sig = F.md5(
-        F.concat_ws(",", *[F.col(f"m{i}").cast("string") for i in range(MINHASH_K)])
-    )
-    return (
-        wide.select("doc_id", sig.alias("sig_hash"))
-        .groupBy("sig_hash")
-        .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n_members"))
-    )
-
-
-def _ngram_pairs_shape(spark, s: int):
-    """ngram_jaccard_pairs: shingle inverted index → candidate self-join
-    → pair intersection counts → Jaccard filter (5k·s docs × 40
-    shingles; bounded dup-cluster size keeps pairs linear-ish, as the
-    registered query's banding does)."""
-    docs = 5_000 * s
-    sh_per_doc = 40
-    distinct = (docs * 9) // 10
-    t = spark.range(docs * sh_per_doc).select(
-        (F.col("id") / sh_per_doc).cast("long").alias("doc_id"),
-        _mix(
-            (F.col("id") % (sh_per_doc * distinct)), 123
-        ).alias("shingle"),
-    )
-    sh = t.distinct().persist()
-    counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("n_common"))
-    )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    out = (
-        inter.join(ca, F.col("da") == F.col("ca.doc_id"))
-        .join(cb, F.col("db") == F.col("cb.doc_id"))
-        .select(
-            "da",
-            "db",
-            (
-                F.col("n_common")
-                / (F.col("ca.n_sh") + F.col("cb.n_sh") - F.col("n_common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.8)
-    )
-    return out
-
-
-def _region_grow_shape(spark, s: int):
-    """region_grow_component: pixel grids → packed-grid numpy BFS
-    (146·s images of 1024 px, the registered query's boundary and
-    kernel)."""
-    from braintumor_data_pipeline_spark.operators.segmentation import (
-        THRESHOLD,
-        _grown_positions,
-    )
-
-    images = 146 * s
-    px = spark.range(images * 1024).select(
-        (F.col("id") / 1024).cast("int").alias("image_id"),
-        ((F.col("id") % 1024) / 32).cast("int").alias("y"),
-        (F.col("id") % 32).cast("int").alias("x"),
-        (_mix(F.col("id"), 31) % 256).cast("int").alias("v"),
-    )
-    return _grown_positions(px, THRESHOLD, 4, None)
-
-
-def _session_windows_shape(spark, s: int):
-    """events_session_30m: session_window group-agg (100k·s events over
-    2k·s users across 30 days)."""
-    n = 100_000 * s
-    users = 2_000 * s
-    ev = spark.range(n).select(
-        (_mix(F.col("id"), 5) % users).alias("user_id"),
-        F.timestamp_seconds(
-            F.lit(1_704_067_200) + _mix(F.col("id"), 6) % (30 * 86_400)
-        ).alias("ts"),
-        (_mix(F.col("id"), 8) % 10_000).alias("cents"),
-    )
-    return (
-        ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.sum("cents").alias("cents"))
-        .select("user_id", F.col("w.start").alias("start"), "n_events", "cents")
-    )
-
-
-def _repeated_spans_shape(spark, s: int):
-    """repeated_span_detection: window-hash grain → ≥2-docs screen →
-    semi-join back → per-doc island merge (5k·s docs × 60 token
-    windows; ~20% of window hashes shared across docs so spans form).
-    Mirrors the registered query's plan: one content-keyed groupBy
-    (never pair enumeration) + doc-partitioned windows."""
-    from pyspark.sql import Window as W
-
-    docs = 5_000 * s
-    win_per_doc = 60
-    shared = (docs * win_per_doc) // 5
-    t = spark.range(docs * win_per_doc).select(
-        (F.col("id") / win_per_doc).cast("long").alias("doc_id"),
-        (F.col("id") % win_per_doc).alias("start_pos"),
-        ((F.col("id") % win_per_doc) + 7).alias("end_pos"),
-        _mix(F.col("id") % shared, 211).alias("h"),
-    )
-    t = t.persist()
-    rep = (
-        t.groupBy("h")
-        .agg(F.count_distinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= 2)
-        .select("h")
-    )
-    hits = t.join(rep, "h", "left_semi")
-    w_prev = (
-        W.partitionBy("doc_id")
-        .orderBy("start_pos")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    w_run = (
-        W.partitionBy("doc_id")
-        .orderBy("start_pos")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    islands = hits.withColumn(
-        "is_new",
-        F.when(
-            F.col("start_pos")
-            > F.coalesce(F.max("end_pos").over(w_prev), F.lit(-1)) + 1,
-            1,
-        ).otherwise(0),
-    ).withColumn("island_id", F.sum("is_new").over(w_run))
-    return (
-        islands.groupBy("doc_id", "island_id")
-        .agg((F.max("end_pos") - F.min("start_pos") + 1).alias("span_len"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_spans"), F.sum("span_len").alias("rep_toks"))
-    )
 
 
 def _clustered_corpus(spark, s: int):
@@ -529,46 +263,6 @@ def main_dedup_skew() -> int:
         )
     return 0
 
-
-HEADLINE_SHAPES = {
-    "star_join": _star_join_shape,
-    "minhash_groups": _minhash_groups_shape,
-    "ngram_pairs": _ngram_pairs_shape,
-    "region_grow": _region_grow_shape,
-    "session_windows": _session_windows_shape,
-    "repeated_spans": _repeated_spans_shape,
-}
-
-
-def main_headline() -> int:
-    factors = [int(x) for x in sys.argv[2:]] or [1, 10, 50]
-    spark = get_spark(app_name="headline-scaling-probe")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
-    for name, build in HEADLINE_SHAPES.items():
-        # untimed per-shape warmup: the first execution of a shape pays
-        # whole-stage-codegen compilation, which would otherwise be
-        # billed entirely to the smallest factor and mask the curve
-        build(spark, 1).write.format("noop").mode("overwrite").save()
-        timings = {}
-        rates = {}
-        for s in factors:
-            t0 = time.time()
-            build(spark, s).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            timings[f"x{s}"] = round(dt, 3)
-            rates[f"x{s}"] = round(dt / s, 3)  # per-unit-scale cost
-        print(
-            json.dumps(
-                {
-                    "shape": name,
-                    "factors": factors,
-                    "wall_s": timings,
-                    "wall_per_scale_s": rates,
-                }
-            ),
-            flush=True,
-        )
-    return 0
 
 
 def main_verify_skew() -> int:
@@ -1063,11 +757,11 @@ def main_semdedup() -> int:
 # ---------------------------------------------------------------------------
 # Quick probe gate (VERDICT r6 task 6): the release-gate pass that keeps
 # a future formulation change from silently reintroducing a superlinear
-# stage. Runs the four scale probes at x1/x4 only and asserts the
-# scale-relevant ratios against stored bands. Bands are deliberately
-# loose (2-2.5x) — they catch a complexity-class regression (a linear
-# stage going quadratic shows up as ~4x per-unit growth at x4), not
-# machine noise.
+# stage. Runs the six scale probes at x1/x4 (kcenter at x1 only) and
+# asserts the scale-relevant ratios against stored bands. Bands are
+# deliberately loose (2-2.5x) — they catch a complexity-class regression
+# (a linear stage going quadratic shows up as ~4x per-unit growth at
+# x4), not machine noise.
 #
 # Usage: python tools/scaling_probe.py quick
 # ---------------------------------------------------------------------------
@@ -1166,14 +860,7 @@ def main_quick() -> int:
 
     here = os.path.abspath(__file__)
     results: dict = {}
-    for probe in (
-        "blocked-rank",
-        "verify-skew",
-        "graph-cc",
-        "semdedup",
-        "dedup-skew",
-        "kcenter",
-    ):
+    for probe in PROBES:
         args = ["1"] if probe == "kcenter" else ["1", "4"]
         proc = subprocess.run(
             [sys.executable, here, probe, *args],
@@ -1194,577 +881,112 @@ def main_quick() -> int:
         for r in rows:
             print(json.dumps(r), flush=True)
 
-    failures = []
-
-    def ratio(probe, metric, key=None):
-        rows = [
-            r
-            for r in results[probe]
-            if r.get("factor") in (1, 4)
-            and (key is None or all(r.get(k) == v for k, v in key.items()))
-        ]
-        x1 = next(r[metric] for r in rows if r["factor"] == 1)
-        x4 = next(r[metric] for r in rows if r["factor"] == 4)
-        return x4 / max(x1, 1e-9), x1, x4
-
-    for (probe, metric), band in QUICK_BANDS.items():
-        keys = [{"dist": d} for d in ("uniform", "clustered")] if probe == "blocked-rank" else [None]
-        for key in keys:
-            r, x1, x4 = ratio(probe, metric, key)
-            tag = f"{probe}/{metric}" + (f"[{key['dist']}]" if key else "")
-            if x1 < QUICK_ABS_FLOOR and x4 < QUICK_ABS_FLOOR:
-                print(
-                    f"ok   {tag}: both endpoints < {QUICK_ABS_FLOOR} "
-                    f"({x1} -> {x4}) — below signal floor, band skipped"
-                )
-                continue
-            if r > band:
-                failures.append(
-                    f"{tag}: per-unit ratio x4/x1 = {r:.2f} > {band} "
-                    f"({x1} -> {x4}) — superlinear stage reintroduced?"
-                )
-            else:
-                print(f"ok   {tag}: x4/x1 = {r:.2f} <= {band}")
-
-    g, p1, p4 = ratio("semdedup", "cand_pairs")
-    if g > SEMDEDUP_PAIR_GROWTH_MAX:
-        failures.append(
-            f"semdedup/cand_pairs growth {g:.2f} > "
-            f"{SEMDEDUP_PAIR_GROWTH_MAX} ({p1} -> {p4}) — K no longer "
-            "scaling with N?"
-        )
-    else:
-        print(f"ok   semdedup/cand_pairs growth = {g:.2f}")
-    rr, r1, r4 = ratio("graph-cc", "rounds")
-    if r4 > r1 + GRAPH_CC_EXTRA_ROUNDS_MAX:
-        failures.append(
-            f"graph-cc rounds grew {r1} -> {r4} — convergence no longer "
-            "volume-free?"
-        )
-    else:
-        print(f"ok   graph-cc rounds: {r1} -> {r4}")
-
-    kc = results["kcenter"][0]
-    kr = kc["wall_last_over_first"]
-    if kr > KCENTER_STEP_RATIO_MAX:
-        failures.append(
-            f"kcenter wall_last_over_first = {kr} > "
-            f"{KCENTER_STEP_RATIO_MAX} ({kc['step_walls_s']}) — lazy "
-            "lineage replay reintroduced?"
-        )
-    else:
-        print(f"ok   kcenter step walls flat: ratio {kr}")
-
+    verdicts = band_verdicts(results)
+    for ok, line in verdicts:
+        if ok:
+            print(f"ok   {line}")
+    failures = [line for ok, line in verdicts if not ok]
     for f in failures:
         print(f"RED  {f}")
     print(f"\n{len(failures)} probe-band violation(s)")
     return 1 if failures else 0
 
 
-def main_store_probe() -> int:
-    """Store-vs-recompute incremental dedup (SCALE.md r9, VERDICT r8
-    item 7): on the s-scaled clustered corpus, build the MinHash band
-    store ONCE (bucketed, bucket counts at layout time — the
-    ``minhash_store_probe_dedup`` layout), then time (a) probing a
-    FIXED 625-doc batch against the prebuilt store vs (b) recomputing
-    BOTH sides' signatures per run (the ``incremental_dedup_new_batch``
-    shape, same cap). The probe must stay ~flat as the corpus grows —
-    its cost is batch signatures + a scan of the 4-rows/doc store —
-    while recompute pays full corpus re-tokenization every run.
-
-    Usage: python tools/scaling_probe.py store-probe [factors...]
-    """
-    import tempfile
-
-    from braintumor_data_pipeline_spark.operators.dedup import (
-        BAND_ROWS,
-        LSH_BUCKET_CAP as _CAP,
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_K,
-    )
-
-    factors = [int(x) for x in sys.argv[2:]] or [1, 4, 16]
-    spark = get_spark(app_name="store-probe")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
-
-    n_bands = MINHASH_K // BAND_ROWS
-    # pay the REAL per-token base-hash cost (one md5 per token, as the
-    # operator does over text) — the synthetic corpus's precomputed
-    # integer h0 would otherwise make corpus re-signature nearly free
-    # and hide exactly the cost the store exists to amortize
-    h0_md5 = F.conv(
-        F.substring(F.md5(F.col("h0").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    hs = F.array(
-        *[
-            (F.lit(MINHASH_A[i]) * h0_md5 + F.lit(MINHASH_B[i]))
-            % F.lit(1 << 32)
-            for i in range(MINHASH_K)
-        ]
-    )
-
-    def bands_from_tokens(tok):
-        wide = (
-            tok.select("doc_id", hs.alias("hs"))
-            .groupBy("doc_id")
-            .agg(
-                *[
-                    F.min(F.col("hs")[i]).alias(f"m{i}")
-                    for i in range(MINHASH_K)
-                ]
-            )
-        )
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"m{i}").cast("string")
-                                for i in range(
-                                    b * BAND_ROWS, (b + 1) * BAND_ROWS
-                                )
-                            ],
-                        )
-                    ).alias("band_sig"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return wide.select("doc_id", F.explode(arr).alias("bs")).select(
-            "doc_id",
-            F.col("bs.band").alias("band"),
-            F.col("bs.band_sig").alias("band_sig"),
-        )
-
-    def capped_probe(batch_bands, store_bands_with_n):
-        s_side = store_bands_with_n.filter(
-            F.col("bucket_n") <= _CAP
-        ).alias("s")
-        return (
-            batch_bands.alias("b")
-            .join(
-                s_side,
-                (F.col("b.band") == F.col("s.band"))
-                & (F.col("b.band_sig") == F.col("s.band_sig")),
-                "left",
-            )
-            .groupBy(F.col("b.doc_id"))
-            .agg(
-                F.size(F.collect_set(F.col("s.doc_id"))).alias("n_matches")
-            )
-        )
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS store_probe_wh")
-    base = tempfile.mkdtemp(prefix="braintumor_store_probe_")
-    # untimed warmup of both plan shapes
-    wtok = _clustered_corpus(spark, 1)
-    bands_from_tokens(wtok.filter(F.col("doc_id") % 97 == 0)).count()
-
-    for s in factors:
-        tok = _clustered_corpus(spark, s).persist()
-        tok.count()
-        # fixed 625-doc batch drawn from the SMALL-cluster tier
-        # ([docs/4, docs/4 + docs/8) — 4-doc clusters): every batch doc
-        # (id ≡ 0 mod 8 = first member of an even cluster) has exactly
-        # 3 store siblings, so the match path is exercised (the giant
-        # clusters' buckets are cap-dropped and contribute nothing)
-        lo = (5_000 * s) // 4
-        is_batch = (
-            (F.col("doc_id") % 8 == 0)
-            & (F.col("doc_id") >= lo)
-            & (F.col("doc_id") < lo + 5_000)
-        )
-        # the batch ARRIVES as its own input in production — extracting
-        # it from the corpus is not part of the probe's cost
-        batch_tok = tok.filter(is_batch).persist()
-        batch_tok.count()
-
-        # layout build (amortized once per corpus, reported not banded)
-        t0 = time.time()
-        sb = bands_from_tokens(tok.filter(~is_batch))
-        counts = sb.groupBy("band", "band_sig").agg(
-            F.count("*").alias("bucket_n")
-        )
-        table = f"store_probe_wh.bands_x{s}"
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        (
-            sb.join(counts, ["band", "band_sig"])
-            .select("doc_id", "band", "band_sig", "bucket_n")
-            .write.mode("overwrite")
-            .bucketBy(8, "band", "band_sig")
-            .sortBy("band", "band_sig")
-            .option("path", os.path.join(base, f"x{s}"))
-            .saveAsTable(table)
-        )
-        build_s = time.time() - t0
-
-        # (a) probe the prebuilt store: batch signatures only.
-        # Aggregate a value DERIVED FROM THE STORE SIDE — a bare
-        # count() of the per-doc groups lets Catalyst eliminate the
-        # left join (group count is join-invariant) and the store is
-        # never scanned, timing nothing.
-        t0 = time.time()
-        n_probe = (
-            capped_probe(bands_from_tokens(batch_tok), spark.table(table))
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum("n_matches").alias("total_matches"),
-            )
-            .collect()[0]
-        )
-        probe_s = time.time() - t0
-
-        # (b) recompute both sides from tokens (no store)
-        t0 = time.time()
-        all_bands = bands_from_tokens(tok)
-        store_bands = all_bands.filter(~is_batch)
-        counts2 = store_bands.groupBy("band", "band_sig").agg(
-            F.count("*").alias("bucket_n")
-        )
-        n_re = (
-            capped_probe(
-                all_bands.filter(is_batch),
-                store_bands.join(counts2, ["band", "band_sig"]),
-            )
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum("n_matches").alias("total_matches"),
-            )
-            .collect()[0]
-        )
-        recompute_s = time.time() - t0
-
-        batch_tok.unpersist()
-        tok.unpersist()
-        assert tuple(n_probe) == tuple(n_re), (n_probe, n_re)
-        print(
-            json.dumps(
-                {
-                    "shape": "minhash_store_probe",
-                    "factor": s,
-                    "corpus_docs": 5_000 * s,
-                    "batch_docs": 625,
-                    "store_build_s": round(build_s, 3),
-                    "probe_s": round(probe_s, 3),
-                    "recompute_both_s": round(recompute_s, 3),
-                    "recompute_over_probe": round(
-                        recompute_s / max(probe_s, 1e-9), 2
-                    ),
-                    "batch_rows_out": int(n_probe["rows"]),
-                    "total_matches": int(n_probe["total_matches"]),
-                }
-            ),
-            flush=True,
-        )
-    return 0
+def _ratio(results: dict, probe: str, metric: str, key=None):
+    rows = [
+        r
+        for r in results[probe]
+        if r.get("factor") in (1, 4)
+        and (key is None or all(r.get(k) == v for k, v in key.items()))
+    ]
+    x1 = next(r[metric] for r in rows if r["factor"] == 1)
+    x4 = next(r[metric] for r in rows if r["factor"] == 4)
+    return x4 / max(x1, 1e-9), x1, x4
 
 
-def main_store_probe_append() -> int:
-    """Post-append probe degradation + compaction trigger (VERDICT r9
-    task 8): the r9 store-probe table measures a BUILD-ONCE store; the
-    lifecycle appends instead, and every bucketed append adds one file
-    per (task × bucket) — the classic small-file decay of an append-only
-    layout. This probe holds the corpus FIXED, appends daily slices to
-    the rows relation, times the (assert-identical) capped probe after
-    0/1/2/4/8 appends, then compacts (one fresh bucketed rewrite of the
-    same rows) and times again — the gap between the appended and
-    compacted probe is the compaction trigger band SCALE.md records.
+def band_verdicts(results: dict) -> list[tuple[bool, str]]:
+    """``(passed, line)`` for every band, in check order, from the
+    probes' JSON rows keyed by probe name. No Spark."""
+    out = []
+    for (probe, metric), band in QUICK_BANDS.items():
+        keys = [{"dist": d} for d in ("uniform", "clustered")] if probe == "blocked-rank" else [None]
+        for key in keys:
+            r, x1, x4 = _ratio(results, probe, metric, key)
+            tag = f"{probe}/{metric}" + (f"[{key['dist']}]" if key else "")
+            if x1 < QUICK_ABS_FLOOR and x4 < QUICK_ABS_FLOOR:
+                out.append((
+                    True,
+                    f"{tag}: both endpoints < {QUICK_ABS_FLOOR} "
+                    f"({x1} -> {x4}) — below signal floor, band skipped",
+                ))
+            elif r > band:
+                out.append((
+                    False,
+                    f"{tag}: per-unit ratio x4/x1 = {r:.2f} > {band} "
+                    f"({x1} -> {x4}) — superlinear stage reintroduced?",
+                ))
+            else:
+                out.append((True, f"{tag}: x4/x1 = {r:.2f} <= {band}"))
 
-    Usage: python tools/scaling_probe.py store-probe-append [factor]
-    """
-    import shutil
-    import tempfile
+    g, p1, p4 = _ratio(results, "semdedup", "cand_pairs")
+    if g > SEMDEDUP_PAIR_GROWTH_MAX:
+        out.append((
+            False,
+            f"semdedup/cand_pairs growth {g:.2f} > "
+            f"{SEMDEDUP_PAIR_GROWTH_MAX} ({p1} -> {p4}) — K no longer "
+            "scaling with N?",
+        ))
+    else:
+        out.append((True, f"semdedup/cand_pairs growth = {g:.2f}"))
+    rr, r1, r4 = _ratio(results, "graph-cc", "rounds")
+    if r4 > r1 + GRAPH_CC_EXTRA_ROUNDS_MAX:
+        out.append((
+            False,
+            f"graph-cc rounds grew {r1} -> {r4} — convergence no longer "
+            "volume-free?",
+        ))
+    else:
+        out.append((True, f"graph-cc rounds: {r1} -> {r4}"))
 
-    from braintumor_data_pipeline_spark.operators.dedup import (
-        BAND_ROWS,
-        LSH_BUCKET_CAP as _CAP,
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_K,
-    )
+    kc = results["kcenter"][0]
+    kr = kc["wall_last_over_first"]
+    if kr > KCENTER_STEP_RATIO_MAX:
+        out.append((
+            False,
+            f"kcenter wall_last_over_first = {kr} > "
+            f"{KCENTER_STEP_RATIO_MAX} ({kc['step_walls_s']}) — lazy "
+            "lineage replay reintroduced?",
+        ))
+    else:
+        out.append((True, f"kcenter step walls flat: ratio {kr}"))
+    return out
 
-    s = int(sys.argv[2]) if len(sys.argv) > 2 else 64
-    spark = get_spark(app_name="store-probe-append")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
 
-    n_bands = MINHASH_K // BAND_ROWS
-    h0_md5 = F.conv(
-        F.substring(F.md5(F.col("h0").cast("string")), 1, 8), 16, 10
-    ).cast("bigint")
-    hs = F.array(
-        *[
-            (F.lit(MINHASH_A[i]) * h0_md5 + F.lit(MINHASH_B[i]))
-            % F.lit(1 << 32)
-            for i in range(MINHASH_K)
-        ]
-    )
+def check_bands(results: dict) -> list[str]:
+    """The band-violation lines for the probes' JSON rows; empty when
+    every band holds."""
+    return [line for ok, line in band_verdicts(results) if not ok]
 
-    def bands_from_tokens(tok):
-        wide = (
-            tok.select("doc_id", hs.alias("hs"))
-            .groupBy("doc_id")
-            .agg(
-                *[
-                    F.min(F.col("hs")[i]).alias(f"m{i}")
-                    for i in range(MINHASH_K)
-                ]
-            )
-        )
-        arr = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"m{i}").cast("string")
-                                for i in range(
-                                    b * BAND_ROWS, (b + 1) * BAND_ROWS
-                                )
-                            ],
-                        )
-                    ).alias("band_sig"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-        return wide.select("doc_id", F.explode(arr).alias("bs")).select(
-            "doc_id",
-            F.col("bs.band").alias("band"),
-            F.col("bs.band_sig").alias("band_sig"),
-        )
 
-    def lifecycle_probe(batch_bands, rows_df, tomb_df):
-        live = rows_df.join(
-            F.broadcast(tomb_df), ["band", "band_sig"], "left_anti"
-        ).alias("s")
-        return (
-            batch_bands.alias("b")
-            .join(
-                live,
-                (F.col("b.band") == F.col("s.band"))
-                & (F.col("b.band_sig") == F.col("s.band_sig")),
-                "left",
-            )
-            .groupBy(F.col("b.doc_id"))
-            .agg(
-                F.size(F.collect_set(F.col("s.doc_id"))).alias("n_matches")
-            )
-        )
-
-    def timed_agg(df):
-        t0 = time.time()
-        row = df.agg(
-            F.count("*").alias("rows"),
-            F.sum("n_matches").alias("total_matches"),
-        ).collect()[0]
-        return time.time() - t0, (int(row["rows"]), int(row["total_matches"]))
-
-    tok = _clustered_corpus(spark, s).persist()
-    tok.count()
-    lo = (5_000 * s) // 4
-    is_batch = (
-        (F.col("doc_id") % 8 == 0)
-        & (F.col("doc_id") >= lo)
-        & (F.col("doc_id") < lo + 5_000)
-    )
-    batch_bands = bands_from_tokens(tok.filter(is_batch)).persist()
-    batch_bands.count()
-    store_tok = tok.filter(~is_batch)
-    # 9 epochs: epoch 0 = half the store (the init build), epochs 1..8
-    # are the daily append slices
-    # doc_ids are non-negative, so cast-to-long truncation == floor div
-    slice16 = (F.col("doc_id") / 313).cast("long") % 16
-    epoch = F.when(slice16 < 8, F.lit(0)).otherwise(slice16 - 7)
-
-    spark.sql("CREATE DATABASE IF NOT EXISTS store_probe_wh")
-    base = tempfile.mkdtemp(prefix="braintumor_store_append_")
-    table = f"store_probe_wh.append_rows_x{s}"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (
-        bands_from_tokens(store_tok.filter(epoch == 0))
-        .write.mode("overwrite")
-        .bucketBy(8, "band", "band_sig")
-        .sortBy("band", "band_sig")
-        .option("path", os.path.join(base, "rows"))
-        .saveAsTable(table)
-    )
-
-    def n_files():
-        d = os.path.join(base, "rows")
-        return sum(
-            1
-            for dp, _, fs in os.walk(d)
-            for f in fs
-            if f.endswith(".parquet")
-        )
-
-    def checkpoint(n_appends):
-        # tombstones from a fresh recount (maintenance-side cost, NOT
-        # probed — the lifecycle keeps counts merged; recounting here
-        # only builds the same tiny relation for the harness)
-        rows_df = spark.table(table)
-        tomb = (
-            rows_df.groupBy("band", "band_sig")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > _CAP)
-            .select("band", "band_sig")
-            .persist()
-        )
-        tomb.count()
-        # probe the appended layout (min of 2 — scheduler noise)
-        p1, agg1 = timed_agg(lifecycle_probe(batch_bands, rows_df, tomb))
-        p2, agg2 = timed_agg(lifecycle_probe(batch_bands, rows_df, tomb))
-        assert agg1 == agg2
-        # recompute-both reference, asserted identical before timing
-        included = store_tok.filter(
-            (slice16 < 8) | (slice16 - 7 <= n_appends)
-        )
-        ref_bands = bands_from_tokens(included)
-        ref_tomb = (
-            ref_bands.groupBy("band", "band_sig")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") > _CAP)
-            .select("band", "band_sig")
-        )
-        _, agg_ref = timed_agg(
-            lifecycle_probe(batch_bands, ref_bands, ref_tomb)
-        )
-        assert agg1 == agg_ref, (n_appends, agg1, agg_ref)
-        tomb.unpersist()
-        # isolate the LAYOUT cost from the batch-dominated probe: a
-        # full one-column store scan (sum over doc_id) — pure
-        # file-listing + footer + column-chunk read
-        t0 = time.time()
-        rows_df.agg(F.sum("doc_id")).collect()
-        s1 = time.time() - t0
-        t0 = time.time()
-        rows_df.agg(F.sum("doc_id")).collect()
-        s2 = time.time() - t0
-        return min(p1, p2), agg1, min(s1, s2)
-
-    # untimed warmup of the probe plan shape (JIT/codegen)
-    timed_agg(lifecycle_probe(batch_bands, spark.table(table),
-                              spark.table(table).limit(0)
-                              .select("band", "band_sig")))
-    results = []
-    probe_s, agg, scan_s = checkpoint(0)
-    results.append((0, n_files(), probe_s, agg, scan_s))
-    for k in range(1, 9):
-        (
-            bands_from_tokens(store_tok.filter(epoch == k))
-            .write.mode("append")
-            .bucketBy(8, "band", "band_sig")
-            .sortBy("band", "band_sig")
-            .saveAsTable(table)
-        )
-        if k in (1, 2, 4, 8):
-            probe_s, agg, scan_s = checkpoint(k)
-            results.append((k, n_files(), probe_s, agg, scan_s))
-
-    # compaction: ONE fresh bucketed rewrite of the appended rows
-    t0 = time.time()
-    compact_table = f"{table}_compact"
-    spark.sql(f"DROP TABLE IF EXISTS {compact_table}")
-    (
-        # one task per bucket (repartition hash == bucket hash on the
-        # same columns/count) -> exactly 8 output files, the layout the
-        # init build would have produced. Read the RAW PATH, not the
-        # catalog table: a bucketed-table scan makes the planner drop
-        # the aligning repartition (observed: 175 output files from the
-        # catalog read vs 8 from the path read of the same data).
-        spark.read.parquet(os.path.join(base, "rows"))
-        .repartition(8, "band", "band_sig")
-        .write.mode("overwrite")
-        .bucketBy(8, "band", "band_sig")
-        .sortBy("band", "band_sig")
-        .option("path", os.path.join(base, "rows_compact"))
-        .saveAsTable(compact_table)
-    )
-    compact_s = time.time() - t0
-    rows_c = spark.table(compact_table)
-    tomb_c = (
-        rows_c.groupBy("band", "band_sig")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > _CAP)
-        .select("band", "band_sig")
-    )
-    c1, agg_c1 = timed_agg(lifecycle_probe(batch_bands, rows_c, tomb_c))
-    c2, agg_c2 = timed_agg(lifecycle_probe(batch_bands, rows_c, tomb_c))
-    assert agg_c1 == agg_c2 == results[-1][3]
-    compact_probe_s = min(c1, c2)
-    t0 = time.time()
-    rows_c.agg(F.sum("doc_id")).collect()
-    cs1 = time.time() - t0
-    t0 = time.time()
-    rows_c.agg(F.sum("doc_id")).collect()
-    compact_scan_s = min(cs1, time.time() - t0)
-
-    for k, nf, p, agg, sc in results:
-        print(
-            json.dumps(
-                {
-                    "shape": "store_probe_append",
-                    "factor": s,
-                    "appends": k,
-                    "store_files": nf,
-                    "probe_s": round(p, 3),
-                    "store_scan_s": round(sc, 3),
-                    "scan_vs_compacted": round(
-                        sc / max(compact_scan_s, 1e-9), 2
-                    ),
-                    "batch_rows_out": agg[0],
-                    "total_matches": agg[1],
-                }
-            ),
-            flush=True,
-        )
-    print(
-        json.dumps(
-            {
-                "shape": "store_probe_append_compacted",
-                "factor": s,
-                "compact_rewrite_s": round(compact_s, 3),
-                "compacted_files": sum(
-                    1
-                    for dp, _, fs in os.walk(os.path.join(base, "rows_compact"))
-                    for f in fs
-                    if f.endswith(".parquet")
-                ),
-                "probe_s": round(compact_probe_s, 3),
-                "store_scan_s": round(compact_scan_s, 3),
-            }
-        ),
-        flush=True,
-    )
-    shutil.rmtree(base, ignore_errors=True)
-    return 0
+#: the probes ``quick`` runs, in run order
+PROBES = {
+    "blocked-rank": main_blocked_rank,
+    "verify-skew": main_verify_skew,
+    "graph-cc": main_graph_cc,
+    "semdedup": main_semdedup,
+    "dedup-skew": main_dedup_skew,
+    "kcenter": main_kcenter,
+}
+COMMANDS = {"quick": main_quick, **PROBES}
+USAGE = (
+    "usage: python tools/scaling_probe.py "
+    f"{{{','.join(COMMANDS)}}} [factors...]"
+)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "quick":
-        raise SystemExit(main_quick())
-    if len(sys.argv) > 1 and sys.argv[1] == "store-probe":
-        raise SystemExit(main_store_probe())
-    if len(sys.argv) > 1 and sys.argv[1] == "store-probe-append":
-        raise SystemExit(main_store_probe_append())
-    if len(sys.argv) > 1 and sys.argv[1] == "semdedup":
-        raise SystemExit(main_semdedup())
-    if len(sys.argv) > 1 and sys.argv[1] == "kcenter":
-        raise SystemExit(main_kcenter())
-    if len(sys.argv) > 1 and sys.argv[1] == "headline":
-        raise SystemExit(main_headline())
-    if len(sys.argv) > 1 and sys.argv[1] == "graph-cc":
-        raise SystemExit(main_graph_cc())
-    if len(sys.argv) > 1 and sys.argv[1] == "dedup-skew":
-        raise SystemExit(main_dedup_skew())
-    if len(sys.argv) > 1 and sys.argv[1] == "verify-skew":
-        raise SystemExit(main_verify_skew())
-    if len(sys.argv) > 1 and sys.argv[1] == "blocked-rank":
-        raise SystemExit(main_blocked_rank())
-    raise SystemExit(main())
+    command = COMMANDS.get(sys.argv[1]) if len(sys.argv) > 1 else None
+    if command is None:
+        print(USAGE, file=sys.stderr)
+        raise SystemExit(2)
+    raise SystemExit(command())
