@@ -16,12 +16,16 @@ grid→numpy builders (imaging_udf, app_flow, multimodal, phash) share
 one adapter, ``map_grid_images``; the region-grow modes still carry
 their own pack and decode, which the adapter is meant to replace.
 
-Oracle story: with no iteration cap, the segmented region is exactly the
-connected component of {pixels: |v−seed_v| ≤ t·255} containing the seed —
-which a DuckDB **recursive CTE** computes independently. The capped
-variants replay the FIFO BFS dequeue-by-dequeue in a list-state CTE, and
-the morphology post-pass runs as relational bounded-neighborhood erode/
-dilate passes — every registered segmentation query is hash-checked.
+Oracle story: every registered segmentation query is hash-checked
+against DuckDB SQL built from ``_GRID_SQL`` and one fragment per
+region-growing step, each written once and reading a relation its
+caller names. ``_flood_sql``: with no iteration cap, the segmented
+region is exactly the connected component of {pixels: |v−seed_v| ≤
+t·255} containing the seed, a **recursive CTE** over 4-neighbour
+equi-joins. ``_capped_bfs_sql``: the capped variants replay the FIFO
+BFS dequeue-by-dequeue in a list-state CTE. ``_morph_sql``: the
+open/close post-pass as sparse erode/dilate joins of the mask's cells
+against 3×3 and 5×5 offsets, ending in a per-key area.
 
 Images here are dense 32×32 grids derived deterministically from
 ``orders`` (row_number over o_orderkey), value channel as in pixels.py.
@@ -313,22 +317,143 @@ def _grown_positions(
     )
 
 
+# ---------------------------------------------------------------------------
+# Oracle fragments: one DuckDB CTE chain per region-growing step, each
+# written once. A fragment reads the relation its caller names (so tests
+# can feed it hand-made cells) and defines fixed CTE names; the query
+# using one must open with WITH RECURSIVE.
+# ---------------------------------------------------------------------------
+
+# The reference's BFS neighbor order (functions/imaging.py _OFFSETS_8),
+# as a DuckDB struct-list literal — enqueue order must match exactly.
+_OFFSETS_8_SQL = (
+    "[{'dy': -1, 'dx': 0}, {'dy': -1, 'dx': 1}, {'dy': 0, 'dx': 1},"
+    " {'dy': 1, 'dx': 1}, {'dy': 1, 'dx': 0}, {'dy': 1, 'dx': -1},"
+    " {'dy': 0, 'dx': -1}, {'dy': -1, 'dx': -1}]"
+)
+
+
+def _seeded_adm_sql(threshold: float) -> str:
+    """CTEs ``grid``, ``seeds`` (image_id, sv) and ``adm`` (image_id,
+    y, x): the grid cells within ``threshold`` of their image's seed
+    value on the /255 scale, compared in double."""
+    return f"""grid AS ({_GRID_SQL}),
+    seeds AS (SELECT image_id, v AS sv FROM grid WHERE y = 16 AND x = 16),
+    adm AS MATERIALIZED (
+      SELECT g.image_id, g.y, g.x FROM grid g JOIN seeds s USING (image_id)
+      WHERE abs(g.v / 255.0 - s.sv / 255.0) <= {threshold}
+    )"""
+
+
+def _flood_sql(adm: str, keys: tuple[str, ...]) -> str:
+    """CTE ``flood`` (keys, y, x): per key, the 4-connected component of
+    the admissible cells ``adm`` (keys, y, x) that holds the seed
+    (16, 16) — uncapped region growing. Each step equi-joins only the
+    new frontier to its four neighbours. Every step reads ``adm``
+    again, so the caller defines it ``AS MATERIALIZED`` (an inlined
+    CTE is recomputed per step)."""
+    a_keys = ", ".join(f"a.{k}" for k in keys)
+    on = " AND ".join(f"a.{k} = f.{k}" for k in keys)
+    return f"""flood AS (
+      SELECT {", ".join(keys)}, y, x FROM {adm} WHERE y = 16 AND x = 16
+      UNION
+      SELECT {a_keys}, a.y, a.x
+      FROM flood f
+      CROSS JOIN (VALUES (-1, 0), (0, 1), (1, 0), (0, -1)) o(dy, dx)
+      JOIN {adm} a ON {on} AND a.y = f.y + o.dy AND a.x = f.x + o.dx
+    )"""
+
+
+def _capped_bfs_sql(adm: str) -> str:
+    """CTE ``bmask`` (image_id, y, x): the reference's FIFO BFS from the
+    seed over the admissible cells ``adm`` (image_id, y, x), 8-connected
+    and stopped after 100 dequeues (`region_growing.py:67`). The
+    recursive CTE replays one dequeue per step, its state rows carrying
+    queue and mask as lists, enqueueing in ``_OFFSETS_8_SQL`` order."""
+    return f"""adm_lists AS (
+      SELECT image_id, list(y * 32 + x ORDER BY y * 32 + x) AS adm_list
+      FROM {adm} GROUP BY image_id
+    ),
+    bfs AS (
+      SELECT image_id, 0 AS step, [528] AS queue, [528] AS mask, adm_list
+      FROM adm_lists
+      UNION ALL
+      SELECT image_id, step + 1,
+             list_concat(queue[2:], admitted) AS queue,
+             list_concat(mask, admitted) AS mask, adm_list
+      FROM (
+        SELECT image_id, step, queue, mask, adm_list,
+               [p FOR p IN
+                 [ (queue[1] // 32 + o['dy']) * 32
+                     + (queue[1] % 32 + o['dx'])
+                   FOR o IN {_OFFSETS_8_SQL}
+                   IF queue[1] // 32 + o['dy'] BETWEEN 0 AND 31
+                      AND queue[1] % 32 + o['dx'] BETWEEN 0 AND 31 ]
+                 IF list_contains(adm_list, p)
+                    AND NOT list_contains(mask, p)
+               ] AS admitted
+        FROM bfs WHERE len(queue) > 0 AND step < 100
+      )
+    ),
+    bmask AS (
+      SELECT image_id, CAST(p // 32 AS INT) AS y, CAST(p % 32 AS INT) AS x
+      FROM (SELECT image_id, mask,
+                   row_number() OVER (PARTITION BY image_id
+                                      ORDER BY step DESC) AS rn
+            FROM bfs), UNNEST(mask) AS t(p)
+      WHERE rn = 1
+    )"""
+
+
+def _morph_sql(mask: str, keys: tuple[str, ...], universe: str) -> str:
+    """CTE ``morph`` (keys, area): MORPH_OPEN 3×3 then MORPH_CLOSE 5×5
+    (`region_growing.py:94-96`) of the cells ``mask`` (keys, y, x),
+    counted per key of ``universe`` (area 0 for an empty mask).
+
+    Erosion keeps a cell of its input iff every IN-BOUNDS cell of its
+    k×k window is in the input (cv2 erode pads with +inf, so
+    out-of-bounds counts as foreground: only in-bounds window cells are
+    joined, and count(*) = count(matched)); only input cells can
+    survive, so it never touches the full grid. Dilation is the
+    distinct in-bounds k×k expansion (cv2 pads with −inf). Binary ops
+    on integer coordinates — no float, so the hash cannot flake."""
+    k = ", ".join(keys)
+    c_keys = ", ".join(f"c.{key}" for key in keys)
+    on = " AND ".join(f"m.{key} = c.{key}" for key in keys)
+    inb = "c.y + o.dy BETWEEN 0 AND 31 AND c.x + o.dx BETWEEN 0 AND 31"
+
+    def erode(src: str, off: str) -> str:
+        return f"""SELECT {c_keys}, c.y, c.x
+      FROM {src} c JOIN {off} o ON {inb}
+      LEFT JOIN {src} m ON {on} AND m.y = c.y + o.dy AND m.x = c.x + o.dx
+      GROUP BY {c_keys}, c.y, c.x
+      HAVING count(*) = count(m.y)"""
+
+    def dilate(src: str, off: str) -> str:
+        return f"""SELECT DISTINCT {c_keys}, c.y + o.dy AS y, c.x + o.dx AS x
+      FROM {src} c JOIN {off} o ON {inb}"""
+
+    return f"""off3 AS (SELECT CAST(a.dy AS INT) AS dy, CAST(b.dx AS INT) AS dx
+             FROM range(-1,2) a(dy), range(-1,2) b(dx)),
+    off5 AS (SELECT CAST(a.dy AS INT) AS dy, CAST(b.dx AS INT) AS dx
+             FROM range(-2,3) a(dy), range(-2,3) b(dx)),
+    e3 AS ({erode(mask, "off3")}),
+    opened AS ({dilate("e3", "off3")}),
+    d5 AS ({dilate("opened", "off5")}),
+    closed AS ({erode("d5", "off5")}),
+    morph AS (
+      SELECT {k}, CAST(coalesce(a.area, 0) AS BIGINT) AS area
+      FROM {universe} LEFT JOIN (SELECT {k}, count(*) AS area
+                                 FROM closed GROUP BY {k}) a USING ({k})
+    )"""
+
+
 @register(
     "region_grow_component",
     oracle=f"""
-    WITH RECURSIVE g AS ({_GRID_SQL}),
-    seeds AS (SELECT image_id, v AS sv FROM g WHERE y = 16 AND x = 16),
-    region AS (
-      SELECT image_id, y, x FROM g WHERE y = 16 AND x = 16
-      UNION
-      SELECT p.image_id, p.y, p.x
-      FROM region r
-      JOIN g p ON p.image_id = r.image_id
-              AND abs(p.y - r.y) + abs(p.x - r.x) = 1
-      JOIN seeds s ON s.image_id = p.image_id
-      WHERE abs(p.v / 255.0 - s.sv / 255.0) <= {THRESHOLD}
-    )
-    SELECT image_id, y, x FROM region
+    WITH RECURSIVE {_seeded_adm_sql(THRESHOLD)},
+    {_flood_sql("adm", ("image_id",))}
+    SELECT image_id, y, x FROM flood
     """,
     tags=("segmentation", "iterative"),
 )
@@ -349,54 +474,13 @@ def region_grow_component(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: truncates and the quirk is exercised, not vacuously satisfied.
 CAP_THRESHOLD = 0.7
 
-# The reference's BFS neighbor order (functions/imaging.py _OFFSETS_8),
-# as a DuckDB struct-list literal — enqueue order must match exactly.
-_OFFSETS_8_SQL = (
-    "[{'dy': -1, 'dx': 0}, {'dy': -1, 'dx': 1}, {'dy': 0, 'dx': 1},"
-    " {'dy': 1, 'dx': 1}, {'dy': 1, 'dx': 0}, {'dy': 1, 'dx': -1},"
-    " {'dy': 0, 'dx': -1}, {'dy': -1, 'dx': -1}]"
-)
-
 
 @register(
     "region_grow_capped",
     oracle=f"""
-    WITH RECURSIVE grid AS ({_GRID_SQL}),
-    seeds AS (SELECT image_id, v AS sv FROM grid WHERE y = 16 AND x = 16),
-    adm AS (
-      SELECT g.image_id, list(g.y * 32 + g.x ORDER BY g.y * 32 + g.x)
-               AS adm_list
-      FROM grid g JOIN seeds s USING (image_id)
-      WHERE abs(g.v / 255.0 - s.sv / 255.0) <= {CAP_THRESHOLD}
-      GROUP BY g.image_id
-    ),
-    bfs AS (
-      SELECT image_id, 0 AS step, [528] AS queue, [528] AS mask, adm_list
-      FROM adm
-      UNION ALL
-      SELECT image_id, step + 1,
-             list_concat(queue[2:], admitted) AS queue,
-             list_concat(mask, admitted) AS mask, adm_list
-      FROM (
-        SELECT image_id, step, queue, mask, adm_list,
-               [p FOR p IN
-                 [ (queue[1] // 32 + o['dy']) * 32
-                     + (queue[1] % 32 + o['dx'])
-                   FOR o IN {_OFFSETS_8_SQL}
-                   IF queue[1] // 32 + o['dy'] BETWEEN 0 AND 31
-                      AND queue[1] % 32 + o['dx'] BETWEEN 0 AND 31 ]
-                 IF list_contains(adm_list, p)
-                    AND NOT list_contains(mask, p)
-               ] AS admitted
-        FROM bfs WHERE len(queue) > 0 AND step < 100
-      )
-    )
-    SELECT image_id, CAST(p // 32 AS INT) AS y, CAST(p % 32 AS INT) AS x
-    FROM (SELECT image_id, mask,
-                 row_number() OVER (PARTITION BY image_id
-                                    ORDER BY step DESC) AS rn
-          FROM bfs), UNNEST(mask) AS t(p)
-    WHERE rn = 1
+    WITH RECURSIVE {_seeded_adm_sql(CAP_THRESHOLD)},
+    {_capped_bfs_sql("adm")}
+    SELECT image_id, y, x FROM bmask
     """,
     tags=("segmentation", "iterative"),
 )
@@ -432,94 +516,13 @@ def _grown_area(g: DataFrame, threshold: float) -> DataFrame:
 
 def _faithful_oracle(threshold: float) -> str:
     """Recomputing oracle for the FULL reference-faithful chain: the
-    capped FIFO BFS replayed one dequeue per recursion step (the
-    region_grow_capped technique), then MORPH_OPEN 3×3 + MORPH_CLOSE 5×5
-    as relational neighborhood passes.
-
-    Morphology in SQL: erode(M,k) keeps a cell iff every IN-BOUNDS cell
-    of its k×k window is in M (cv2 erode pads with +inf ⇒ out-of-bounds
-    counts as foreground — encoded by joining only in-bounds window
-    cells and requiring count(*) = count(matched)); dilate(M,k) is the
-    distinct bounded k×k expansion (cv2 pads with −inf ⇒ out-of-bounds
-    contributes nothing). Binary ops on integer coordinates — no float
-    anywhere after the admissibility test, so the hash cannot flake."""
+    capped FIFO BFS (``_capped_bfs_sql``), then MORPH_OPEN 3×3 +
+    MORPH_CLOSE 5×5 (``_morph_sql``), as the surviving area per image."""
     return f"""
-    WITH RECURSIVE grid AS ({_GRID_SQL}),
-    seeds AS (SELECT image_id, v AS sv FROM grid WHERE y = 16 AND x = 16),
-    adm AS (
-      SELECT g.image_id, list(g.y * 32 + g.x ORDER BY g.y * 32 + g.x)
-               AS adm_list
-      FROM grid g JOIN seeds s USING (image_id)
-      WHERE abs(g.v / 255.0 - s.sv / 255.0) <= {threshold}
-      GROUP BY g.image_id
-    ),
-    bfs AS (
-      SELECT image_id, 0 AS step, [528] AS queue, [528] AS mask, adm_list
-      FROM adm
-      UNION ALL
-      SELECT image_id, step + 1,
-             list_concat(queue[2:], admitted) AS queue,
-             list_concat(mask, admitted) AS mask, adm_list
-      FROM (
-        SELECT image_id, step, queue, mask, adm_list,
-               [p FOR p IN
-                 [ (queue[1] // 32 + o['dy']) * 32
-                     + (queue[1] % 32 + o['dx'])
-                   FOR o IN {_OFFSETS_8_SQL}
-                   IF queue[1] // 32 + o['dy'] BETWEEN 0 AND 31
-                      AND queue[1] % 32 + o['dx'] BETWEEN 0 AND 31 ]
-                 IF list_contains(adm_list, p)
-                    AND NOT list_contains(mask, p)
-               ] AS admitted
-        FROM bfs WHERE len(queue) > 0 AND step < 100
-      )
-    ),
-    bmask AS (
-      SELECT image_id, CAST(p // 32 AS INT) AS y, CAST(p % 32 AS INT) AS x
-      FROM (SELECT image_id, mask,
-                   row_number() OVER (PARTITION BY image_id
-                                      ORDER BY step DESC) AS rn
-            FROM bfs), UNNEST(mask) AS t(p)
-      WHERE rn = 1
-    ),
-    imgs AS (SELECT DISTINCT image_id FROM seeds),
-    cells AS (SELECT i.image_id, CAST(ys.y AS INT) AS y, CAST(xs.x AS INT) AS x
-              FROM imgs i, range(32) ys(y), range(32) xs(x)),
-    off3 AS (SELECT CAST(a.dy AS INT) AS dy, CAST(b.dx AS INT) AS dx
-             FROM range(-1,2) a(dy), range(-1,2) b(dx)),
-    off5 AS (SELECT CAST(a.dy AS INT) AS dy, CAST(b.dx AS INT) AS dx
-             FROM range(-2,3) a(dy), range(-2,3) b(dx)),
-    e3 AS (
-      SELECT c.image_id, c.y, c.x
-      FROM cells c JOIN off3 o
-        ON c.y + o.dy BETWEEN 0 AND 31 AND c.x + o.dx BETWEEN 0 AND 31
-      LEFT JOIN bmask m ON m.image_id = c.image_id
-                       AND m.y = c.y + o.dy AND m.x = c.x + o.dx
-      GROUP BY c.image_id, c.y, c.x
-      HAVING count(*) = count(m.y)
-    ),
-    opened AS (
-      SELECT DISTINCT e.image_id, e.y + o.dy AS y, e.x + o.dx AS x
-      FROM e3 e JOIN off3 o
-        ON e.y + o.dy BETWEEN 0 AND 31 AND e.x + o.dx BETWEEN 0 AND 31
-    ),
-    d5 AS (
-      SELECT DISTINCT p.image_id, p.y + o.dy AS y, p.x + o.dx AS x
-      FROM opened p JOIN off5 o
-        ON p.y + o.dy BETWEEN 0 AND 31 AND p.x + o.dx BETWEEN 0 AND 31
-    ),
-    closed AS (
-      SELECT c.image_id, c.y, c.x
-      FROM cells c JOIN off5 o
-        ON c.y + o.dy BETWEEN 0 AND 31 AND c.x + o.dx BETWEEN 0 AND 31
-      LEFT JOIN d5 m ON m.image_id = c.image_id
-                    AND m.y = c.y + o.dy AND m.x = c.x + o.dx
-      GROUP BY c.image_id, c.y, c.x
-      HAVING count(*) = count(m.y)
-    )
-    SELECT i.image_id, CAST(coalesce(a.area, 0) AS BIGINT) AS area
-    FROM imgs i LEFT JOIN (SELECT image_id, count(*) AS area
-                           FROM closed GROUP BY image_id) a USING (image_id)
+    WITH RECURSIVE {_seeded_adm_sql(threshold)},
+    {_capped_bfs_sql("adm")},
+    {_morph_sql("bmask", ("image_id",), "seeds")}
+    SELECT image_id, area FROM morph
     """
 
 
@@ -620,6 +623,10 @@ _ADM_F32_SQL = (
     " - CAST(CAST(s.sv AS DOUBLE) / 255.0 AS REAL)) <= CAST(t.t AS REAL)"
 )
 
+#: flood and morphology run once per scheduled threshold and image
+_ADAPTIVE_KEYS = ("phase", "ti", "image_id")
+
+
 # Integer forms of the size-band predicates: min_size = 1024·0.005 = 5.12
 # → "area < min" ⟺ sz ≤ 5; max_size = 1024·0.3 ≈ 307.2 → "area > max"
 # ⟺ sz ≥ 308. Exact (no float compare needed on counts).
@@ -631,99 +638,34 @@ def _adaptive_oracle(cap: str) -> str:
     WITH RECURSIVE grid AS (SELECT * FROM ({_GRID_SQL}){cap}),
     seeds AS (SELECT image_id, v AS sv FROM grid WHERE y = 16 AND x = 16),
     thr(phase, ti, t) AS (VALUES {_THR_VALUES}),
-    adm AS (
+    adm AS MATERIALIZED (
       SELECT t.phase, t.ti, g.image_id, g.y, g.x
       FROM grid g JOIN seeds s USING (image_id) CROSS JOIN thr t
       WHERE {_ADM_F32_SQL}
     ),
-    comp AS (
-      SELECT phase, ti, image_id, y, x FROM adm WHERE y = 16 AND x = 16
-      UNION
-      SELECT a.phase, a.ti, a.image_id, a.y, a.x
-      FROM comp c
-      JOIN adm a ON a.image_id = c.image_id AND a.phase = c.phase
-                AND a.ti = c.ti AND abs(a.y - c.y) + abs(a.x - c.x) = 1
-    ),
+    {_flood_sql("adm", _ADAPTIVE_KEYS)},
     -- each grow's size check uses the POST-morphology mask (the
     -- reference's region_growing applies open(3×3)+close(5×5) before
-    -- returning, `region_growing.py:94-96`). Dense per-threshold masks,
-    -- then erosion = min over in-bounds neighbors (constant-1 border)
-    -- and dilation = max (constant-0 border) — matching _erode/_dilate.
-    combos AS (
-      SELECT t.phase, t.ti, s.image_id, t.t FROM thr t, seeds s
-    ),
-    m0 AS (
-      SELECT c.phase, c.ti, c.image_id,
-             CAST(ys.y AS INT) AS y, CAST(xs.x AS INT) AS x,
-             CASE WHEN p.y IS NULL THEN 0 ELSE 1 END AS b
-      FROM combos c
-      CROSS JOIN range(32) ys(y) CROSS JOIN range(32) xs(x)
-      LEFT JOIN comp p ON p.phase = c.phase AND p.ti = c.ti
-                      AND p.image_id = c.image_id
-                      AND p.y = ys.y AND p.x = xs.x
-    ),
-    e3 AS (
-      SELECT a.phase, a.ti, a.image_id, a.y, a.x, min(n.b) AS b
-      FROM m0 a JOIN m0 n ON n.phase = a.phase AND n.ti = a.ti
-                         AND n.image_id = a.image_id
-                         AND abs(n.y - a.y) <= 1 AND abs(n.x - a.x) <= 1
-      GROUP BY a.phase, a.ti, a.image_id, a.y, a.x
-    ),
-    o3 AS (
-      SELECT a.phase, a.ti, a.image_id, a.y, a.x, max(n.b) AS b
-      FROM e3 a JOIN e3 n ON n.phase = a.phase AND n.ti = a.ti
-                         AND n.image_id = a.image_id
-                         AND abs(n.y - a.y) <= 1 AND abs(n.x - a.x) <= 1
-      GROUP BY a.phase, a.ti, a.image_id, a.y, a.x
-    ),
-    d5 AS (
-      SELECT a.phase, a.ti, a.image_id, a.y, a.x, max(n.b) AS b
-      FROM o3 a JOIN o3 n ON n.phase = a.phase AND n.ti = a.ti
-                         AND n.image_id = a.image_id
-                         AND abs(n.y - a.y) <= 2 AND abs(n.x - a.x) <= 2
-      GROUP BY a.phase, a.ti, a.image_id, a.y, a.x
-    ),
-    c5 AS (
-      SELECT a.phase, a.ti, a.image_id, a.y, a.x, min(n.b) AS b
-      FROM d5 a JOIN d5 n ON n.phase = a.phase AND n.ti = a.ti
-                         AND n.image_id = a.image_id
-                         AND abs(n.y - a.y) <= 2 AND abs(n.x - a.x) <= 2
-      GROUP BY a.phase, a.ti, a.image_id, a.y, a.x
-    ),
-    sizes AS (
-      SELECT phase, ti, image_id, CAST(sum(b) AS BIGINT) AS sz
-      FROM c5 GROUP BY phase, ti, image_id
-    ),
-    chosen_up AS (
-      SELECT image_id,
-             coalesce(min(ti) FILTER (WHERE sz >= 6), {len(_UPS)}) AS ci
-      FROM sizes WHERE phase = 'up' GROUP BY image_id
-    ),
-    upres AS (
-      SELECT s.image_id, s.sz, t.t
-      FROM sizes s
-      JOIN chosen_up c ON s.image_id = c.image_id AND s.ti = c.ci
-      JOIN thr t ON t.phase = 'up' AND t.ti = s.ti
-      WHERE s.phase = 'up'
-    ),
-    chosen_down AS (
-      SELECT image_id,
-             coalesce(min(ti) FILTER (WHERE sz <= 307), {len(_DOWNS)}) AS cj
-      FROM sizes WHERE phase = 'down' GROUP BY image_id
-    ),
-    downres AS (
-      SELECT s.image_id, s.sz, t.t
-      FROM sizes s
-      JOIN chosen_down c ON s.image_id = c.image_id AND s.ti = c.cj
-      JOIN thr t ON t.phase = 'down' AND t.ti = s.ti
-      WHERE s.phase = 'down'
+    -- returning, `region_growing.py:94-96`)
+    combos AS (SELECT t.phase, t.ti, s.image_id FROM thr t, seeds s),
+    {_morph_sql("flood", _ADAPTIVE_KEYS, "combos")},
+    -- per image and phase: the first scheduled threshold whose size
+    -- ends the loop (up: area ≥ 6; down: area ≤ 307), else the last
+    chosen AS (
+      SELECT m.image_id, m.phase, m.area, t.t
+      FROM morph m JOIN thr t USING (phase, ti)
+      QUALIFY m.ti = coalesce(
+        min(m.ti) FILTER (WHERE CASE m.phase WHEN 'up' THEN m.area >= 6
+                                             ELSE m.area <= 307 END)
+          OVER (PARTITION BY m.image_id, m.phase),
+        max(m.ti) OVER (PARTITION BY m.image_id, m.phase))
     )
     SELECT u.image_id,
-           CAST(CASE WHEN u.sz >= 308 THEN d.sz ELSE u.sz END AS BIGINT)
-             AS area,
-           round(CASE WHEN u.sz >= 308 THEN d.t ELSE u.t END, 6)
+           CASE WHEN u.area >= 308 THEN d.area ELSE u.area END AS area,
+           round(CASE WHEN u.area >= 308 THEN d.t ELSE u.t END, 6)
              AS threshold_used
-    FROM upres u LEFT JOIN downres d USING (image_id)
+    FROM chosen u JOIN chosen d ON d.image_id = u.image_id AND d.phase = 'down'
+    WHERE u.phase = 'up'
 """
 
 
@@ -756,12 +698,13 @@ def region_grow_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def region_grow_adaptive_first8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``region_grow_adaptive`` restricted to the first 8 images — the
-    sf0.1-verifiable twin of the class-(b) skip (SKIP_SF01 points
-    here): the full oracle's recursive flood-fill × threshold-schedule
-    replay costs ~330 s over sf0.1's 146 images, so the twin pins the
-    image subset (image_id < 8 on both sides — the identical grid
-    prefix) and replays the IDENTICAL adaptive schedule there at any
-    SF. The Spark side runs the exact same packed-grid mapInArrow
-    operator code path; only the input grid is bounded."""
+    identical grid prefix (image_id < 8 on both sides), replaying the
+    IDENTICAL adaptive schedule there at any SF. It stood in for the
+    full query at sf0.1 while the full oracle's dense replay took
+    330-1150 s over sf0.1's 146 images; built from the shared flood
+    and morphology fragments it takes ~3 s there, so both are checked
+    and the twin stays as a bounded second check. The Spark side runs
+    the exact same packed-grid mapInArrow operator code path; only the
+    input grid is bounded."""
     g = grid_images_df(spark, sf_dir).filter(F.col("image_id") < 8)
     return _grown_adaptive(g)

@@ -13,7 +13,7 @@ code) handles key cardinality beyond memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from typing import Any
 
 import numpy as np
@@ -44,25 +44,41 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _update_totals(
+def _fold_totals(
     key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    # State keeps the sum as integer MICRO-units (value quantized to 6
-    # decimals), so accumulation is exact and order-independent — the
-    # emitted total is bit-identical to the batch DECIMAL(38,6) sum
-    # (functions/money.py) no matter how micro-batches split the input.
-    (n, s_micros) = state.get if state.exists else (0, 0)
+    totals: tuple[int, int],
+    pdfs: Iterable[pd.DataFrame],
+) -> tuple[tuple[int, int], pd.DataFrame]:
+    """Add the rows of ``pdfs`` to one event_type's running (count,
+    value micro-sum) ``totals``; returns the new totals and their
+    one-row ``OUTPUT_SCHEMA`` emission.
+
+    The sum is kept as integer MICRO-units (value quantized to 6
+    decimals), so accumulation is exact and order-independent — the
+    emitted total is bit-identical to the batch DECIMAL(38,6) sum
+    (functions/money.py) no matter how micro-batches split the input."""
+    n, s_micros = totals
     for pdf in pdfs:
         n += len(pdf)
         s_micros += int(
             np.rint(pdf["value"].to_numpy() * 1e6).astype(np.int64).sum()
         )
-    state.update((n, s_micros))
-    yield pd.DataFrame(
+    emission = pd.DataFrame(
         [{"event_type": key[0], "n_events": n, "sum_value": s_micros / 1e6}]
     )
+    return (n, s_micros), emission
+
+
+def _update_totals(
+    key: tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    totals, emission = _fold_totals(
+        key, state.get if state.exists else (0, 0), pdfs
+    )
+    state.update(totals)
+    yield emission
 
 
 def run_stateful_type_totals(
@@ -97,8 +113,8 @@ def run_stateful_type_totals(
 # ---------------------------------------------------------------------------
 # transformWithStateInPandas — Spark 4's arbitrary-state API (the
 # successor to applyInPandasWithState): typed state variables on a
-# handle, explicit init/close lifecycle, timers. Same exact-integer
-# accumulation doctrine as _update_totals above.
+# handle, explicit init/close lifecycle, timers. It folds rows through
+# the same exact-integer _fold_totals as _update_totals above.
 #
 # Environment gate: the TWS Python state-server protocol speaks
 # protobuf; ``google.protobuf`` is not installed in this container, so
@@ -131,24 +147,13 @@ class TypeTotalsProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        n, s_micros = (
-            tuple(self._state.get()) if self._state.exists() else (0, 0)
+        totals, emission = _fold_totals(
+            key,
+            tuple(self._state.get()) if self._state.exists() else (0, 0),
+            rows,
         )
-        for pdf in rows:
-            n += len(pdf)
-            s_micros += int(
-                np.rint(pdf["value"].to_numpy() * 1e6).astype(np.int64).sum()
-            )
-        self._state.update((n, s_micros))
-        yield pd.DataFrame(
-            [
-                {
-                    "event_type": key[0],
-                    "n_events": n,
-                    "sum_value": s_micros / 1e6,
-                }
-            ]
-        )
+        self._state.update(totals)
+        yield emission
 
     def close(self) -> None:
         pass

@@ -8,7 +8,9 @@ value is identical (this is exactly what sank ``null_semantics_groups``
 in round 1). This tool compares, for every registered oracle:
 
 - DuckDB: ``DESCRIBE SELECT ...`` column types (no execution), vs
-- Spark:  ``spec.fn(spark, sf_dir).dtypes`` (plan-time schema only).
+- Spark:  ``spec.fn(spark, sf_dir).dtypes`` (plan-time schema only),
+  each query built inside ``caching.query_scope``, so a cache one
+  builder leaves never reaches the next.
 
 and prints any column whose types do not map to the same canonical
 type. Exit code 1 if any HARD mismatch (different value domain, e.g.
@@ -30,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from braintumor_data_pipeline_spark import registry
+from braintumor_data_pipeline_spark.caching import query_scope
 from braintumor_data_pipeline_spark.session import get_spark
 from braintumor_data_pipeline_spark.sources.fixtures import TABLES
 
@@ -106,7 +109,8 @@ def main() -> int:
     for name in names:
         spec = specs[name]
         try:
-            sdtypes = dict(spec.fn(spark, sf_dir).dtypes)
+            with query_scope(spark, name):
+                sdtypes = dict(spec.fn(spark, sf_dir).dtypes)
         except Exception as exc:  # noqa: BLE001
             err += 1
             print(f"ERR   {name}: spark plan: {exc}")

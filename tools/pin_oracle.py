@@ -50,18 +50,22 @@ def pin_sql(name: str) -> tuple[str, int]:
     as the ``_pinned_sql.py`` constant holds it, row count). Used both
     by the CLI below and by the golden-freshness test
     (tests/test_golden_freshness.py) that proves each frozen golden
-    still describes the CURRENT code's output, not a past version's."""
+    still describes the CURRENT code's output, not a past version's.
+    The query runs inside ``caching.query_scope``: callers share one
+    session, and a cache one query leaves would change the next plan."""
     from braintumor_data_pipeline_spark import registry
+    from braintumor_data_pipeline_spark.caching import query_scope
     from braintumor_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="pin-oracle")
     spec = registry.all_queries()[name]
-    df = spec.fn(spark, SF_DIR)
-    cols = df.columns
-    types = [_DUCK_TYPES[str(f.dataType)] for f in df.schema.fields]
-    # sorted: the golden must not depend on the engine's output order
-    # (a hash aggregate's row order varies from run to run)
-    rows = sorted(df.collect(), key=lambda r: [(v is None, v) for v in r])
+    with query_scope(spark, name):
+        df = spec.fn(spark, SF_DIR)
+        cols = df.columns
+        types = [_DUCK_TYPES[str(f.dataType)] for f in df.schema.fields]
+        # sorted: the golden must not depend on the engine's output order
+        # (a hash aggregate's row order varies from run to run)
+        rows = sorted(df.collect(), key=lambda r: [(v is None, v) for v in r])
     if not rows:
         raise SystemExit(f"{name}: empty result, refusing to pin")
     values = ",\n      ".join(

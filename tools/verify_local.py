@@ -68,10 +68,9 @@ def _values_equal(a, b) -> bool:
 #       CTEs in DuckDB); the Spark sides run fine (star-reduced /
 #       bucketed) — this is a fixture shape artifact, not an engine
 #       scale limit (SCALE.md "sf0.1 cross-engine" section).
-#   (b) DuckDB-side recursive-CTE blowup — oracles that replay
-#       per-pixel flood fill / per-row recursion in SQL take minutes to
-#       hours at 10x data while the Spark side stays in seconds; the
-#       oracle, not the operator, is the bottleneck.
+#   (b) DuckDB-side oracle blowup — an oracle whose SQL replay takes
+#       minutes to hours at 10x data while the Spark side stays in
+#       seconds; the oracle, not the operator, is the bottleneck.
 # Class (a): the LSH candidate graph of the documents fixture is a
 # ~9.5M-edge near-clique at sf0.1, so these queries' deliberately
 # independent DuckDB closures are quadratic-plus there. Every entry
@@ -91,7 +90,6 @@ SKIP_SF01 = {
     "degree_assortativity": "(a) degree-pair products over the sf0.1 clique edge list — twin: copurchase_assortativity",
     "harmonic_centrality_seeds": "(a) multi-source BFS replay over the sf0.1 clique — twin: copurchase_harmonic_centrality",
     "rich_club_coefficient": "(a) degree-threshold subgraph edge counts over the sf0.1 clique — twin: copurchase_rich_club",
-    "region_grow_adaptive": "(b) DuckDB recursive flood-fill CTE measured 330 s at sf0.1 (Spark side 1.8 s) — r4 window run — twin: region_grow_adaptive_first8",
     "lsh_pairs_edit_verified": "(b) oracle is UNBOUNDED levenshtein over the 9.5M clique pairs (>600 s, interrupted); Spark side 25.6 s after the r5 repartition fix — twin: lsh_verify_pair_sample",
 }
 
