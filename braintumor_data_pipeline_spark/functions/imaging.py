@@ -133,33 +133,33 @@ def clahe(
     th = (h + ty - 1) // ty
     tw = (w + tx - 1) // tx
     padded = np.pad(img, ((0, th * ty - h), (0, tw * tx - w)), mode="reflect")
-    luts = np.zeros((ty, tx, 256), dtype=np.float64)
+    # all ty·tx tile histograms in one bincount over tile_id·256 + value
+    tile_id = (np.arange(ty * th) // th)[:, None] * tx + np.arange(tx * tw) // tw
+    hist = np.bincount(
+        (tile_id * 256 + padded).ravel(), minlength=ty * tx * 256
+    ).reshape(ty * tx, 256)
     clip = max(int(clip_limit * th * tw / 256.0), 1)
-    for i in range(ty):
-        for j in range(tx):
-            tile = padded[i * th : (i + 1) * th, j * tw : (j + 1) * tw]
-            hist = np.bincount(tile.ravel(), minlength=256).astype(np.int64)
-            excess = np.sum(np.maximum(hist - clip, 0))
-            hist = np.minimum(hist, clip)
-            # redistribute the clipped excess evenly (cv2 style)
-            hist += excess // 256
-            residual = int(excess % 256)
-            if residual:
-                step = max(256 // residual, 1)
-                hist[::step][: residual] += 1
-            cdf = np.cumsum(hist)
-            scale = 255.0 / max(cdf[-1], 1)
-            luts[i, j] = cdf * scale
-    # bilinear interpolation of tile mappings at every pixel
-    yy, xx = np.mgrid[0:h, 0:w]
-    fy = (yy + 0.5) / th - 0.5
-    fx = (xx + 0.5) / tw - 0.5
+    excess = np.maximum(hist - clip, 0).sum(axis=1)
+    hist = np.minimum(hist, clip)
+    # redistribute the clipped excess evenly (cv2 style)
+    hist += (excess // 256)[:, None]
+    residual = excess % 256
+    for t in np.flatnonzero(residual):
+        r = int(residual[t])
+        hist[t, :: max(256 // r, 1)][:r] += 1
+    cdf = np.cumsum(hist, axis=1)
+    luts = (cdf * (255.0 / np.maximum(cdf[:, -1], 1))[:, None]).reshape(ty, tx, 256)
+    # bilinear interpolation of tile mappings: rows and columns separately,
+    # broadcast to every pixel
+    fy = (np.arange(h) + 0.5) / th - 0.5
+    fx = (np.arange(w) + 0.5) / tw - 0.5
     y0 = np.clip(np.floor(fy).astype(int), 0, ty - 1)
     x0 = np.clip(np.floor(fx).astype(int), 0, tx - 1)
-    y1 = np.clip(y0 + 1, 0, ty - 1)
+    y1 = np.clip(y0 + 1, 0, ty - 1)[:, None]
     x1 = np.clip(x0 + 1, 0, tx - 1)
-    wy = np.clip(fy - y0, 0.0, 1.0)
+    wy = np.clip(fy - y0, 0.0, 1.0)[:, None]
     wx = np.clip(fx - x0, 0.0, 1.0)
+    y0 = y0[:, None]
     v = img
     out = (
         luts[y0, x0, v] * (1 - wy) * (1 - wx)

@@ -20,8 +20,10 @@ same scan and per-image body as a lazy frame that keeps the PNG as a
 column, for callers that choose their own sink.
 Scale: the binaryFile source splits by files across executors
 (`spark.sql.files.maxPartitionBytes` caps partition payload); stats
-rows are tiny and shuffle-free; the only Python is the per-image numpy
-math, batched by Arrow.
+rows are tiny and shuffle-free. The Python in each task is the per-image
+numpy math, batched by Arrow, plus the worker's fixed start-of-task cost.
+The engine's daemon (``_daemon``) removes the largest part of that cost,
+16 re-reads of ``pyspark.zip``'s directory per task (~130 ms on 4 vCPU).
 """
 
 from __future__ import annotations

@@ -14,6 +14,17 @@ Catalyst/Tungsten and set the knobs that matter at 100 TB:
 - ``shuffle.partitions`` defaults to the local core count; on a real
   cluster AQE's coalescing makes the initial number mostly irrelevant,
   but we keep it overridable via ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
+- **Python workers fork from the engine's daemon**
+  (``spark.python.daemon.module`` = ``_daemon``). Every PySpark task calls
+  ``importlib.invalidate_caches()``, and under CPython 3.11/3.12 that
+  makes each of a worker's 16 zip importers re-read the directory of
+  ``pyspark.zip`` or the py4j zip: ~130 ms per task before any user code
+  (4 vCPU). The daemon re-reads an archive only when its stat key
+  changed, so a task does 0 re-reads instead of 16. Executors must be
+  able to import this package for that: ``spark.executorEnv.PYTHONPATH``
+  points them at its root, whatever the JVM's cwd. A cluster whose
+  executors cannot import it from there sets the daemon module back to
+  ``pyspark.daemon`` through ``extra_conf``.
 """
 
 from __future__ import annotations
@@ -48,6 +59,12 @@ _DEFAULTS = {
     # sources/fixtures.normalize_timestamps — truncation to micros
     # matches DuckDB's epoch_us on TIMESTAMP_NS.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # --- Python workers: fork them from the engine's daemon, and let
+    # executors import the package whatever their cwd ---
+    "spark.python.daemon.module": "braintumor_data_pipeline_spark._daemon",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
 }
 
 
