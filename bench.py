@@ -64,16 +64,16 @@ def _run_suite(spark, sf_dir: str, etl_dir: str) -> dict[str, float]:
     for name in HEADLINE:
         fn = specs[name].fn
         with query_scope(spark, name):
-            t0 = time.time()
+            t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
-            timings[name] = round(time.time() - t0, 3)
+            timings[name] = round(time.perf_counter() - t0, 3)
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     process_dicom_files(spark, etl_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    timings["etl_pipeline_48imgs"] = round(time.time() - t0, 3)
+    timings["etl_pipeline_48imgs"] = round(time.perf_counter() - t0, 3)
     return timings
 
 
@@ -92,13 +92,13 @@ def _python_worker_sentinel(spark, reps: int = 3) -> float:
 
     walls = []
     for _ in range(reps):
-        t0 = time.time()
+        t0 = time.perf_counter()
         spark.range(200_000).select(
             F.col("id"), (F.col("id") % 97).alias("m")
         ).mapInArrow(_ident, "id long, m long").write.format("noop").mode(
             "overwrite"
         ).save()
-        walls.append(time.time() - t0)
+        walls.append(time.perf_counter() - t0)
     return round(statistics.median(walls), 3)
 
 

@@ -180,8 +180,8 @@ def process_dicom(data: bytes):
     one file's bytes: decode → first window value (MultiValue → first
     element) → :func:`apply_windowing_pipeline` → CLAHE → blur. Returns
     (dataset, uint8 image, wc, ww), wc/ww None when the min-max fallback
-    ran. Raises on a file it cannot decode; the caller chooses whether
-    that drops the file or fails the read."""
+    ran. Raises on a file it cannot decode; the ETL stage
+    (`plans/etl._process_partition`) drops such a file (F3)."""
     from ..sources.dicom import dcmread
 
     ds = dcmread(data)

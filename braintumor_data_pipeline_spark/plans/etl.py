@@ -1,4 +1,4 @@
-"""The batch image-ETL pipeline (SURVEY §3.1) — Spark port of the
+"""The image-ETL pipeline (SURVEY §3.1) — Spark port of the
 reference's Beam dataflow (`/root/reference/dataflow_pipeline.py`):
 
     MatchFiles → ReadMatches → ParDo(decode→window→CLAHE→blur→PNG→stats)
@@ -17,7 +17,10 @@ action, the PNGs are written by the same tasks that compute the stats
 rows (so the PNG bytes never cross Arrow), and the row count comes from
 an `Observation` on the appended frame. `process_dicom_files` is the
 same scan and per-image body as a lazy frame that keeps the PNG as a
-column, for callers that choose their own sink.
+column. `process_dicom_stream` is its streaming twin: the same stage over
+a streaming binaryFile scan of a landing directory, so each micro-batch
+decodes only the files that arrived since the last one (the Pub/Sub
+ingestion the reference left as a roadmap item, `README.md:246`).
 Scale: the binaryFile source splits by files across executors
 (`spark.sql.files.maxPartitionBytes` caps partition payload); stats
 rows are tiny and shuffle-free. The Python in each task is the per-image
@@ -37,9 +40,10 @@ from hashlib import sha256
 import numpy as np
 import pandas as pd
 from pyspark import TaskContext
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamReader
 
 from ..functions.imaging import process_dicom
 from ..sources.png import encode_png
@@ -138,12 +142,18 @@ def _process_partition(
 
 
 def _stats_frame(
-    spark: SparkSession, input_glob: str, processed_prefix: str, write_png: bool
+    reader: DataFrameReader | DataStreamReader,
+    path: str,
+    processed_prefix: str,
+    write_png: bool,
 ) -> DataFrame:
+    """The fused stage over the `.dcm` files under `path`, scanned by
+    `spark.read` or by a `spark.readStream` given binaryFile's schema
+    (a stream source cannot infer one)."""
     scan = (
-        spark.read.format("binaryFile")
+        reader.format("binaryFile")
         .option("pathGlobFilter", "*.dcm")
-        .load(input_glob)
+        .load(path)
         .select("path", "content")
     )
     return scan.mapInPandas(
@@ -158,7 +168,19 @@ def process_dicom_files(
     """Scan (S1/S2) + decode/transform/stats (S3, X1, X4, X5, X7, A1/A2,
     P1-P7) as a lazy DataFrame with the PNG as its `png` column; callers
     choose the sinks."""
-    return _stats_frame(spark, input_glob, processed_prefix, write_png=False)
+    return _stats_frame(spark.read, input_glob, processed_prefix, write_png=False)
+
+
+def process_dicom_stream(
+    spark: SparkSession, landing_dir: str, processed_prefix: str = "processed"
+) -> DataFrame:
+    """`process_dicom_files` as a streaming DataFrame over the `.dcm`
+    files that land in `landing_dir`. The query's checkpoint records
+    which files were read, so a restart reads only new ones."""
+    reader = spark.readStream.schema(
+        "path string, modificationTime timestamp, length bigint, content binary"
+    )
+    return _stats_frame(reader, landing_dir, processed_prefix, write_png=False)
 
 
 def run_etl(
@@ -172,16 +194,12 @@ def run_etl(
     stats append (S10, `WRITE_APPEND`/`CREATE_IF_NEEDED` ≈ parquet
     mode=append) is the only action. Returns the number of stats rows
     THIS run wrote, read from an `Observation` on the appended frame
-    (the parquet table itself accumulates across runs).
-
-    The `pngdir` sink (`sources/png_sink.py`) is not used here: a
-    DataSource write is an action of its own, so it would bring back a
-    second job over the same images. Each PNG is instead published by a
-    rename from a per-attempt temp file, so a retried task overwrites
-    it whole."""
+    (the parquet table itself accumulates across runs). Each PNG is
+    published by a rename from a per-attempt temp file, so a retried
+    task overwrites it whole."""
     obs = Observation("etl_rows")
-    stats = _stats_frame(spark, input_glob, processed_dir, write_png=True).observe(
-        obs, F.count(F.lit(1)).alias("n")
-    )
+    stats = _stats_frame(
+        spark.read, input_glob, processed_dir, write_png=True
+    ).observe(obs, F.count(F.lit(1)).alias("n"))
     stats.write.mode("append").parquet(stats_path)
     return obs.get["n"]

@@ -3,16 +3,23 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 import numpy as np
 import pytest
 
+from braintumor_data_pipeline_spark.functions.imaging import (
+    apply_windowing_pipeline,
+    clahe,
+    gaussian_blur,
+)
 from braintumor_data_pipeline_spark.plans.etl import (
     STATS_SCHEMA,
     process_dicom_files,
+    process_dicom_stream,
     run_etl,
 )
-from braintumor_data_pipeline_spark.sources.dicom import dcmwrite
+from braintumor_data_pipeline_spark.sources.dicom import dcmread, dcmwrite
 from braintumor_data_pipeline_spark.sources.png import decode_png
 
 
@@ -73,6 +80,81 @@ def test_pipeline_stats_frame(spark, dicom_dir):
         assert 0.0 <= r.mean_intensity <= 255.0
         assert 0.0 <= r.std_intensity <= 128.0
     assert df.schema == STATS_SCHEMA
+
+
+def test_stats_match_direct_recomputation(spark, dicom_dir):
+    """mean/std are np.mean / population np.std over the PROCESSED uint8
+    image (first window value → window → CLAHE → blur), recomputed here
+    without the ETL (dataflow_pipeline.py:75-88)."""
+    rows = {r.file_name: r for r in process_dicom_files(spark, dicom_dir).collect()}
+    # img_001: MultiValue window header; img_002: no header (min-max)
+    for name in ("img_001.dcm", "img_002.dcm"):
+        with open(os.path.join(dicom_dir, name), "rb") as f:
+            ds = dcmread(f.read())
+        wc = ds.window_center[0] if ds.window_center else None
+        ww = ds.window_width[0] if ds.window_width else None
+        img, _, _ = apply_windowing_pipeline(ds.pixel_array, wc, ww)
+        img = gaussian_blur(clahe(img, clip_limit=2.0, tile_grid=(8, 8)), 0.5)
+        assert rows[name].mean_intensity == pytest.approx(np.mean(img))
+        assert rows[name].std_intensity == pytest.approx(np.std(img))
+
+
+def _without_processed_at(df):
+    return sorted(df.drop("processed_at").collect())
+
+
+def test_dicom_stream_matches_batch_and_restarts(spark, dicom_dir, tmp_path):
+    """Two landings into one running stream give 3 rows, then 5, equal
+    to the batch frame over the same directory; a restart from the same
+    checkpoint reads only the files that landed since."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "notes.txt").write_text("not a dicom")
+
+    def land(*idx):
+        for i in idx:
+            shutil.copy(os.path.join(dicom_dir, f"img_{i:03d}.dcm"), landing)
+
+    land(0, 1, 2)
+    q = (
+        process_dicom_stream(spark, str(landing))
+        .writeStream.format("memory")
+        .queryName("dicom_stream")
+        .option("checkpointLocation", str(tmp_path / "ckpt_memory"))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        assert spark.table("dicom_stream").count() == 3
+        land(3, 4)
+        q.processAllAvailable()
+        got = spark.table("dicom_stream")
+        assert got.count() == 5
+        assert _without_processed_at(got) == _without_processed_at(
+            process_dicom_files(spark, str(landing))
+        )
+    finally:
+        q.stop()
+
+    # a memory sink cannot restart from a checkpoint; a parquet sink can
+    out, ckpt = str(tmp_path / "stats"), str(tmp_path / "ckpt_parquet")
+
+    def run_once():
+        (
+            process_dicom_stream(spark, str(landing))
+            .drop("png")
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return sorted(r.file_name for r in spark.read.parquet(out).collect())
+
+    assert run_once() == [f"img_{i:03d}.dcm" for i in range(5)]
+    land(5, 6)
+    assert run_once() == [f"img_{i:03d}.dcm" for i in range(7)]
 
 
 def test_run_etl_sinks(spark, dicom_dir, tmp_path):

@@ -97,215 +97,6 @@ def test_storage_helpers(spark, tmp_path):
     assert download_image_np(spark, dest + "/raw/zzz.png") is None
 
 
-class TestDicomDataSource:
-    """spark.read.format('dicom') — the Spark 4 Python DataSource
-    packaging of match+read+decode (see sources/dicom_datasource.py)."""
-
-    @pytest.fixture(scope="class")
-    def dicom_dir(self, tmp_path_factory):
-        import numpy as np
-
-        from braintumor_data_pipeline_spark.sources.dicom import dcmwrite
-
-        d = tmp_path_factory.mktemp("ds_dicoms")
-        rng = np.random.RandomState(7)
-        for i in range(10):
-            px = rng.randint(0, 2000, size=(32, 32)).astype(np.int16)
-            kwargs = (
-                {"window_center": [800.0, 400.0], "window_width": [1600.0, 200.0]}
-                if i % 2
-                else {}
-            )
-            (d / f"f_{i:02d}.dcm").write_bytes(
-                dcmwrite(
-                    px,
-                    patient_id="" if i == 3 else f"P{i}",
-                    study_uid=f"9.{i}",
-                    series_uid=f"9.{i}.1",
-                    sop_uid=f"9.{i}.1.0",
-                    modality="CT",
-                    **kwargs,
-                )
-            )
-        (d / "skip.txt").write_text("not dicom")
-        return str(d)
-
-    @pytest.fixture(scope="class")
-    def registered(self, spark):
-        from braintumor_data_pipeline_spark.sources.dicom_datasource import (
-            DicomDataSource,
-        )
-
-        spark.dataSource.register(DicomDataSource)
-        return spark
-
-    def test_reads_all_dicoms_skips_others(self, registered, dicom_dir):
-        df = registered.read.format("dicom").load(dicom_dir)
-        rows = df.collect()
-        assert len(rows) == 10
-        assert all(r.file_name.endswith(".dcm") for r in rows)
-
-    def test_partition_planning(self, registered, dicom_dir):
-        df = (
-            registered.read.format("dicom")
-            .option("filesPerPartition", "3")
-            .load(dicom_dir)
-        )
-        assert df.rdd.getNumPartitions() == 4  # ceil(10/3)
-
-    def test_semantics_match_reference_dofn(self, registered, dicom_dir):
-        import numpy as np
-
-        df = registered.read.format("dicom").load(dicom_dir)
-        by_name = {r.file_name: r for r in df.collect()}
-        # empty PatientID → NULL (dataflow_pipeline.py:90-91 semantics)
-        assert by_name["f_03.dcm"].patient_id is None
-        assert by_name["f_00.dcm"].patient_id == "P0"
-        # MultiValue window → first element (dataflow_pipeline.py:25-26)
-        assert by_name["f_01.dcm"].window_center == 800.0
-        assert by_name["f_01.dcm"].window_width == 1600.0
-        assert by_name["f_00.dcm"].window_center is None
-        # stats are np.mean / population np.std over the PROCESSED uint8
-        # image (window→CLAHE→blur), per the reference DoFn
-        # (dataflow_pipeline.py:75-88)
-        from braintumor_data_pipeline_spark.functions.imaging import (
-            apply_windowing_pipeline,
-            clahe,
-            gaussian_blur,
-        )
-        from braintumor_data_pipeline_spark.sources.dicom import dcmread
-
-        with open(f"{dicom_dir}/f_02.dcm", "rb") as f:
-            ds = dcmread(f.read())
-        wc = ds.window_center[0] if ds.window_center else None
-        ww = ds.window_width[0] if ds.window_width else None
-        img, _, _ = apply_windowing_pipeline(ds.pixel_array, wc, ww)
-        img = gaussian_blur(clahe(img, clip_limit=2.0, tile_grid=(8, 8)), 0.5)
-        assert by_name["f_02.dcm"].mean_intensity == pytest.approx(np.mean(img))
-        assert by_name["f_02.dcm"].std_intensity == pytest.approx(np.std(img))
-
-    def test_projection_still_decodes_lazily_per_partition(
-        self, registered, dicom_dir
-    ):
-        df = registered.read.format("dicom").load(dicom_dir)
-        out = df.select("patient_id").where("rows = 32").count()
-        assert out == 10
-
-
-class TestPngDirSink:
-    """df.write.format('pngdir') — stage/commit/abort protocol around
-    the reference's side-effect PNG write (sources/png_sink.py)."""
-
-    @pytest.fixture(scope="class")
-    def registered(self, spark):
-        from braintumor_data_pipeline_spark.sources.png_sink import (
-            PngDirDataSource,
-        )
-
-        spark.dataSource.register(PngDirDataSource)
-        return spark
-
-    def _frame(self, spark, n=6, bad=False):
-        import numpy as np
-
-        from braintumor_data_pipeline_spark.sources.png import encode_png
-
-        rng = np.random.RandomState(11)
-        rows = []
-        for i in range(n):
-            img = rng.randint(0, 255, size=(16, 16)).astype(np.uint8)
-            rows.append((f"img_{i:02d}.png", bytearray(encode_png(img))))
-        if bad:
-            rows.append(("poison.png", None))
-        return spark.createDataFrame(rows, "file_name string, content binary")
-
-    def test_commit_publishes_all_files(self, registered, tmp_path):
-        import numpy as np
-
-        from braintumor_data_pipeline_spark.sources.png import decode_png
-
-        out = str(tmp_path / "pngs")
-        df = self._frame(registered).repartition(3)
-        df.write.format("pngdir").option("path", out).mode("append").save()
-        names = sorted(os.listdir(out))
-        assert names == [f"img_{i:02d}.png" for i in range(6)]
-        # round-trip one file through the engine's own decoder
-        with open(os.path.join(out, "img_00.png"), "rb") as f:
-            img = decode_png(f.read())
-        assert img.shape == (16, 16) and img.dtype == np.uint8
-
-    def test_failed_job_publishes_nothing(self, registered, tmp_path):
-        from py4j.protocol import Py4JJavaError
-
-        out = str(tmp_path / "pngs_fail")
-        df = self._frame(registered, bad=True).repartition(2)
-        with pytest.raises((Py4JJavaError, Exception)):
-            df.write.format("pngdir").option("path", out).mode(
-                "append"
-            ).save()
-        # abort must leave no published files and no staging debris
-        leftover = []
-        if os.path.isdir(out):
-            for root, _dirs, files in os.walk(out):
-                leftover += [os.path.join(root, f) for f in files]
-        assert leftover == [], leftover
-
-
-class TestDicomStreamSource:
-    """spark.readStream.format('dicom') — directory-tailing micro-batch
-    ingestion (the reference's unimplemented Pub/Sub roadmap item)."""
-
-    def test_incremental_microbatches(self, spark, tmp_path):
-        import numpy as np
-
-        from braintumor_data_pipeline_spark.sources.dicom import dcmwrite
-        from braintumor_data_pipeline_spark.sources.dicom_datasource import (
-            DicomDataSource,
-        )
-
-        spark.dataSource.register(DicomDataSource)
-        d = tmp_path / "landing"
-        d.mkdir()
-        rng = np.random.RandomState(3)
-
-        def land(i):
-            px = rng.randint(0, 500, size=(8, 8)).astype(np.int16)
-            (d / f"s_{i:03d}.dcm").write_bytes(
-                dcmwrite(
-                    px,
-                    patient_id=f"S{i}",
-                    study_uid=f"7.{i}",
-                    series_uid=f"7.{i}.1",
-                    sop_uid=f"7.{i}.1.0",
-                    modality="MR",
-                )
-            )
-
-        for i in range(3):
-            land(i)
-        q = (
-            spark.readStream.format("dicom")
-            .load(str(d))
-            .writeStream.format("memory")
-            .queryName("dicom_stream")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            assert spark.table("dicom_stream").count() == 3
-            for i in range(3, 5):  # two more files land
-                land(i)
-            q.processAllAvailable()
-            got = spark.table("dicom_stream")
-            assert got.count() == 5  # incremental, no reprocessing
-            assert sorted(
-                r.patient_id for r in got.select("patient_id").collect()
-            ) == ["S0", "S1", "S2", "S3", "S4"]
-        finally:
-            q.stop()
-
-
 def test_generator_counts_and_repartition_invariance(spark, sf_dir):
     """The in-plan generator is a pure function of row id: results are
     identical under different parallelism, and the flag partition sizes

@@ -1,11 +1,12 @@
 """Every package import in the command-line tools resolves.
 
-The tools under ``tools/`` and ``bench.py`` import package internals,
-often inside the function of one sub-command that no gate runs, so a
-renamed or deleted helper only shows up when someone runs that
-sub-command. This check parses the files (no Spark, nothing executed)
-and resolves each ``from braintumor_data_pipeline_spark… import name``,
-function-local imports included.
+The tools under ``tools/``, ``bench.py`` and the ``perfbench/``
+benchmark import package internals, often inside the function of one
+sub-command that no gate runs, so a renamed or deleted helper only
+shows up when someone runs that sub-command or the benchmark. This
+check parses the files (no Spark, nothing executed) and resolves each
+``from braintumor_data_pipeline_spark… import name``, function-local
+imports included.
 """
 
 from __future__ import annotations
@@ -20,9 +21,11 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "braintumor_data_pipeline_spark"
-FILES = sorted(glob.glob(os.path.join(ROOT, "tools", "*.py"))) + [
-    os.path.join(ROOT, "bench.py")
-]
+FILES = (
+    sorted(glob.glob(os.path.join(ROOT, "tools", "*.py")))
+    + [os.path.join(ROOT, "bench.py")]
+    + sorted(glob.glob(os.path.join(ROOT, "perfbench", "*.py")))
+)
 
 
 def _package_imports(path: str) -> list[tuple[int, str, str | None]]:

@@ -46,12 +46,12 @@ def main() -> None:
             group = f"microbench:{name}:{i}"
             with query_scope(spark, group):
                 sc.setJobGroup(f"{group}:build", f"{group}:build")
-                t0 = time.time()
+                t0 = time.perf_counter()
                 df = fn(spark, sf_dir)
-                b = time.time() - t0
+                b = time.perf_counter() - t0
                 sc.setJobGroup(f"{group}:exec", f"{group}:exec")
                 df.write.format("noop").mode("overwrite").save()
-                w = time.time() - t0
+                w = time.perf_counter() - t0
             if i > 0:
                 walls.append(w)
                 builds.append(b)
