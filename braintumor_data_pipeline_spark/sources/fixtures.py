@@ -49,7 +49,6 @@ TABLES = (
 #: Small dimension tables that should always be broadcast in joins.
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 #: real path -> (st_mtime_ns, st_size, inferred schema); see module doc

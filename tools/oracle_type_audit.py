@@ -35,6 +35,7 @@ from braintumor_data_pipeline_spark import registry
 from braintumor_data_pipeline_spark.caching import query_scope
 from braintumor_data_pipeline_spark.session import get_spark
 from braintumor_data_pipeline_spark.sources.fixtures import TABLES
+from tools.verify_local import select_names
 
 
 def _canon_duck(t: str) -> str:
@@ -101,10 +102,7 @@ def main() -> int:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
     specs = registry.all_queries()
-    names = [
-        n for n, s in specs.items()
-        if s.oracle and (not filters or any(f in n for f in filters))
-    ]
+    names = [n for n in select_names(specs, filters) if specs[n].oracle]
     hard = warn = ok = err = 0
     for name in names:
         spec = specs[name]

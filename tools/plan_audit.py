@@ -44,6 +44,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from braintumor_data_pipeline_spark import registry
 from braintumor_data_pipeline_spark.session import get_spark
+from tools.verify_local import select_names
 
 # Queries whose nested-loop is a deliberate pruned/broadcast design at
 # fixture scale (documented in their docstrings) — reported, not fatal.
@@ -352,9 +353,8 @@ def main() -> int:
     critical = 0
     from braintumor_data_pipeline_spark.caching import query_scope
 
-    for name, entry in sorted(qs.items()):
-        if names and not any(f in name for f in names):
-            continue
+    for name in sorted(select_names(qs, names)):
+        entry = qs[name]
         try:
             with query_scope(spark, name):
                 df = entry.fn(spark, sf)

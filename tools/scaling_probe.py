@@ -4,11 +4,13 @@ stay linear as their input grows?
 The argument in SCALE.md is structural (shuffle shapes, partial
 aggregation, bounded buckets); these probes add measurement. Each probe
 sub-command grows its input by the given factors (a zero-I/O synthetic
-corpus over ``spark.range``; graph-cc replicates sf0.1 lineitem with
-offset keys), times the stage under test and prints one JSON line per
-factor. ``quick`` runs the six probes at x1/x4 (kcenter at x1), each in
-its own process, and checks their per-unit ratios against the stored
-bands (``check_bands``); ``tools/end_of_round.py`` runs it.
+corpus over ``spark.range``; the two dedup probes write a synthetic
+``documents`` fixture and run the registered builders on it; graph-cc
+replicates sf0.1 lineitem with offset keys), times the stage under test
+and prints one JSON line per factor. ``quick`` runs the six probes at
+x1/x4 (kcenter at x1), each in its own process, and checks their
+per-unit ratios against the stored bands (``check_bands``);
+``tools/end_of_round.py`` runs it.
 
 Usage: python tools/scaling_probe.py SUB-COMMAND [factors...]
   SUB-COMMAND: quick, blocked-rank, verify-skew, graph-cc, semdedup,
@@ -17,15 +19,26 @@ Usage: python tools/scaling_probe.py SUB-COMMAND [factors...]
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from braintumor_data_pipeline_spark.caching import query_scope
+from braintumor_data_pipeline_spark.operators.dedup import (
+    lsh_pairs_edit_verified,
+    minhash_lsh_pairs,
+    minhash_lsh_pairs_capped,
+)
 from braintumor_data_pipeline_spark.session import get_spark
 from braintumor_data_pipeline_spark.sources.fixtures import load_table
 
@@ -40,349 +53,125 @@ def _mix(col, salt: int):
     return (col * _MIX_A + _MIX_C + salt) % _MIX_M
 
 
-def _clustered_corpus(spark, s: int):
-    """Duplicate-heavy skew corpus (VERDICT r4 task 5): 5k·s docs where
-    25% sit in 8 LARGE exact-dup clusters (each cluster ~156·s docs —
-    identical token streams, hence identical minhash signatures and
-    identical band signatures in EVERY band: the hottest possible LSH
-    keys), 12.5% sit in SMALL 4-doc dup clusters (r8: the tier whose
-    pairs SURVIVE the band-frequency cap — their count grows linearly
-    with the corpus, exercising the capped enumeration path with
-    non-degenerate output), the rest unique. This is the shape real
-    crawl data has and the uniform-dup probes above do not: hot
-    shingles and a band-sig key whose bucket grows linearly with
-    corpus size, plus a long tail of legitimate near-dup groups."""
+@contextmanager
+def _documents_fixture(s: int, per_doc_tail: bool = False) -> Iterator[str]:
+    """A temp directory whose ``documents.parquet`` (the fixture's
+    columns) holds the duplicate-heavy skew corpus, so the registered
+    dedup builders read it through ``load_table`` unchanged; removed on
+    exit.
+
+    5k·s docs: 25% sit in 8 LARGE exact-dup clusters (~156·s docs each —
+    identical token streams, hence identical minhash and band signatures
+    in every band: the hottest possible LSH keys), 12.5% in SMALL 4-doc
+    clusters (the tier whose pairs survive the band-frequency cap, so
+    the capped pair count grows linearly with the corpus), the rest
+    unique. ``per_doc_tail`` appends one per-doc token, turning each
+    cluster into a family of near-duplicates that passes the 0.8 edit
+    gate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     docs = 5_000 * s
-    tok_per_doc = 50
     n_clustered = docs // 4
     n_small_end = n_clustered + docs // 8
-    t = spark.range(docs * tok_per_doc).select(
-        (F.col("id") / tok_per_doc).cast("long").alias("doc_id"),
-        (F.col("id") % tok_per_doc).alias("pos"),
+
+    def tok(x: int, n: int) -> str:
+        return hashlib.md5(str(x).encode()).hexdigest()[:n]
+
+    texts = []
+    for d in range(docs):
+        # small-cluster seeds start at `docs`, above every unique doc's
+        if d < n_clustered:
+            seed = d % 8
+        elif d < n_small_end:
+            seed = docs + d // 4
+        else:
+            seed = d
+        words = [tok(seed * 16 + p, 8) for p in range(16)]
+        if per_doc_tail:
+            words.append(tok(d, 6))
+        texts.append(" ".join(words))
+    table = pa.table(
+        {
+            "doc_id": list(range(docs)),
+            "text": texts,
+            "lang": ["en"] * docs,
+            "source": ["probe"] * docs,
+            "n_chars": [len(t) for t in texts],
+        }
     )
-    # content seed: docs < n_clustered collapse to 8 identical streams;
-    # the next docs//8 collapse in groups of 4 (seed offset by `docs` so
-    # small-cluster seeds never collide with unique docs' doc_id seeds)
-    seed = (
-        F.when(F.col("doc_id") < n_clustered, F.col("doc_id") % 8)
-        .when(
-            F.col("doc_id") < n_small_end,
-            F.lit(docs) + (F.col("doc_id") / 4).cast("long"),
-        )
-        .otherwise(F.col("doc_id"))
-    )
-    return t.select(
-        "doc_id", _mix(seed * tok_per_doc + F.col("pos"), 77).alias("h0")
-    )
+    root = tempfile.mkdtemp(prefix="scaling-probe-")
+    try:
+        pq.write_table(table, os.path.join(root, "documents.parquet"))
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def dedup_skew_row(spark, s: int) -> dict:
+    """Time ``minhash_lsh_pairs_capped`` on the factor-``s`` corpus.
+    Naive pair volume is quadratic in cluster size; the capped pairs
+    must stay a flat count per doc."""
+    docs = 5_000 * s
+    with _documents_fixture(s) as root:
+        with query_scope(spark, "minhash_lsh_pairs_capped"):
+            t0 = time.perf_counter()
+            n_capped = minhash_lsh_pairs_capped(spark, root).count()
+            t_capped = time.perf_counter() - t0
+    return {
+        "shape": "clustered_dup_dedup",
+        "factor": s,
+        "docs": docs,
+        "capped_pairs": n_capped,
+        "capped_pairs_per_doc": round(n_capped / docs, 2),
+        "builder_s": round(t_capped, 3),
+    }
+
+
+def verify_skew_row(spark, s: int) -> dict:
+    """Time the dedup VERIFY stage — ``lsh_pairs_edit_verified``, LSH
+    candidate pairs → bounded levenshtein — on the factor-``s`` corpus
+    with a per-doc tail, so every within-cluster pair is a candidate
+    that passes the 0.8 gate and pays the real bounded-DP cost. The
+    band join leaves all pairs of one hot bucket in one partition; the
+    builder repartitions them on (doc_a, doc_b) before the DP, so its
+    wall per candidate pair (``minhash_lsh_pairs``, counted untimed)
+    must stay ~flat as the clusters grow."""
+    with _documents_fixture(s, per_doc_tail=True) as root:
+        with query_scope(spark, "minhash_lsh_pairs"):
+            n_pairs = minhash_lsh_pairs(spark, root).count()
+        with query_scope(spark, "lsh_pairs_edit_verified"):
+            t0 = time.perf_counter()
+            n_verified = lsh_pairs_edit_verified(spark, root).count()
+            t_verify = time.perf_counter() - t0
+    return {
+        "shape": "verify_stage_skew",
+        "factor": s,
+        "docs": 5_000 * s,
+        "pairs": n_pairs,
+        "survivors": n_verified,
+        "builder_s": round(t_verify, 3),
+        "repart_us_per_pair": round(t_verify / max(n_pairs, 1) * 1e6, 3),
+    }
+
+
+def _print_rows(app_name: str, default_factors: list[int], row) -> int:
+    factors = [int(x) for x in sys.argv[2:]] or default_factors
+    spark = get_spark(app_name=app_name)
+    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
+    for s in factors:
+        print(json.dumps(row(spark, s)), flush=True)
+    return 0
 
 
 def main_dedup_skew() -> int:
-    """Stress the dedup path on the clustered-duplicate corpus. Three
-    measurements per factor, mirroring the registered queries' plans:
-
-    1. GROUP path (minhash_dedup_groups shape): full-signature groupBy —
-       the production dedup path; must stay linear (min-aggregable
-       partials, hot signature handled by map-side combine).
-    2. Candidate VOLUME by bucket-count math (SCALE.md "blocking
-       evaluated by counting"): sum m(m-1)/2 over (band, band_sig)
-       buckets — an aggregation, never enumeration. Reports how many
-       pairs naive enumeration WOULD emit (quadratic in cluster size)
-       without paying for them.
-    3. STAR-REDUCED edge build + one propagation join (the
-       dedup_connected_components plan): output sum m per bucket, so
-       hot buckets cost linear rows; partial-aggregable hub min/count
-       means the hot (band, band_sig) key never serializes a partition.
-
-    Usage: python tools/scaling_probe.py dedup-skew [factors...]
-    """
-    from braintumor_data_pipeline_spark.operators.dedup import (
-        BAND_ROWS,
-        LSH_BUCKET_CAP as _LSH_CAP,
-        MINHASH_A,
-        MINHASH_B,
-        MINHASH_K,
-    )
-
-    factors = [int(x) for x in sys.argv[2:]] or [1, 10, 50]
-    spark = get_spark(app_name="dedup-skew-probe")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
-
-    def sigs_df(s: int):
-        tok = _clustered_corpus(spark, s)
-        hs = F.array(
-            *[
-                (F.lit(MINHASH_A[i]) * F.col("h0") + F.lit(MINHASH_B[i]))
-                % F.lit(1 << 32)
-                for i in range(MINHASH_K)
-            ]
-        )
-        return (
-            tok.select("doc_id", hs.alias("hs"))
-            .groupBy("doc_id")
-            .agg(
-                *[
-                    F.min(F.col("hs")[i]).alias(f"m{i}")
-                    for i in range(MINHASH_K)
-                ]
-            )
-        )
-
-    n_bands = MINHASH_K // BAND_ROWS
-
-    def bands_of(sigs):
-        cols = []
-        for b in range(n_bands):
-            cols.append(
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"m{i}").cast("string")
-                                for i in range(
-                                    b * BAND_ROWS, (b + 1) * BAND_ROWS
-                                )
-                            ],
-                        )
-                    ).alias("band_sig"),
-                )
-            )
-        return sigs.select(
-            "doc_id", F.explode(F.array(*cols)).alias("bs")
-        ).select("doc_id", "bs.band", "bs.band_sig")
-
-    # untimed warmup of all three sub-plans
-    w = sigs_df(1).persist()
-    w.count()
-    bands_of(w).groupBy("band", "band_sig").count().count()
-    w.unpersist()
-
-    for s in factors:
-        sigs = sigs_df(s).persist()
-
-        # 1. group path
-        t0 = time.time()
-        sig_hash = F.md5(
-            F.concat_ws(
-                ",", *[F.col(f"m{i}").cast("string") for i in range(MINHASH_K)]
-            )
-        )
-        groups = (
-            sigs.select("doc_id", sig_hash.alias("sig"))
-            .groupBy("sig")
-            .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("n"))
-        )
-        n_groups = groups.count()
-        t_group = time.time() - t0
-
-        bands = bands_of(sigs).persist()
-        # 2. candidate volume by counting (one aggregation, no pairs)
-        t0 = time.time()
-        vol = (
-            bands.groupBy("band", "band_sig")
-            .agg(F.count("*").alias("m"))
-            .agg(
-                F.sum(F.col("m") * (F.col("m") - 1) / 2).alias("naive_pairs"),
-                F.max("m").alias("hot_bucket"),
-            )
-            .collect()[0]
-        )
-        t_count = time.time() - t0
-
-        # 3. star-reduced edges + one propagation join (the CC plan)
-        t0 = time.time()
-        hubs = bands.groupBy("band", "band_sig").agg(
-            F.min("doc_id").alias("hub"), F.count("*").alias("m")
-        )
-        star = (
-            bands.join(hubs.filter(F.col("m") > 1), ["band", "band_sig"])
-            .filter(F.col("doc_id") != F.col("hub"))
-            .select("hub", "doc_id")
-            .distinct()
-        )
-        n_edges = star.count()
-        t_star = time.time() - t0
-
-        # 4. band-frequency-capped pair enumeration (the
-        #    minhash_lsh_pairs_capped plan): oversized buckets dropped
-        #    by COUNT before any member list exists; surviving buckets
-        #    expand i<j combos in-array (bounded by the cap). Pairs must
-        #    stay ∝ N·CAP while naive_candidate_pairs blows up.
-        t0 = time.time()
-        small = (
-            bands.groupBy("band", "band_sig")
-            .agg(F.count("*").alias("bucket_n"))
-            .filter(
-                (F.col("bucket_n") >= 2)
-                & (F.col("bucket_n") <= _LSH_CAP)
-            )
-            .select("band", "band_sig")
-        )
-        capped = (
-            bands.join(small, ["band", "band_sig"])
-            .groupBy("band", "band_sig")
-            .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ids, (x, i) ->"
-                        " transform(slice(ids, i + 2, size(ids)),"
-                        " y -> struct(x AS doc_a, y AS doc_b))))"
-                    )
-                ).alias("p")
-            )
-            .select("p.doc_a", "p.doc_b")
-            .distinct()
-        )
-        n_capped = capped.count()
-        t_capped = time.time() - t0
-
-        bands.unpersist()
-        sigs.unpersist()
-        print(
-            json.dumps(
-                {
-                    "shape": "clustered_dup_dedup",
-                    "factor": s,
-                    "docs": 5_000 * s,
-                    "clustered_docs": (5_000 * s) // 4,
-                    "n_groups": n_groups,
-                    "group_path_s": round(t_group, 3),
-                    "naive_candidate_pairs": int(vol["naive_pairs"]),
-                    "hot_bucket_m": int(vol["hot_bucket"]),
-                    "count_math_s": round(t_count, 3),
-                    "star_edges": n_edges,
-                    "star_path_s": round(t_star, 3),
-                    "capped_pairs": n_capped,
-                    "capped_pairs_per_doc": round(n_capped / (5_000 * s), 2),
-                    "capped_path_s": round(t_capped, 3),
-                }
-            ),
-            flush=True,
-        )
-    return 0
-
+    """Usage: python tools/scaling_probe.py dedup-skew [factors...]"""
+    return _print_rows("dedup-skew-probe", [1, 10, 50], dedup_skew_row)
 
 
 def main_verify_skew() -> int:
-    """Time the dedup VERIFY stage itself — candidate pairs → bounded
-    levenshtein — on the clustered-duplicate corpus (VERDICT r5 task
-    8: the r5 sf0.1 sweep caught all clique pairs of one hot band key
-    landing in ONE levenshtein task; the fix repartitions the pair
-    relation on the uniform (doc_a, doc_b) key before the DP. This
-    probe validates that fix beyond sf0.1 by growing the clusters).
-
-    Corpus: 5k·s docs, 25% in 8 exact-dup-family clusters (size 156·s;
-    members share a ~134-char text differing only in a 6-char tail, so
-    every within-cluster pair passes the ≥0.8 gate and pays the real
-    bounded-DP cost). Candidate pairs come from a self-join ON THE
-    CLUSTER KEY — the band-join shape, so the pair relation leaves the
-    join partitioned by 8 hot keys, exactly the straggler layout.
-
-    Two timings per factor over the identical pair volume:
-    - hot_layout_s: verify directly on the join output (≤8 non-empty
-      partitions carry ALL pairs — the pre-fix serialization);
-    - repart_s: verify after .repartition(defaultParallelism,
-      doc_a, doc_b) (the registered lsh_pairs_edit_verified plan).
-    Pass criteria: repart_s / pairs stays ~flat as clusters grow
-    (stage linear in its input) and repart_s ≪ hot_layout_s at every
-    factor (the exchange buys even spread).
-
-    Usage: python tools/scaling_probe.py verify-skew [factors...]
-    """
-    factors = [int(x) for x in sys.argv[2:]] or [1, 2, 4]
-    spark = get_spark(app_name="verify-skew-probe")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()  # warmup
-    par = spark.sparkContext.defaultParallelism
-
-    def corpus(s: int):
-        docs = 5_000 * s
-        n_clustered = docs // 4
-        ckey = F.when(
-            F.col("id") < n_clustered, F.col("id") % 8
-        ).otherwise(F.col("id"))
-        # ~134 chars: 4×md5(cluster) body + 6-char per-doc tail
-        text = F.concat(
-            F.repeat(F.md5(ckey.cast("string")), 4),
-            F.substring(F.md5(F.col("id").cast("string")), 1, 6),
-        )
-        return spark.range(docs).select(
-            F.col("id").alias("doc_id"),
-            ckey.alias("ckey"),
-            text.alias("text"),
-        )
-
-    def verify_time(pairs_df, texts):
-        da = texts.select(
-            F.col("doc_id").alias("ida"), F.col("text").alias("ta")
-        )
-        db = texts.select(
-            F.col("doc_id").alias("idb"), F.col("text").alias("tb")
-        )
-        lev = F.expr(
-            "levenshtein(ta, tb, cast(floor(0.2 * greatest(length(ta),"
-            " length(tb), 1)) + 2 as int))"
-        )
-        mx = F.greatest(F.length("ta"), F.length("tb"), F.lit(1))
-        t0 = time.time()
-        n = (
-            pairs_df.join(F.broadcast(da), pairs_df.doc_a == F.col("ida"))
-            .join(F.broadcast(db), pairs_df.doc_b == F.col("idb"))
-            .select(lev.alias("lev"), mx.alias("mx"))
-            .filter(
-                (F.col("lev") >= 0)
-                & (F.lit(1.0) - F.col("lev") / F.col("mx") >= 0.8)
-            )
-            .count()
-        )
-        return n, time.time() - t0
-
-    for s in factors:
-        d = corpus(s).persist()
-        d.count()
-        texts = d.select("doc_id", "text")
-        clustered = d.filter(F.col("ckey") < 8).select("doc_id", "ckey")
-        a = clustered.select(F.col("doc_id").alias("doc_a"), "ckey")
-        b = clustered.select(
-            F.col("doc_id").alias("doc_b"), F.col("ckey").alias("ckey_b")
-        )
-        # band-join shape: shuffle both sides on the 8-value hot key
-        pairs = (
-            a.hint("shuffle_hash")
-            .join(
-                b,
-                (F.col("ckey") == F.col("ckey_b"))
-                & (F.col("doc_a") < F.col("doc_b")),
-            )
-            .select("doc_a", "doc_b")
-        ).persist()
-        n_pairs = pairs.count()
-
-        n_hot, t_hot = verify_time(pairs, texts)
-        n_rep, t_rep = verify_time(
-            pairs.repartition(par, "doc_a", "doc_b"), texts
-        )
-        assert n_hot == n_rep, (n_hot, n_rep)  # repartition is row-preserving
-        pairs.unpersist()
-        d.unpersist()
-        print(
-            json.dumps(
-                {
-                    "shape": "verify_stage_skew",
-                    "factor": s,
-                    "docs": 5_000 * s,
-                    "cluster_m": 156 * s + (1 if s > 1 else 1),
-                    "pairs": n_pairs,
-                    "survivors": n_rep,
-                    "hot_layout_s": round(t_hot, 3),
-                    "repart_s": round(t_rep, 3),
-                    "repart_us_per_pair": round(t_rep / max(n_pairs, 1) * 1e6, 3),
-                }
-            ),
-            flush=True,
-        )
-    return 0
+    """Usage: python tools/scaling_probe.py verify-skew [factors...]"""
+    return _print_rows("verify-skew-probe", [1, 2, 4], verify_skew_row)
 
 
 def main_blocked_rank() -> int:
@@ -440,20 +229,20 @@ def main_blocked_rank() -> int:
             users = frame(base_users * n, dist).persist()
             users.count()
 
-            t0 = time.time()
+            t0 = time.perf_counter()
             w = Window.orderBy("cents", "user_id")
             naive = users.select(
                 "user_id", F.row_number().over(w).alias("rank")
             )
             naive.select(F.max("rank")).collect()
-            t_naive = time.time() - t0
+            t_naive = time.perf_counter() - t0
 
-            t0 = time.time()
+            t0 = time.perf_counter()
             blocked = blocked_rank(users, "cents", "user_id").select(
                 "user_id", F.col("_rank").alias("rank")
             )
             blocked.select(F.max("rank")).collect()
-            t_blocked = time.time() - t0
+            t_blocked = time.perf_counter() - t0
 
             if not checked:  # identity proof once, at the cheapest factor
                 diff = (
@@ -541,7 +330,7 @@ def main_graph_cc() -> int:
         li = copies[0]
         for c in copies[1:]:
             li = li.unionAll(c)
-        t0 = time.time()
+        t0 = time.perf_counter()
         a, b = li.alias("a"), li.alias("b")
         pairs = (
             a.join(
@@ -559,9 +348,9 @@ def main_graph_cc() -> int:
         )
         edges = _sym(pairs).localCheckpoint()
         n_edges = edges.count()
-        t_edges = time.time() - t0
+        t_edges = time.perf_counter() - t0
 
-        t0 = time.time()
+        t0 = time.perf_counter()
         labels = (
             edges.select(F.col("src").alias("node"))
             .distinct()
@@ -594,7 +383,7 @@ def main_graph_cc() -> int:
             if not changed:
                 break
         n_comp = labels.select("label").distinct().count()
-        t_cc = time.time() - t0
+        t_cc = time.perf_counter() - t0
         print(
             json.dumps(
                 {
@@ -673,10 +462,10 @@ def main_semdedup() -> int:
         q = corpus(n_vec, 96 * s).persist()
         q.count()
 
-        t0 = time.time()
+        t0 = time.perf_counter()
         capped = _semdedup_capped(q).persist()
         capped.count()
-        t_route = time.time() - t0
+        t_route = time.perf_counter() - t0
 
         # candidate-pair volume by bucket-count math (never enumerated
         # twice): sum m(m-1)/2 over (cluster, subcluster)
@@ -692,10 +481,10 @@ def main_semdedup() -> int:
         )
         assert int(vol["hot"]) <= SEMDEDUP_CAP
 
-        t0 = time.time()
+        t0 = time.perf_counter()
         report = _semdedup_report_from(capped, q)
         n_dup = report.agg(F.sum("n_dup_pairs")).collect()[0][0]
-        t_pair = time.time() - t0
+        t_pair = time.perf_counter() - t0
         capped.unpersist()
         q.unpersist()
 
@@ -824,9 +613,9 @@ def main_kcenter() -> int:
             )
             .persist()
         )
-        t0 = time.time()
+        t0 = time.perf_counter()
         sel, walls = _kcenter_loop(q, t_steps)
-        total = time.time() - t0
+        total = time.perf_counter() - t0
         print(
             json.dumps(
                 {

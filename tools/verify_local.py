@@ -153,7 +153,7 @@ def main() -> int:
             n_skip += 1
             print(f"skip  {name}: {SKIP_SF01[name]}")
             continue
-        t0 = time.time()
+        t0 = time.perf_counter()
         # per-query watchdog (--budget=N): a daemon timer cancels the
         # running Spark jobs / interrupts the DuckDB query once the
         # budget elapses, so one degenerate-fixture oracle can't stall
@@ -210,7 +210,7 @@ def main() -> int:
             )
             print(
                 f"rows  {name}: {len(srows)} rows ({why}) "
-                f"[{time.time()-t0:.1f}s]"
+                f"[{time.perf_counter()-t0:.1f}s]"
             )
             continue
         try:
@@ -243,7 +243,7 @@ def main() -> int:
                     break
         if ok:
             n_pass += 1
-            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS  {name}: {len(srows)} rows [{time.perf_counter()-t0:.1f}s]")
         else:
             n_fail += 1
             failures.append(name)
