@@ -13,7 +13,7 @@ Catalyst/Tungsten and set the knobs that matter at 100 TB:
   (DuckDB reads parquet timestamps as naive UTC).
 - ``shuffle.partitions`` defaults to the local core count; on a real
   cluster AQE's coalescing makes the initial number mostly irrelevant,
-  but we keep it overridable via ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
+  and callers that need another count pass ``shuffle_partitions``.
 - **Python workers fork from the engine's daemon**
   (``spark.python.daemon.module`` = ``_daemon``). Every PySpark task calls
   ``importlib.invalidate_caches()``, and under CPython 3.11/3.12 that
@@ -83,8 +83,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-        shuffle_partitions = int(env) if env else os.cpu_count() or 8
+        shuffle_partitions = os.cpu_count() or 8
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)

@@ -20,12 +20,16 @@ Runs, in order, and fails fast on the first red:
                           3-session certificate — 5-part / 32-part /
                           AQE-off — over the exact window the driver
                           is about to hash; VERDICT r11 task 7)
-  6. physical-plan audit  tools/plan_audit.py  (full catalog, sf0.001)
-  7. scale-probe bands    tools/scaling_probe.py quick (six probes,
+  6. plan-audit rules     tests/test_plan_audit.py (one small plan per
+                          audit rule — a broken rule fails in seconds,
+                          before the full-catalog audit)
+  7. physical-plan audit  tools/plan_audit.py  (full catalog, sf0.001;
+                          also red on an exemption that matched nothing)
+  8. scale-probe bands    tools/scaling_probe.py quick (six probes,
                           x1/x4 ratios; kcenter x1 step walls; the
                           dedup probes time the registered builders;
                           568 s on 4 vCPU)
-  8. correctness gate     tools/verify_local.py /root/testdata/sf0.01
+  9. correctness gate     tools/verify_local.py (full catalog, sf0.01)
 
 The FULL pytest suite is intentionally not included (it is its own CI
 surface and takes ~20 min); run it separately. Usage:
@@ -41,6 +45,12 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+
+def _pytest(*args: str) -> list[str]:
+    quiet = ["-q", "--no-header", "-p", "no:cacheprovider"]
+    return [sys.executable, "-m", "pytest", *args, *quiet]
+
+
 STEPS = [
     ("doc-count drift", [sys.executable, "tools/gen_catalog.py", "--check"]),
     ("window ledger", [sys.executable, "tools/gen_window_ledger.py", "--check"]),
@@ -50,32 +60,13 @@ STEPS = [
     # later
     (
         "window invariants",
-        [
-            sys.executable,
-            "-m",
-            "pytest",
+        _pytest(
             "tests/test_queries_smoke.py",
             "-k",
             "driver_window or rolling_coverage or src_sha",
-            "-q",
-            "--no-header",
-            "-p",
-            "no:cacheprovider",
-        ],
+        ),
     ),
-    (
-        "streaming parity",
-        [
-            sys.executable,
-            "-m",
-            "pytest",
-            "tests/test_streaming.py",
-            "-q",
-            "--no-header",
-            "-p",
-            "no:cacheprovider",
-        ],
-    ),
+    ("streaming parity", _pytest("tests/test_streaming.py")),
     # window-scope 3-session determinism certificate (VERDICT r11
     # task 7): the exact window surface the driver will hash, under
     # 5/32 shuffle partitions and an AQE-off pass, in separate
@@ -85,6 +76,8 @@ STEPS = [
         "window determinism",
         [sys.executable, "tools/determinism_sweep.py", "/root/testdata/sf0.001"],
     ),
+    # one small plan per audit rule: a broken rule fails in seconds
+    ("plan-audit rules", _pytest("tests/test_plan_audit.py")),
     ("plan audit", [sys.executable, "tools/plan_audit.py", "/root/testdata/sf0.001"]),
     # quick scale-probe pass (VERDICT r6 task 6): x1/x4 factors of the
     # six probes (kcenter at x1: its band is the step-wall ratio within
